@@ -436,7 +436,7 @@ def main() -> None:
         "O(#partitions) not O(rows), a few MB shuffled per 8M-row run "
         "— adds no serial bottleneck that efficiency could expose.",
         "",
-        "## Tuning that mattered (measured, tools/scale_probe*.py)",
+        "## Tuning that mattered (measured, round 1, 32-core host)",
         "",
         "- **Pinned pre-touched heap** (`-Xms=-Xmx`, `-XX:+AlwaysPreTouch`): "
         "without it, 32-thread array scans spent ~35% CPU in kernel "

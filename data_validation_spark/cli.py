@@ -61,8 +61,6 @@ def main(argv: list[str] | None = None) -> int:
                    metavar="NAME=PATH",
                    help="referential dimension: name=parquet_path")
     v.add_argument("--no-resume", action="store_true")
-    v.add_argument("--method", default="catalyst",
-                   choices=["catalyst", "kernel"])
     v.add_argument("--reference-profile",
                    help="frozen profile JSON for drift constraints")
     v.add_argument("--ge-suite",
@@ -77,8 +75,6 @@ def main(argv: list[str] | None = None) -> int:
     b.add_argument("--input", required=True)
     b.add_argument("--out", required=True, help="profile JSON output path")
     b.add_argument("--suite", help="suite JSON (components definition)")
-    b.add_argument("--method", default="catalyst",
-                   choices=["catalyst", "kernel"])
 
     s = sub.add_parser(
         "suggest-suite",
@@ -216,7 +212,7 @@ def main(argv: list[str] | None = None) -> int:
         from data_validation_spark.operators.profile import build_profile
         df = spark.read.parquet(args.input)
         prof = build_profile(df, suite.components, suite.partition_cols,
-                             method=args.method, name=suite.name)
+                             name=suite.name)
         prof.save(args.out)
         print(json.dumps({"saved": args.out,
                           "components": sorted(prof.components)}))
@@ -240,7 +236,7 @@ def main(argv: list[str] | None = None) -> int:
             if args.sink else None)
 
     res = run_validation(spark, df, suite, sink=sink, dims=dims or None,
-                         resume=not args.no_resume, method=args.method)
+                         resume=not args.no_resume)
     if args.report:
         from data_validation_spark.plans.report import save_report
         save_report(args.report, res.profile, res.verdicts, res.drift,

@@ -114,15 +114,6 @@ def _row_violation_cond(c: Constraint) -> Column:
     raise ValueError(f"not a row-level constraint: {c.kind}")
 
 
-def row_violation_count_exprs(constraints: list[Constraint]) -> list[Column]:
-    """Aggregate columns counting each row-level constraint's violations
-    — designed to ride the SAME ``groupBy(partition_cols)`` as the stats
-    pass (operators/profile.py), so verdict counts cost zero extra scans
-    (one tokens decode instead of two per run)."""
-    return [F.sum(F.when(_row_violation_cond(c), 1).otherwise(0))
-            .alias(f"__viol__{c.name}") for c in constraints]
-
-
 def uniqueness_violation_counts(df: DataFrame, keys: list[str],
                                 partition_cols: list[str]) -> dict[str, int]:
     """Per-partition count of rows whose key is duplicated — the

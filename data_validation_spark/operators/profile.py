@@ -1,19 +1,10 @@
 """build_profile — the single vectorized stats pass (rdv Schema.build, E1).
 
-Two interchangeable implementations behind one interface (SURVEY.md §2.2
-design decision):
-
-* ``method="catalyst"`` — pure Catalyst aggregates (S1-S7): one
-  ``groupBy(partition_cols).agg(...)`` computes every numeric/tokens
-  component's partials map-side; categoric frequencies are one stacked
-  low-cardinality ``groupBy``.  This is the oracle-checkable path.
-* ``method="kernel"`` — the spec-mandated single per-partition vectorized
-  pass (BASELINE.json:6): ``applyInPandas`` over the partition groups,
-  one Arrow/numpy kernel emitting one stats row per (partition,
-  component).  No per-row Python.
-
-Both paths emit the same normalized record shape and share the same
-driver-side merge (functions/stats.py), so tests can assert agreement.
+Pure Catalyst aggregates (S1-S7): one ``groupBy(partition_cols).agg(...)``
+computes every numeric/tokens component's partials map-side, so no row
+crosses into Python; categoric frequencies are one stacked
+low-cardinality ``groupBy``.  Per-partition records merge on the driver
+(functions/stats.py).
 
 Scale notes (100 TB): the shuffle key is the table's physical partition
 key ``(source, bucket)``, so reduce cardinality = #partitions, not
@@ -26,22 +17,18 @@ components are scanned (parquet column pruning) — profiles that skip
 
 from __future__ import annotations
 
-import json
 from collections.abc import Iterable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_validation_spark.functions.stats import (
     DEFAULT_ACCURACY,
     categoric_agg_exprs,
-    exact_quantiles,
     exact_quantiles_from_counts,
     merge_numeric_partials,
     numeric_agg_exprs,
-    pooled_mean_std,
     tokens_agg_exprs,
 )
 from data_validation_spark.plans.suite import (
@@ -83,7 +70,7 @@ def _project(df: DataFrame, components: list[Component],
 
 
 # ---------------------------------------------------------------------------
-# catalyst path
+# per-partition aggregation
 # ---------------------------------------------------------------------------
 
 import re
@@ -409,98 +396,7 @@ def _catalyst_records(df: DataFrame, components: list[Component],
 
 
 # ---------------------------------------------------------------------------
-# kernel path (U2): one applyInPandas pass per physical partition
-# ---------------------------------------------------------------------------
-
-_KERNEL_SCHEMA = ("partition string, component string, ctype string, "
-                  "n long, n_invalid long, min double, max double, "
-                  "mean double, std double, quantiles array<double>, "
-                  "elem_min long, elem_max long, freq_json string")
-
-
-def _make_kernel(components: list[Component], partition_cols: list[str]):
-    comp_spec = [(c.name, c.ctype) for c in components]
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        part = partition_label(
-            partition_cols, [pdf[c].iloc[0] for c in partition_cols]) \
-            if len(pdf) else "<global>"
-        out = []
-        for name, ctype in comp_spec:
-            col = pdf[_ccol(name)]
-            n = len(col)
-            base = {"partition": part, "component": name, "ctype": ctype,
-                    "n": n, "min": None, "max": None, "mean": None,
-                    "std": None, "quantiles": None, "elem_min": None,
-                    "elem_max": None, "freq_json": None}
-            if ctype == "categoric":
-                base["n_invalid"] = int(col.isna().sum())
-                freq = col.dropna().astype(str).value_counts()
-                if len(freq) > CATEGORIC_EXACT_MAX:
-                    # bound the Arrow batch returned per partition: keep
-                    # top-k (count desc, value asc — matches the catalyst
-                    # path's determinism) and fold the rest into OTHER_KEY
-                    fd = {k: int(v) for k, v in freq.items()}
-                    top = sorted(fd.items(), key=lambda kv: (-kv[1], kv[0])
-                                 )[:CATEGORIC_TOP_K]
-                    other = sum(fd.values()) - sum(v for _, v in top)
-                    fd = dict(top)
-                    if other > 0:
-                        fd[OTHER_KEY] = other
-                else:
-                    fd = {k: int(v) for k, v in freq.items()}
-                base["freq_json"] = json.dumps(fd, sort_keys=True)
-            else:
-                if ctype == "tokens":
-                    isnull = col.isna()
-                    base["n_invalid"] = int(isnull.sum())
-                    arrs = col[~isnull]
-                    vals = arrs.map(len).to_numpy(dtype=float) \
-                        if len(arrs) else np.array([])
-                    if len(arrs):
-                        flat_mins = arrs.map(
-                            lambda a: np.min(a) if len(a) else None).dropna()
-                        flat_maxs = arrs.map(
-                            lambda a: np.max(a) if len(a) else None).dropna()
-                        if len(flat_mins):
-                            base["elem_min"] = int(flat_mins.min())
-                            base["elem_max"] = int(flat_maxs.max())
-                else:
-                    vals = pd.to_numeric(col, errors="coerce").to_numpy(
-                        dtype=float)
-                    base["n_invalid"] = int(np.isnan(vals).sum())
-                    vals = vals[~np.isnan(vals)]
-                if vals.size:
-                    base["min"] = float(np.min(vals))
-                    base["max"] = float(np.max(vals))
-                    base["mean"] = float(np.mean(vals))
-                    base["std"] = (float(np.std(vals, ddof=1))
-                                   if vals.size > 1 else None)
-                    base["quantiles"] = exact_quantiles(vals)
-            out.append(base)
-        return pd.DataFrame(out)
-
-    return kernel
-
-
-def _kernel_records(df: DataFrame, components: list[Component],
-                    partition_cols: list[str]) -> list[dict]:
-    kernel = _make_kernel(components, partition_cols)
-    grouped = (df.groupBy(*partition_cols) if partition_cols
-               else df.groupBy(F.lit(1).alias("__g")))
-    rows = grouped.applyInPandas(kernel, schema=_KERNEL_SCHEMA).collect()
-    records = []
-    for r in rows:
-        d = r.asDict()
-        d["freq"] = json.loads(d.pop("freq_json")) if d["freq_json"] else None
-        if d["freq"] is None:
-            d.pop("freq_json", None)
-        records.append(d)
-    return records
-
-
-# ---------------------------------------------------------------------------
-# shared assembly + merge
+# record assembly + merge
 # ---------------------------------------------------------------------------
 
 def _stats_from_record(rec: dict):
@@ -648,7 +544,6 @@ def merge_profiles(profiles: list[Profile], name: str = "merged") -> Profile:
 def build_profile(df: DataFrame, components: list[Component],
                   partition_cols: list[str] | None = None,
                   accuracy: int = DEFAULT_ACCURACY,
-                  method: str = "catalyst",
                   name: str = "profile",
                   quantile_strategy: str = "auto") -> Profile:
     """Compute a built Profile (global + per-partition) in one stats pass.
@@ -660,8 +555,8 @@ def build_profile(df: DataFrame, components: list[Component],
     per-value histogram would not be small).
     """
     profile, _ = build_profile_and_counts(
-        df, components, partition_cols, accuracy=accuracy, method=method,
-        name=name, quantile_strategy=quantile_strategy)
+        df, components, partition_cols, accuracy=accuracy, name=name,
+        quantile_strategy=quantile_strategy)
     return profile
 
 
@@ -669,7 +564,6 @@ def build_profile_and_counts(df: DataFrame, components: list[Component],
                              partition_cols: list[str] | None = None,
                              row_conds: dict[str, F.Column] | None = None,
                              accuracy: int = DEFAULT_ACCURACY,
-                             method: str = "catalyst",
                              name: str = "profile",
                              quantile_strategy: str = "auto"
                              ) -> tuple[Profile, dict[str, dict[str, int]]]:
@@ -680,24 +574,14 @@ def build_profile_and_counts(df: DataFrame, components: list[Component],
     predicate).  Returns (profile, counts[partition][constraint]).
     Sharing the scan halves the number of tokens-column decodes per
     validation run (the dominant cost — see BENCH/BASELINE.md).
-    Counts require the catalyst method; the kernel path computes stats
-    only (runner falls back to a separate counting pass there).
     """
     partition_cols = partition_cols or []
     row_conds = row_conds or {}
     projected = _project(df, components, partition_cols, row_conds)
-    extras: dict[str, dict[str, int]] = {}
-    if method == "catalyst":
-        records, extras = _catalyst_records(
-            projected, components, partition_cols, accuracy,
-            quantile_strategy, extra_names=list(row_conds),
-            sketch_forced=_array_referencing(components, df))
-    elif method == "kernel":
-        if row_conds:
-            raise ValueError("row_conds requires method='catalyst'")
-        records = _kernel_records(projected, components, partition_cols)
-    else:
-        raise ValueError(f"unknown method {method!r}")
+    records, extras = _catalyst_records(
+        projected, components, partition_cols, accuracy,
+        quantile_strategy, extra_names=list(row_conds),
+        sketch_forced=_array_referencing(components, df))
 
     profile = Profile(name=name)
     by_comp: dict[str, list[dict]] = {}

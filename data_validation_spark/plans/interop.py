@@ -51,6 +51,7 @@ widen by an explicit epsilon instead).  Pair expectations honor GE's
 from __future__ import annotations
 
 import json
+import math
 from typing import Any
 
 from data_validation_spark.plans.suite import (
@@ -104,6 +105,10 @@ def _sql_lit(v: Any) -> str:
     if isinstance(v, bool):
         return "TRUE" if v else "FALSE"
     if isinstance(v, (int, float)):
+        if not math.isfinite(v):
+            raise ValueError(
+                f"GE bound {v!r} is not finite — Spark SQL has no "
+                "literal for it; drop the bound (None) for an open side")
         return repr(v)
     return "'" + str(v).replace("'", "''") + "'"
 

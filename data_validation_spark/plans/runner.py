@@ -37,14 +37,12 @@ from data_validation_spark.operators.constraints import (
     referential_violation_counts,
     referential_violations,
     row_level_violations,
-    row_violation_count_exprs,
     stat_value_from_profile,
     uniqueness_violation_counts,
     uniqueness_violations,
 )
 from data_validation_spark.operators.contrast import DriftReport, contrast
 from data_validation_spark.operators.profile import (
-    build_profile,
     build_profile_and_counts,
     single_job_limit_collect,
 )
@@ -126,7 +124,6 @@ def run_validation(spark: SparkSession, df: DataFrame, suite: ValidationSuite,
                    dims: dict[str, DataFrame] | None = None,
                    run_id: str | None = None,
                    resume: bool = True,
-                   method: str = "catalyst",
                    lineage: dict | None = None,
                    concurrent_jobs: int = 4) -> RunResult:
     """Validate ``df`` against ``suite``; optionally write metrics /
@@ -200,31 +197,30 @@ def run_validation(spark: SparkSession, df: DataFrame, suite: ValidationSuite,
     # anti-join counting path below
     _REF_INLINE_MAX = 10_000
     inline_ref: set[str] = set()
-    if method == "catalyst":
-        for c in suite.constraints:
-            if c.kind != "referential":
-                continue
-            p = c.params
-            dim_col = p.get("dim_column") or p["column"]
-            # NULLs in the dim are dropped BEFORE isin: a None inside the
-            # IN-list makes the predicate NULL (never true) for every
-            # non-matching row under SQL three-valued logic, silently
-            # zeroing the violation count.  A NULL dim key also can't
-            # legitimise a NULL fact value — the anti-join path agrees.
-            vals = (list(p["values"]) if "values" in p else
-                    [r[0] for r in single_job_limit_collect(
-                        _resolve_dim(spark, p, dims)
-                        .select(dim_col).where(F.col(dim_col).isNotNull())
-                        .distinct(), _REF_INLINE_MAX + 1)])
-            vals = [v for v in vals if v is not None]
-            if len(vals) <= _REF_INLINE_MAX:
-                col = F.col(p["column"])
-                cond = col.isNull() | ~col.isin(vals)
-                scope = _scope_cond(c)
-                if scope is not None:
-                    cond = scope & cond
-                row_conds[c.name] = cond
-                inline_ref.add(c.name)
+    for c in suite.constraints:
+        if c.kind != "referential":
+            continue
+        p = c.params
+        dim_col = p.get("dim_column") or p["column"]
+        # NULLs in the dim are dropped BEFORE isin: a None inside the
+        # IN-list makes the predicate NULL (never true) for every
+        # non-matching row under SQL three-valued logic, silently
+        # zeroing the violation count.  A NULL dim key also can't
+        # legitimise a NULL fact value — the anti-join path agrees.
+        vals = (list(p["values"]) if "values" in p else
+                [r[0] for r in single_job_limit_collect(
+                    _resolve_dim(spark, p, dims)
+                    .select(dim_col).where(F.col(dim_col).isNotNull())
+                    .distinct(), _REF_INLINE_MAX + 1)])
+        vals = [v for v in vals if v is not None]
+        if len(vals) <= _REF_INLINE_MAX:
+            col = F.col(p["column"])
+            cond = col.isNull() | ~col.isin(vals)
+            scope = _scope_cond(c)
+            if scope is not None:
+                cond = scope & cond
+            row_conds[c.name] = cond
+            inline_ref.add(c.name)
 
     # The fused stats pass and every set-level count below are
     # INDEPENDENT Spark actions — assembled as thunks and submitted
@@ -235,23 +231,9 @@ def run_validation(spark: SparkSession, df: DataFrame, suite: ValidationSuite,
     # shorter scans behind the fused pass locally; `concurrent_jobs=1`
     # restores strictly serial execution.
     def _fused():
-        if method == "catalyst":
-            return build_profile_and_counts(
-                df, suite.components, pcols, row_conds=row_conds,
-                method=method, name=suite.name)
-        # kernel path computes stats only; count pass is separate
-        profile = build_profile(df, suite.components, pcols, method=method,
-                                name=suite.name)
-        counts_by_part = {}
-        if row_cs:
-            grouped = (df.groupBy(partition_label_col(pcols)
-                                  .alias("partition"))
-                       .agg(*row_violation_count_exprs(row_cs)))
-            for r in grouped.collect():
-                d = r.asDict()
-                counts_by_part[d["partition"]] = {
-                    c.name: d[f"__viol__{c.name}"] for c in row_cs}
-        return profile, counts_by_part
+        return build_profile_and_counts(
+            df, suite.components, pcols, row_conds=row_conds,
+            name=suite.name)
 
     actions: dict[str, object] = {"__fused__": _fused}
 
@@ -499,7 +481,6 @@ def validate_incremental(spark: SparkSession, df: DataFrame,
                          sink: TableProvider | None = None,
                          dims: dict[str, DataFrame] | None = None,
                          run_id: str | None = None,
-                         method: str = "catalyst",
                          lineage: dict | None = None) -> IncrementalResult:
     """Daily-revalidation shape for a 100 TB table: revalidate ONLY the
     partitions whose CONTENT changed since the last run, detected by
@@ -541,7 +522,7 @@ def validate_incremental(spark: SparkSession, df: DataFrame,
                                  checksums=cur)
     sub = df.filter(partition_label_col(pcols).isin(changed))
     res = run_validation(spark, sub, suite, sink=sink, dims=dims,
-                         run_id=run_id, resume=False, method=method,
+                         run_id=run_id, resume=False,
                          lineage={**(lineage or {}),
                                   "incremental": True,
                                   "n_changed_partitions": len(changed)})

@@ -14,19 +14,75 @@ import re
 
 from pyspark.sql import SparkSession
 
-#: local mode is one JVM: size its heap for 32 concurrent task threads
-#: scanning wide token arrays (sandbox has 128 GiB; on a cluster,
-#: executor memory comes from spark-submit instead)
-_DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
+#: floor and cap (MB) on the host-derived local-mode heap
+_HEAP_FLOOR_MB, _HEAP_CAP_MB = 1024, 24 * 1024
+_UNITS_MB = {"k": 1 / 1024, "m": 1, "g": 1024, "t": 1024 * 1024}
+
+
+def _meminfo_mb() -> dict[str, int]:
+    """MemTotal / MemAvailable of this host in MB ({} off Linux)."""
+    out: dict[str, int] = {}
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                key, _, rest = line.partition(":")
+                if key in ("MemTotal", "MemAvailable"):
+                    out[key] = int(rest.split()[0]) // 1024
+    except OSError:
+        pass
+    return out
+
+
+def _default_driver_mem() -> str:
+    """Local mode is one JVM whose heap is pinned and pre-touched below,
+    so it must fit in the RAM the host has free: a third of
+    MemAvailable (the rest is left to Python workers, the page cache
+    and the shuffle files), at least the floor, at most the cap."""
+    avail = _meminfo_mb().get("MemAvailable")
+    if avail is None:
+        return "4g"
+    return f"{max(_HEAP_FLOOR_MB, min(_HEAP_CAP_MB, avail // 3))}m"
+
+
+#: SPARK_GRAFT_DRIVER_MEM overrides the host-derived size (on a
+#: cluster, executor memory comes from spark-submit instead)
+_DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem()
+
+
+def _heap_mb(size: str) -> float:
+    """JVM memory-size string (``6g``, ``4096m``, bytes) in MB."""
+    m = re.fullmatch(r"(\d+)([kmgt]?)b?", size.strip().lower())
+    if not m:
+        raise ValueError(f"unparseable JVM memory size {size!r}")
+    n, unit = int(m.group(1)), m.group(2)
+    return n * _UNITS_MB[unit] if unit else n / (1024 * 1024)
+
+
+def _heap_error(heap: str, why: str) -> RuntimeError:
+    mem = _meminfo_mb()
+    return RuntimeError(
+        f"{why}: driver heap {heap} (pinned with -Xms and pre-touched), "
+        f"host MemTotal={mem.get('MemTotal', '?')} MB, MemAvailable="
+        f"{mem.get('MemAvailable', '?')} MB; set SPARK_GRAFT_DRIVER_MEM "
+        f"to a smaller size")
+
+
+def _check_heap(heap: str) -> None:
+    """Fail before launching a JVM whose pre-touched heap cannot fit in
+    the host's free RAM (it would die at startup or start swapping)."""
+    avail = _meminfo_mb().get("MemAvailable")
+    if avail is not None and _heap_mb(heap) > avail:
+        raise _heap_error(heap, "cannot reserve the heap")
+
 
 ENGINE_DEFAULTS = {
     "spark.driver.memory": _DRIVER_MEM,
-    # measured (tools/scale_probe*.py): WITHOUT a pinned pre-touched
-    # heap, array<int32>-heavy scans at 32 threads spend ~35% of CPU in
-    # the kernel zeroing freshly-faulted heap pages (lazy -Xms growth ×
-    # 4× allocation rate) — queries randomly degrade 10-30×.  Pinning
-    # -Xms to -Xmx with AlwaysPreTouch pre-zeroes the heap once at
-    # startup and makes 32-thread runs stable and faster than 8-thread
+    # measured (BENCH/BASELINE.md, "Tuning that mattered"): WITHOUT a
+    # pinned pre-touched heap, array<int32>-heavy scans at 32 threads
+    # spend ~35% of CPU in the kernel zeroing freshly-faulted heap pages
+    # (lazy -Xms growth × 4× allocation rate) — queries randomly
+    # degrade 10-30×.  Pinning -Xms to -Xmx with AlwaysPreTouch
+    # pre-zeroes the heap once at startup and makes 32-thread runs stable and faster than 8-thread
     # runs.  GC choice and the nested vectorized reader were innocent
     # (confounded in early probes).
     "spark.driver.extraJavaOptions":
@@ -92,6 +148,18 @@ def get_spark(app_name: str = "data-validation-spark",
         conf.update(extra_conf)
     for k, v in conf.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    from pyspark import SparkContext
+    # the heap is reserved only when this call starts the local JVM
+    launching = SparkContext._gateway is None and master.startswith("local")
+    heap = conf["spark.driver.memory"]
+    if launching:
+        _check_heap(heap)
+    try:
+        spark = builder.getOrCreate()
+    except Exception as e:
+        if launching and "JAVA_GATEWAY_EXITED" in str(e):
+            raise _heap_error(heap, "the driver JVM exited at start-up") \
+                from e
+        raise
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -10,8 +10,8 @@ N_ROWS = 2000
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="dvs-tests", master="local[8]",
-                  shuffle_partitions=8)
+    # master=None: local[$SPARK_GRAFT_CPUS], else every host core
+    s = get_spark(app_name="dvs-tests", shuffle_partitions=8)
     yield s
 
 

@@ -1,13 +1,14 @@
-"""The committed spark-submit --py-files artifact must match HEAD —
-a stale zip silently ships an old engine to the cluster."""
+"""The spark-submit --py-files zip built by tools/make_pyfiles_zip.py
+must hold exactly the package tree, byte for byte — a zip missing a
+module or carrying a stale one silently ships a different engine to the
+cluster."""
 
 import os
+import subprocess
+import sys
 import zipfile
 
-import pytest
-
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-ZIP = os.path.join(REPO, "dist", "data_validation_spark.zip")
 
 
 def _source_files():
@@ -23,17 +24,17 @@ def _source_files():
                     out[os.path.relpath(full, REPO)] = fh.read()
     return out
 
-def test_dist_zip_matches_source_tree():
-    if not os.path.exists(ZIP):
-        pytest.skip("no dist zip committed (built at deploy time)")
+
+def test_dist_zip_matches_source_tree(tmp_path):
+    out = tmp_path / "data_validation_spark.zip"
+    subprocess.run([sys.executable, os.path.join(REPO, "tools",
+                                                 "make_pyfiles_zip.py"),
+                    str(out)], check=True, capture_output=True)
     src = _source_files()
-    with zipfile.ZipFile(ZIP) as z:
+    with zipfile.ZipFile(out) as z:
         names = set(z.namelist())
         assert names == set(src), (
             f"zip file-set drifted: only-in-zip={sorted(names - set(src))} "
-            f"only-in-src={sorted(set(src) - names)} — "
-            f"rebuild with tools/make_pyfiles_zip.py")
+            f"only-in-src={sorted(set(src) - names)}")
         for name, body in src.items():
-            assert z.read(name) == body, (
-                f"{name} inside dist/data_validation_spark.zip differs from "
-                f"HEAD — rebuild with tools/make_pyfiles_zip.py")
+            assert z.read(name) == body, f"{name} inside the zip differs"

@@ -116,6 +116,18 @@ def test_ge_strict_bounds_map_exclusively(spark):
                         "strict_min": True}}]})
 
 
+@pytest.mark.parametrize("bound", [float("inf"), float("-inf"),
+                                   float("nan")])
+def test_ge_nonfinite_strict_bound_fails_loud(bound):
+    """A non-finite bound would render as a bare ``inf``/``nan`` that
+    Spark SQL cannot parse; the importer must reject it up front."""
+    with pytest.raises(ValueError, match="not finite"):
+        from_great_expectations({"expectations": [
+            {"expectation_type": "expect_column_values_to_be_between",
+             "kwargs": {"column": "val", "min_value": bound,
+                        "strict_min": True}}]})
+
+
 def test_ge_unknown_kwarg_and_nonrow_mostly_fail_loud(spark):
     with pytest.raises(ValueError, match="unsupported kwargs"):
         from_great_expectations({"expectations": [

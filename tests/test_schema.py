@@ -30,23 +30,32 @@ def profile(sequences, components):
     return build_profile(sequences, components, PCOLS)
 
 
-def _expected_numeric(sequences):
-    rows = sequences.select("n_tok").collect()
-    return np.array([r["n_tok"] for r in rows], dtype=float)
+def _expected_numeric(sequences, name):
+    """(values, n, pinv) computed in numpy: ``n_tok`` itself, or the
+    lengths of the non-null ``tokens`` arrays (NULL arrays are invalid)."""
+    if name == "n_tok":
+        vals = np.array([r["n_tok"] for r in sequences.select("n_tok")
+                         .collect()], dtype=float)
+        return vals, len(vals), 0.0
+    arrs = [r["tokens"] for r in sequences.select("tokens").collect()]
+    vals = np.array([len(a) for a in arrs if a is not None], dtype=float)
+    return vals, len(arrs), (len(arrs) - len(vals)) / len(arrs)
 
 
-def test_numeric_stats_exact(profile, sequences):
-    vals = _expected_numeric(sequences)
-    st = profile.components["n_tok"].stats
+@pytest.mark.parametrize("name", ["n_tok", "tokens"])
+def test_numeric_stats_exact(profile, sequences, name):
+    vals, n, pinv = _expected_numeric(sequences, name)
+    st = profile.components[name].stats
     assert isinstance(st, NumericStats)
-    assert st.n == len(vals)
+    assert st.n == n
     assert st.min == vals.min()
     assert st.max == vals.max()
     assert st.mean == pytest.approx(vals.mean(), rel=1e-9)
     assert st.std == pytest.approx(vals.std(ddof=1), rel=1e-9)
-    assert st.pinv == 0.0
-    # merged mixture-ECDF quantiles track exact percentiles closely —
-    # assert in rank space (the sketch's accuracy contract): the true
+    assert st.pinv == pytest.approx(pinv, abs=1e-12)
+    # merged quantiles (exact histogram for n_tok, mixture-ECDF of the
+    # per-partition sketches for tokens) track exact percentiles closely
+    # — assert in rank space (the sketch's accuracy contract): the true
     # ECDF evaluated at the reported quantile must be within 2% of p
     got = np.array(st.quantiles)
     assert got[0] == vals.min() and got[-1] == vals.max()
@@ -86,25 +95,6 @@ def test_per_partition_profiles(profile, sequences):
                for p in profile.partitions)
 
 
-def test_dual_path_agreement(sequences, components):
-    """Catalyst-expression path vs pandas-UDF kernel path (SURVEY.md §2.2
-    design decision): moments exact, quantiles within sketch tolerance."""
-    a = build_profile(sequences, components, PCOLS, method="catalyst")
-    b = build_profile(sequences, components, PCOLS, method="kernel")
-    for name in ("n_tok", "tokens"):
-        sa, sb = a.components[name].stats, b.components[name].stats
-        assert (sa.n, sa.min, sa.max) == (sb.n, sb.min, sb.max)
-        assert sa.mean == pytest.approx(sb.mean, rel=1e-9)
-        assert sa.std == pytest.approx(sb.std, rel=1e-9)
-        assert sa.pinv == sb.pinv
-        # quantile vectors agree as distributions: KS between the two
-        # reconstructed ECDFs within sketch tolerance
-        from data_validation_spark.functions.drift import ks_drift
-        assert ks_drift(sa.quantiles, sb.quantiles).statistic <= 0.02
-    assert a.components["source"].stats.counts == b.components["source"].stats.counts
-    assert a.components["tokens"].stats.elem_max == b.components["tokens"].stats.elem_max
-
-
 def test_profile_json_roundtrip(profile):
     j = profile.to_json()
     back = Profile.from_json(j)
@@ -133,7 +123,7 @@ def test_contrast_same_data_no_drift(profile):
 
 def test_contrast_shifted_drifts(spark, components, profile):
     shifted = build_profile(synth_sequences(spark, 2000, shift=True),
-                            components, method="catalyst")
+                            components)
     rep = contrast(shifted, profile)
     assert rep.drifted
     by = rep.components

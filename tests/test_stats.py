@@ -202,6 +202,22 @@ def test_weighted_quantiles_rejects_null_and_fractional_weights(spark):
     assert (r.total_weight, r.p50) == (10, 10)
 
 
+def test_weighted_quantiles_rejects_uncastable_weight(spark):
+    """Without ANSI, a weight that casts to NULL ('abc' as long) makes
+    every guard predicate NULL; the post-cast NULL check must still
+    reject it instead of letting the row vanish from sum()."""
+    import pytest
+    from data_validation_spark.functions.stats import weighted_quantiles
+    df = spark.createDataFrame([(1, "2"), (2, "abc")], "v int, w string")
+    old = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        with pytest.raises(ValueError, match="'abc'.*NULL"):
+            weighted_quantiles(df, "v", "w")
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", old)
+
+
 def test_weighted_quantiles_cardinality_guard(spark):
     """The cumsum window's reducer holds one (group's) distinct-value
     set; a continuous double column must raise loudly (bucketize.py

@@ -81,9 +81,9 @@ def test_referential_scope_inline_and_antijoin_paths(spark, wdf):
     con = Constraint("src_ok", "referential",
                      {"column": "src", "values": ["web", "api"],
                       "where": "grp = 'a'"})
-    # catalyst path inlines the dim as an isin condition; kernel path
-    # keeps the anti-join — both must honor the scope (only a4's BADX;
-    # b2's BAD is out of scope)
+    # run_validation inlines the dim as an isin condition;
+    # evaluate_constraints keeps the anti-join — both must honor the
+    # scope (only a4's BADX; b2's BAD is out of scope)
     res = run_validation(spark, wdf, _suite([con]), concurrent_jobs=1)
     assert _verdict(res, "src_ok")["n_violations"] == 1
     run = evaluate_constraints(wdf, _suite([con]))

@@ -15,12 +15,13 @@ a short per-stage PASS/FAIL ledger plus the final verdict line.
 
 from __future__ import annotations
 
+import os
 import re
 import subprocess
 import sys
 import time
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def run(label: str, cmd: list[str]) -> str:
