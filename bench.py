@@ -1,6 +1,7 @@
 """Benchmark harness (driver contract): runs the headline queries at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line
+``local[$SPARK_GRAFT_CPUS]`` (default: every host core) and prints ONE
+JSON line
 ``{"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}``.
 
 The headline set covers the engine's north-star path (full validation
@@ -23,7 +24,7 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 
 #: timed repetitions per query (min taken).  3 since r4: the r2→r3
 #: driver bench showed two >1 s swings (unique_violation_keys,

@@ -41,10 +41,7 @@ def numeric_agg_exprs(name: str, expr: str,
     the caller computes exact quantiles from a value histogram instead
     (integral bounded domains; see exact_quantiles_from_counts).
     """
-    c = F.expr(expr)
-    dbl = c.cast("double")
-    invalid = c.isNull() | F.isnan(dbl)
-    valid = F.when(~invalid, dbl)
+    invalid, valid = _invalid_valid(expr)
     p = f"{name}__"
     exprs = [
         F.count(F.lit(1)).alias(p + "n"),
@@ -55,9 +52,26 @@ def numeric_agg_exprs(name: str, expr: str,
         F.stddev_samp(valid).alias(p + "std"),
     ]
     if include_quantiles:
-        exprs.append(F.percentile_approx(valid, QUANTILE_PROBS, accuracy)
-                     .alias(p + "quantiles"))
+        exprs.append(numeric_quantile_expr(name, expr, accuracy))
     return exprs
+
+
+def numeric_quantile_expr(name: str, expr: str,
+                          accuracy: int = DEFAULT_ACCURACY) -> Column:
+    """The GK-sketch column ``{name}__quantiles`` of
+    ``numeric_agg_exprs``, on its own: for an aggregate that computes
+    only the quantiles of components the main aggregate left without."""
+    _, valid = _invalid_valid(expr)
+    return (F.percentile_approx(valid, QUANTILE_PROBS, accuracy)
+            .alias(f"{name}__quantiles"))
+
+
+def _invalid_valid(expr: str) -> tuple[Column, Column]:
+    """(is-invalid flag, value as double or NULL when invalid)."""
+    c = F.expr(expr)
+    dbl = c.cast("double")
+    invalid = c.isNull() | F.isnan(dbl)
+    return invalid, F.when(~invalid, dbl)
 
 
 def categoric_agg_exprs(name: str, expr: str) -> list[Column]:

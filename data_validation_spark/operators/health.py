@@ -1218,9 +1218,9 @@ def fd_discovery_report(df: DataFrame, cols: list[str],
         both = F.array(leg(i, j), leg(j, i))
         arr = both if arr is None else \
             F.when(F.col("gid") == gid, both).otherwise(arr)
-        # (last set doubles as the when-chain fallback — every collapse
-        # row belongs to exactly one set, so the fallback never
-        # misfires)
+        # (the first set is the plain fallback, the deepest link of
+        # the when-chain — every collapse row belongs to exactly one
+        # set, so the fallback never misfires)
     long = (collapsed.select(F.explode(arr).alias("e"), "cnt")
             .select("e.*", "cnt"))
     per_det = (long.groupBy("determinant", "dependent", "det_s",

@@ -2,9 +2,12 @@
 
 Pure Catalyst aggregates (S1-S7): one ``groupBy(partition_cols).agg(...)``
 computes every numeric/tokens component's partials map-side, so no row
-crosses into Python; categoric frequencies are one stacked
-low-cardinality ``groupBy``.  Per-partition records merge on the driver
-(functions/stats.py).
+crosses into Python; exact quantiles of bounded integral components
+come from one value-histogram job, and categoric frequencies from one
+low-cardinality ``groupBy`` per component.  None of these actions needs
+another's result, so they are submitted together from a small thread
+pool (``run_concurrently``) and their per-partition records are merged
+on the driver once all have finished (functions/stats.py).
 
 Scale notes (100 TB): the shuffle key is the table's physical partition
 key ``(source, bucket)``, so reduce cardinality = #partitions, not
@@ -17,11 +20,14 @@ components are scanned (parquet column pruning) — profiles that skip
 
 from __future__ import annotations
 
-from collections.abc import Iterable
+import threading
+from collections.abc import Callable, Hashable, Iterable
+from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from data_validation_spark.functions.stats import (
     DEFAULT_ACCURACY,
@@ -29,6 +35,7 @@ from data_validation_spark.functions.stats import (
     exact_quantiles_from_counts,
     merge_numeric_partials,
     numeric_agg_exprs,
+    numeric_quantile_expr,
     tokens_agg_exprs,
 )
 from data_validation_spark.plans.suite import (
@@ -160,21 +167,65 @@ def single_job_limit_collect(df: DataFrame, n: int) -> list:
     every task stops at its local ``n+1``-th row, so in the
     non-overflow case the driver receives at most the true row count,
     and in the (pathological, discarded-anyway) overflow case at most
-    ``#partitions × (n+1)`` narrow rows transiently."""
+    ``#partitions × (n+1)`` narrow rows transiently.
+
+    The setting that makes it one job is session-wide, so probes that
+    run at the same time share one hold on it: the first sets it, the
+    last restores the session's own value."""
     spark = df.sparkSession
-    key = "spark.sql.limit.initialNumPartitions"
-    try:
-        old = spark.conf.get(key)
-    except Exception:
-        old = None
-    spark.conf.set(key, str(2**31 - 1))
+    with _limit_lock:
+        hold = _limit_holds.get(spark)
+        if hold is None:
+            try:
+                old = spark.conf.get(_LIMIT_KEY)
+            except Exception:
+                old = None
+            hold = _limit_holds[spark] = [0, old]
+            spark.conf.set(_LIMIT_KEY, str(2**31 - 1))
+        hold[0] += 1
     try:
         return df.limit(n).collect()
     finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
+        with _limit_lock:
+            hold[0] -= 1
+            if not hold[0]:
+                del _limit_holds[spark]
+                if hold[1] is None:
+                    spark.conf.unset(_LIMIT_KEY)
+                else:
+                    spark.conf.set(_LIMIT_KEY, hold[1])
+
+
+_LIMIT_KEY = "spark.sql.limit.initialNumPartitions"
+_limit_lock = threading.Lock()
+#: session -> [probes running, the session's own value of _LIMIT_KEY]
+_limit_holds: dict = {}
+
+
+def run_concurrently(spark: SparkSession, actions: dict[Hashable, Callable],
+                     max_workers: int) -> dict:
+    """Call the independent Spark-action thunks ``actions``, up to
+    ``max_workers`` at a time, and return their results under the same
+    keys.  Serial driver actions leave the cluster idle between stages
+    (a reduce tail runs on a few tasks while the other cores wait for
+    the next job's scan); overlapping them fills that gap.  Every pool
+    thread inherits the caller's local properties (job group,
+    description, scheduler pool) and job tags, so the jobs it submits
+    are attributed like the caller's own.  ``max_workers <= 1`` calls
+    every thunk in order on the calling thread."""
+    if max_workers <= 1 or len(actions) <= 1:
+        return {k: f() for k, f in actions.items()}
+
+    def inherit(f: Callable) -> Callable:
+        # wrapped one thunk at a time: each thread gets its own copy of
+        # the properties, so a job group one thread sets stays its own
+        wrap = inheritable_thread_target(spark)
+        return f if wrap is spark else wrap(f)  # pinned-thread mode off
+
+    with ThreadPoolExecutor(
+            max_workers=min(max_workers, len(actions))) as pool:
+        futures = {k: pool.submit(inherit(f)) for k, f in actions.items()}
+        return {k: f.result() for k, f in futures.items()}
 
 
 def _topk_count_rows(counts: DataFrame, partition_cols: list[str],
@@ -217,89 +268,132 @@ def global_topk(df: DataFrame, k: int, order: list,
     return survivors.withColumn(rank_col, F.row_number().over(w))
 
 
+def _hist_probe(df: DataFrame, hist: dict[str, F.Column],
+                forced: set[str], partition_cols: list[str]
+                ) -> tuple[dict[str, dict[str, dict[int, int]]], set[str]]:
+    """Exact quantile histograms: one melt → one (pcols, comp, value)
+    count shuffle for ALL histogram components together.  Returns
+    ({comp: {partition: {value: count}}}, components kept).  Each
+    component is sized BEFORE its rows are collected: one whose
+    histogram exceeds HIST_MAX_GROUPS rows (unbounded ids / epochs
+    under strategy "auto") is left out of the kept set — the guard runs
+    cluster-side, the driver never sees the big rows.  ``forced``
+    components (``quantile_strategy="hist"``) are never guarded."""
+    if len(hist) == 1:  # common case: no melt/row-duplication needed
+        only = next(iter(hist))
+        hist_counts = (df.select(*partition_cols,
+                                 F.lit(only).alias("comp"),
+                                 hist[only].alias("val"))
+                       .groupBy(*partition_cols, "comp", "val").count())
+    else:
+        pair = F.explode(F.array(*[
+            F.struct(F.lit(name).alias("comp"), col.alias("val"))
+            for name, col in hist.items()])).alias("pair")
+        hist_counts = (df.select(*partition_cols, pair)
+                       .select(*partition_cols, "pair.comp", "pair.val")
+                       .groupBy(*partition_cols, "comp", "val").count())
+    guarded = hist.keys() - forced
+    if len(hist) == 1 and guarded:
+        # Common case (one integral component under guard): the
+        # guard IS the collect — pull at most HIST_MAX_GROUPS+1
+        # rows in ONE action; an overflowing probe is discarded.
+        # Driver memory stays bounded by the limit either way.
+        probe = single_job_limit_collect(hist_counts, HIST_MAX_GROUPS + 1)
+        keep = set() if len(probe) > HIST_MAX_GROUPS else set(hist)
+        hist_rows = probe if keep else []
+    else:
+        # Multi-component (or all-forced) path: per-comp sizes
+        # guard as TWO actions on a persisted counts frame, not
+        # one self-joined action — a broadcast of the sizes agg
+        # executes the melt subplan a second time (no exchange
+        # reuse across the broadcast boundary — measured slower
+        # at sf0.1), while the second action on the persisted
+        # frame is milliseconds at any data size.
+        if guarded:
+            hist_counts.persist()
+            per_comp = {r["comp"]: r["cnt"] for r in
+                        hist_counts.groupBy("comp")
+                        .agg(F.count(F.lit(1)).alias("cnt")).collect()}
+            too_big = {n for n, c in per_comp.items()
+                       if c > HIST_MAX_GROUPS and n not in forced}
+        else:
+            too_big = set()
+        keep = set(hist) - too_big
+        hist_rows = (hist_counts.where(F.col("comp").isin(list(keep)))
+                     .collect() if keep else [])
+        hist_counts.unpersist()
+    hists: dict[str, dict[str, dict[int, int]]] = {}
+    for r in hist_rows:
+        if r["val"] is None:
+            continue
+        part = partition_label(partition_cols,
+                               [r[c] for c in partition_cols])
+        hists.setdefault(r["comp"], {}).setdefault(
+            part, {})[int(r["val"])] = r["count"]
+    return hists, keep
+
+
+def _freq_probe(df: DataFrame, comp: Component,
+                partition_cols: list[str]) -> tuple[list, bool]:
+    """One categoric component's (pcols, value, count) rows, and
+    whether they are a per-partition top-k rather than the full map.
+    Driver memory is bounded either way: the collect is the full value
+    map (≤ CATEGORIC_EXACT_MAX groups) or a cluster-side salted top-k.
+    ``Component.freq_strategy`` pins the choice and skips the probe."""
+    keys = [*partition_cols, _ccol(comp.name)]
+    counts_df = df.groupBy(*keys).count()
+    if comp.freq_strategy == "exact":
+        return counts_df.collect(), False
+    if comp.freq_strategy == "topk":
+        return _topk_count_rows(counts_df, partition_cols, _ccol(comp.name),
+                                CATEGORIC_TOP_K), True
+    # auto: the guard IS the collect — pull at most
+    # CATEGORIC_EXACT_MAX+1 rows in ONE action.  A non-overflowing
+    # probe is already the full exact value map; only a genuinely
+    # high-cardinality component pays the second (salted top-k) job,
+    # on a persisted counts frame.
+    probe = single_job_limit_collect(counts_df, CATEGORIC_EXACT_MAX + 1)
+    if len(probe) <= CATEGORIC_EXACT_MAX:
+        return probe, False
+    counts_df.persist()
+    try:
+        return _topk_count_rows(counts_df, partition_cols, _ccol(comp.name),
+                                CATEGORIC_TOP_K), True
+    finally:
+        counts_df.unpersist()
+
+
 def _catalyst_records(df: DataFrame, components: list[Component],
                       partition_cols: list[str], accuracy: int,
                       quantile_strategy: str = "auto",
                       extra_names: list[str] | None = None,
-                      sketch_forced: set[str] = frozenset()
+                      sketch_forced: set[str] = frozenset(),
+                      concurrent_jobs: int = 4
                       ) -> tuple[list[dict], dict[str, dict]]:
-    """One main agg job computes every numeric/tokens summary AND every
-    categoric component's (n, n_invalid) totals; exact-histogram
-    quantiles for integral components ride one melt job; value counts
-    need one extra low-cardinality groupBy per categoric component.
-    Job count is driver-serial time at scale — keep it small."""
+    """The pass's independent Spark actions, submitted together (up to
+    ``concurrent_jobs`` at a time) and assembled into records on the
+    driver once all of them have finished:
+
+    * the main agg computes every numeric/tokens summary, every
+      categoric component's (n, n_invalid) totals and every
+      ``extra_names`` row-condition count;
+    * one melt job computes the exact-histogram quantiles of the
+      integral components (``_hist_probe``);
+    * one low-cardinality groupBy per categoric component computes its
+      value counts (``_freq_probe``).
+
+    The main agg leaves the sketch out for every histogram candidate,
+    so it does not wait for the histogram guard.  A candidate whose
+    guard overflows (the rare unbounded-integer case) gets its sketch
+    from one follow-up grouped agg over just those components — a
+    scalar-column scan, since guarded candidates never reference array
+    columns.  Job count is driver-serial time at scale — keep it
+    small."""
     numericish = [c for c in components if c.ctype in ("numeric", "tokens")]
     categoric = [c for c in components if c.ctype == "categoric"]
-    records: list[dict] = []
-
     hist = _hist_specs(df, numericish, quantile_strategy, sketch_forced)
-
-    # exact quantile histograms: one melt → one (pcols, comp, value)
-    # count shuffle for ALL histogram components together.  The counts
-    # frame is cached and sized per component BEFORE collecting: a
-    # component whose histogram exceeds HIST_MAX_GROUPS (unbounded ids /
-    # epochs under strategy "auto") falls back to the in-pass sketch —
-    # the guard runs cluster-side, the driver never sees the big rows.
-    hists: dict[str, dict[str, dict[int, int]]] = {}  # comp -> part -> {v: c}
-    if hist:
-        if len(hist) == 1:  # common case: no melt/row-duplication needed
-            only = next(iter(hist))
-            hist_counts = (df.select(*partition_cols,
-                                     F.lit(only).alias("comp"),
-                                     hist[only].alias("val"))
-                           .groupBy(*partition_cols, "comp", "val").count())
-        else:
-            pair = F.explode(F.array(*[
-                F.struct(F.lit(name).alias("comp"), col.alias("val"))
-                for name, col in hist.items()])).alias("pair")
-            hist_counts = (df.select(*partition_cols, pair)
-                           .select(*partition_cols, "pair.comp", "pair.val")
-                           .groupBy(*partition_cols, "comp", "val").count())
-        forced = {n for n in hist
-                  if next(c.quantile_strategy for c in numericish
-                          if c.name == n) == "hist"}
-        guarded = hist.keys() - forced
-        if len(hist) == 1 and guarded:
-            # Common case (one integral component under guard): the
-            # guard IS the collect — pull at most HIST_MAX_GROUPS+1
-            # rows in ONE action; an overflowing probe is discarded
-            # and the component falls back to the in-pass sketch.
-            # Driver memory stays bounded by the limit either way.
-            probe = single_job_limit_collect(hist_counts,
-                                             HIST_MAX_GROUPS + 1)
-            if len(probe) > HIST_MAX_GROUPS:
-                hist_rows, hist = [], {}
-            else:
-                hist_rows = probe
-        else:
-            # Multi-component (or all-forced) path: per-comp sizes
-            # guard as TWO actions on a persisted counts frame, not
-            # one self-joined action — a broadcast of the sizes agg
-            # executes the melt subplan a second time (no exchange
-            # reuse across the broadcast boundary — measured slower
-            # at sf0.1), while the second action on the persisted
-            # frame is milliseconds at any data size.
-            if guarded:
-                hist_counts.persist()
-                per_comp = {r["comp"]: r["cnt"] for r in
-                            hist_counts.groupBy("comp")
-                            .agg(F.count(F.lit(1)).alias("cnt")).collect()}
-                too_big = {n for n, c in per_comp.items()
-                           if c > HIST_MAX_GROUPS and n not in forced}
-            else:
-                too_big = set()
-            keep = set(hist) - too_big
-            hist_rows = (hist_counts.where(F.col("comp").isin(list(keep)))
-                         .collect() if keep else [])
-            hist_counts.unpersist()
-            hist = {n: c for n, c in hist.items() if n in keep}
-        for r in hist_rows:
-            if r["val"] is None:
-                continue
-            part = partition_label(partition_cols,
-                                   [r[c] for c in partition_cols])
-            hists.setdefault(r["comp"], {}).setdefault(
-                part, {})[int(r["val"])] = r["count"]
+    forced = {c.name for c in numericish
+              if c.name in hist and c.quantile_strategy == "hist"}
 
     exprs = []
     for comp in numericish:
@@ -312,63 +406,53 @@ def _catalyst_records(df: DataFrame, components: list[Component],
     exprs += [F.sum(F.when(F.col(_xcol(n)), 1).otherwise(0))
               .alias(_xcol(n)) for n in extra_names]
 
-    totals: dict[str, dict] = {}
-    extras: dict[str, dict] = {}
-    if exprs:
+    def grouped_agg(aggs: list[F.Column]) -> dict[str, dict]:
         grouped = (df.groupBy(*partition_cols) if partition_cols else
                    df.groupBy())
-        for row in grouped.agg(*exprs).collect():
-            d = row.asDict()
-            part = partition_label(partition_cols,
-                                   [d[c] for c in partition_cols])
-            totals[part] = d
-            if extra_names:
-                extras[part] = {n: d[_xcol(n)] for n in extra_names}
-            for comp in numericish:
-                rec = {"partition": part, "component": comp.name,
-                       "ctype": comp.ctype, "freq": None}
-                for k in _NUMERIC_KEYS:
-                    rec[k] = d.get(f"{comp.name}__{k}")
-                if comp.name in hist:
-                    counts = hists.get(comp.name, {}).get(part, {})
-                    rec["hist"] = counts
-                    rec["quantiles"] = exact_quantiles_from_counts(
-                        np.fromiter(counts.keys(), dtype=float,
-                                    count=len(counts)),
-                        np.fromiter(counts.values(), dtype=np.int64,
-                                    count=len(counts))) if counts else None
-                records.append(rec)
+        return {partition_label(partition_cols,
+                                [r[c] for c in partition_cols]): r.asDict()
+                for r in grouped.agg(*aggs).collect()}
+
+    actions: dict = {}
+    if exprs:
+        actions["agg"] = lambda: grouped_agg(exprs)
+    if hist:
+        actions["hist"] = lambda: _hist_probe(df, hist, forced,
+                                              partition_cols)
+    for comp in categoric:
+        actions[("freq", comp.name)] = (
+            lambda comp=comp: _freq_probe(df, comp, partition_cols))
+    results = run_concurrently(df.sparkSession, actions, concurrent_jobs)
+    totals: dict[str, dict] = results.get("agg", {})
+    hists, kept = results.get("hist", ({}, set()))
+    overflow = [n for n in hist if n not in kept]
+    sketches = grouped_agg([numeric_quantile_expr(n, _ccol(n), accuracy)
+                            for n in overflow]) if overflow else {}
+
+    records: list[dict] = []
+    extras: dict[str, dict] = {}
+    for part, d in totals.items():
+        if extra_names:
+            extras[part] = {n: d[_xcol(n)] for n in extra_names}
+        for comp in numericish:
+            rec = {"partition": part, "component": comp.name,
+                   "ctype": comp.ctype, "freq": None}
+            for k in _NUMERIC_KEYS:
+                rec[k] = d.get(f"{comp.name}__{k}")
+            if comp.name in overflow:
+                rec["quantiles"] = sketches[part][f"{comp.name}__quantiles"]
+            elif comp.name in hist:
+                counts = hists.get(comp.name, {}).get(part, {})
+                rec["hist"] = counts
+                rec["quantiles"] = exact_quantiles_from_counts(
+                    np.fromiter(counts.keys(), dtype=float,
+                                count=len(counts)),
+                    np.fromiter(counts.values(), dtype=np.int64,
+                                count=len(counts))) if counts else None
+            records.append(rec)
 
     for comp in categoric:
-        keys = [*partition_cols, _ccol(comp.name)]
-        counts_df = df.groupBy(*keys).count()
-        # cardinality guard: the expensive scan+shuffle happens once (the
-        # counts frame is cached); the collect is either the full value
-        # map (≤ CATEGORIC_EXACT_MAX groups) or a cluster-side salted
-        # top-k + remainder — driver memory is bounded either way.
-        # Component.freq_strategy pins the choice and skips the probe.
-        use_topk = comp.freq_strategy == "topk"
-        if comp.freq_strategy == "exact":
-            counts = counts_df.collect()
-        elif use_topk:
-            counts = _topk_count_rows(counts_df, partition_cols,
-                                      _ccol(comp.name), CATEGORIC_TOP_K)
-        else:
-            # auto: the guard IS the collect — pull at most
-            # CATEGORIC_EXACT_MAX+1 rows in ONE action.  A non-
-            # overflowing probe is already the full exact value map;
-            # only a genuinely high-cardinality component pays the
-            # second (salted top-k) job, on a persisted counts frame.
-            probe = single_job_limit_collect(counts_df,
-                                             CATEGORIC_EXACT_MAX + 1)
-            use_topk = len(probe) > CATEGORIC_EXACT_MAX
-            if use_topk:
-                counts_df.persist()
-                counts = _topk_count_rows(counts_df, partition_cols,
-                                          _ccol(comp.name), CATEGORIC_TOP_K)
-                counts_df.unpersist()
-            else:
-                counts = probe
+        counts, use_topk = results[("freq", comp.name)]
         freq_by_part: dict[str, dict[str, int]] = {}
         for r in counts:
             part = partition_label(partition_cols, [r[c] for c in partition_cols])
@@ -565,7 +649,8 @@ def build_profile_and_counts(df: DataFrame, components: list[Component],
                              row_conds: dict[str, F.Column] | None = None,
                              accuracy: int = DEFAULT_ACCURACY,
                              name: str = "profile",
-                             quantile_strategy: str = "auto"
+                             quantile_strategy: str = "auto",
+                             concurrent_jobs: int = 4
                              ) -> tuple[Profile, dict[str, dict[str, int]]]:
     """The spec's literal "single per-partition vectorized pass"
     (BASELINE.json:6): one grouped aggregation computes every
@@ -574,6 +659,9 @@ def build_profile_and_counts(df: DataFrame, components: list[Component],
     predicate).  Returns (profile, counts[partition][constraint]).
     Sharing the scan halves the number of tokens-column decodes per
     validation run (the dominant cost — see BENCH/BASELINE.md).
+
+    ``concurrent_jobs``: how many of the pass's independent actions run
+    at once (``1`` = one after another; identical results either way).
     """
     partition_cols = partition_cols or []
     row_conds = row_conds or {}
@@ -581,7 +669,8 @@ def build_profile_and_counts(df: DataFrame, components: list[Component],
     records, extras = _catalyst_records(
         projected, components, partition_cols, accuracy,
         quantile_strategy, extra_names=list(row_conds),
-        sketch_forced=_array_referencing(components, df))
+        sketch_forced=_array_referencing(components, df),
+        concurrent_jobs=concurrent_jobs)
 
     profile = Profile(name=name)
     by_comp: dict[str, list[dict]] = {}

@@ -44,6 +44,7 @@ from data_validation_spark.operators.constraints import (
 from data_validation_spark.operators.contrast import DriftReport, contrast
 from data_validation_spark.operators.profile import (
     build_profile_and_counts,
+    run_concurrently,
     single_job_limit_collect,
 )
 from data_validation_spark.plans.manifest import (
@@ -57,6 +58,10 @@ METRICS_TABLE = "metrics"
 VIOLATIONS_TABLE = "violations"
 
 _SCALAR_STATS = ("min", "max", "mean", "std", "pinv")
+
+#: max distinct non-NULL keys of a referential key set folded into the
+#: fused pass as an isin condition; larger key sets take the anti-join
+_REF_INLINE_MAX = 10_000
 
 
 @dataclass
@@ -130,12 +135,13 @@ def run_validation(spark: SparkSession, df: DataFrame, suite: ValidationSuite,
     violations / manifest through ``sink`` (IO5-IO7).
 
     ``concurrent_jobs``: independent Spark actions (the fused stats
-    pass, each set-level constraint count) are submitted from a thread
-    pool of this size so their stages overlap — a reduce tail on a few
-    tasks no longer serializes the whole run while the cluster idles.
-    ``1`` = strictly serial (identical results either way; actions
-    share no mutable state and the scheduler interleaves stages
-    fairly)."""
+    pass, each set-level constraint count, and inside the fused pass
+    its main aggregate, histogram and categoric-frequency probes) are
+    submitted from thread pools of this size so their stages overlap —
+    a reduce tail on a few tasks no longer serializes the whole run
+    while the cluster idles.  ``1`` = strictly serial (identical
+    results either way; actions share no mutable state and the
+    scheduler interleaves stages fairly)."""
     run_id = run_id or uuid.uuid4().hex[:12]
     # fill documented defaults (e.g. in_domain ← reference domain) up
     # front so a bad suite fails here with a clear message, not mid-job
@@ -191,49 +197,53 @@ def run_validation(spark: SparkSession, df: DataFrame, suite: ValidationSuite,
     row_cs = [c for c in suite.constraints if c.kind in ROW_LEVEL_KINDS]
     row_conds = {c.name: _row_violation_cond(c) for c in row_cs}
 
-    # referential constraints against a broadcast-sized dimension fold
-    # into the fused pass as an isin condition (the dim would have been
-    # collected for a broadcast join anyway); larger dims keep the
-    # anti-join counting path below
-    _REF_INLINE_MAX = 10_000
+    # referential constraints against a broadcast-sized key set fold
+    # into the fused pass as an isin condition (the keys would have been
+    # collected for a broadcast join anyway); larger key sets keep the
+    # anti-join counting path.  An inline value list is sized here; a
+    # no-sink run sizes a dimension inside the fused thunk below, so its
+    # probe runs beside the set-level actions instead of before them.
+    # With a sink, a dimension's violations are counted from the
+    # violations frame, which holds its anti-join rows anyway.
     inline_ref: set[str] = set()
+    dim_refs = []
     for c in suite.constraints:
         if c.kind != "referential":
             continue
-        p = c.params
-        dim_col = p.get("dim_column") or p["column"]
-        # NULLs in the dim are dropped BEFORE isin: a None inside the
-        # IN-list makes the predicate NULL (never true) for every
-        # non-matching row under SQL three-valued logic, silently
-        # zeroing the violation count.  A NULL dim key also can't
-        # legitimise a NULL fact value — the anti-join path agrees.
-        vals = (list(p["values"]) if "values" in p else
-                [r[0] for r in single_job_limit_collect(
-                    _resolve_dim(spark, p, dims)
-                    .select(dim_col).where(F.col(dim_col).isNotNull())
-                    .distinct(), _REF_INLINE_MAX + 1)])
-        vals = [v for v in vals if v is not None]
-        if len(vals) <= _REF_INLINE_MAX:
-            col = F.col(p["column"])
-            cond = col.isNull() | ~col.isin(vals)
-            scope = _scope_cond(c)
-            if scope is not None:
-                cond = scope & cond
-            row_conds[c.name] = cond
-            inline_ref.add(c.name)
+        if "values" in c.params:
+            vals = [v for v in c.params["values"] if v is not None]
+            if len(vals) <= _REF_INLINE_MAX:
+                row_conds[c.name] = _not_in_keys(c, vals)
+                inline_ref.add(c.name)
+        elif sink is None:
+            dim_refs.append(c)
 
     # The fused stats pass and every set-level count below are
     # INDEPENDENT Spark actions — assembled as thunks and submitted
-    # from a small thread pool, because serial driver actions leave
-    # the cluster idle between stages (a reduce tail runs on a handful
-    # of tasks while thousands of cores wait for the next job's scan).
-    # Overlapping them fills that gap on a real cluster and hides the
-    # shorter scans behind the fused pass locally; `concurrent_jobs=1`
-    # restores strictly serial execution.
+    # together by ``run_concurrently``, because serial driver actions
+    # leave the cluster idle between stages (a reduce tail runs on a
+    # handful of tasks while thousands of cores wait for the next job's
+    # scan).  The fused thunk first sizes each referential dimension:
+    # one under the cap joins the pass as an isin condition, one over
+    # it is counted by the anti-join in the same thunk.  The pass then
+    # runs its own independent actions concurrently too.
     def _fused():
-        return build_profile_and_counts(
-            df, suite.components, pcols, row_conds=row_conds,
-            name=suite.name)
+        conds = dict(row_conds)
+        over_cap: dict[str, dict[str, int]] = {}
+        for c in dim_refs:
+            p = c.params
+            dim = _resolve_dim(spark, p, dims)
+            keys = _dim_keys(dim, p.get("dim_column") or p["column"])
+            if keys is None:
+                over_cap[c.name] = referential_violation_counts(
+                    _scoped_df(df, c), p["column"], dim, pcols,
+                    p.get("dim_column"))
+            else:
+                conds[c.name] = _not_in_keys(c, keys)
+        profile, counts = build_profile_and_counts(
+            df, suite.components, pcols, row_conds=conds,
+            name=suite.name, concurrent_jobs=concurrent_jobs)
+        return profile, counts, over_cap
 
     actions: dict[str, object] = {"__fused__": _fused}
 
@@ -309,7 +319,8 @@ def run_validation(spark: SparkSession, df: DataFrame, suite: ValidationSuite,
                     lambda c=c, keys=list(c.params["keys"]):
                     uniqueness_violation_counts(
                         _scoped_df(df, c), keys, pcols))
-            elif c.kind == "referential" and c.name not in inline_ref:
+            elif (c.kind == "referential" and c.name not in inline_ref
+                  and "values" in c.params):
                 p = c.params
                 dim = _resolve_dim(spark, p, dims)
                 actions[c.name] = (
@@ -325,15 +336,10 @@ def run_validation(spark: SparkSession, df: DataFrame, suite: ValidationSuite,
                     lambda c=c: _frame_counts(join_rule_violation_frame(
                         _scoped_df(df, c), c, dims, pcols)))
 
-    if concurrent_jobs > 1 and len(actions) > 1:
-        from concurrent.futures import ThreadPoolExecutor
-        with ThreadPoolExecutor(
-                max_workers=min(concurrent_jobs, len(actions))) as pool:
-            futures = {k: pool.submit(v) for k, v in actions.items()}
-            results = {k: f.result() for k, f in futures.items()}
-    else:
-        results = {k: v() for k, v in actions.items()}
-    profile, counts_by_part = results.pop("__fused__")
+    results = run_concurrently(spark, actions, concurrent_jobs)
+    profile, counts_by_part, over_cap = results.pop("__fused__")
+    inline_ref |= {c.name for c in dim_refs} - over_cap.keys()
+    set_counts.update(over_cap)
     set_counts.update(results.pop("__viol_counts__", {}))
     metric_values: dict[str, dict] = results.pop("__metric_fused__", {})
     for k in [k for k in results if k.startswith("__dist__")]:
@@ -422,6 +428,35 @@ def _resolve_dim(spark: SparkSession, params: dict,
         return spark.createDataFrame([(v,) for v in params["values"]],
                                      f"{params['column']} string")
     return (dims or {})[params["dim"]]
+
+
+def _dim_keys(dim: DataFrame, dim_col: str) -> list | None:
+    """The dimension's distinct non-NULL keys, or None when there are
+    more than ``_REF_INLINE_MAX``.  The raw keys are probed first and
+    deduplicated on the driver; the distinct probe (a shuffle) runs only
+    when the raw rows exceed the cap.
+
+    NULLs are dropped BEFORE isin: a None inside the IN-list makes the
+    predicate NULL (never true) for every non-matching row under SQL
+    three-valued logic, silently zeroing the violation count.  A NULL
+    dim key also can't legitimise a NULL fact value — the anti-join
+    path agrees."""
+    keys = dim.select(dim_col).where(F.col(dim_col).isNotNull())
+    rows = single_job_limit_collect(keys, _REF_INLINE_MAX + 1)
+    if len(rows) > _REF_INLINE_MAX:
+        rows = single_job_limit_collect(keys.distinct(), _REF_INLINE_MAX + 1)
+        if len(rows) > _REF_INLINE_MAX:
+            return None
+    return list(dict.fromkeys(r[0] for r in rows))
+
+
+def _not_in_keys(c, keys: list) -> F.Column:
+    """Row-level violation predicate of referential constraint ``c``
+    against an inline key list (NULL fact values violate)."""
+    col = F.col(c.params["column"])
+    cond = col.isNull() | ~col.isin(keys)
+    scope = _scope_cond(c)
+    return cond if scope is None else scope & cond
 
 
 def _violation_rows(spark: SparkSession, df: DataFrame,

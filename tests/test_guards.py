@@ -285,3 +285,101 @@ def test_global_topk_plan_and_rank(spark):
              .collect())
     assert [(r["word"], r["cnt"]) for r in rows] == \
         [(r["word"], r["cnt"]) for r in naive]
+
+
+# ---------------------------------------------------------------------------
+# referential key-set cap: the raw keys are probed first, the distinct
+# probe runs only past the cap, and a dimension with more distinct keys
+# than the cap takes the anti-join — every path counts like the anti-join
+# ---------------------------------------------------------------------------
+
+@pytest.mark.parametrize("cap, keys, n_probes, antijoin", [
+    (10, ["web", "books", "code", "wiki"], 1, False),
+    (4, ["web", "web", "books", "code", "code", "wiki", None], 2, False),
+    (3, ["web", "books", "code", "wiki"], 2, True),
+], ids=["raw-under-cap", "distinct-under-cap", "distinct-over-cap"])
+def test_referential_dim_cap_paths(spark, sequences, monkeypatch,
+                                   cap, keys, n_probes, antijoin):
+    import data_validation_spark.plans.runner as runner
+    from data_validation_spark.operators.constraints import (
+        referential_violation_counts)
+
+    calls = {"probe": 0, "antijoin": 0}
+
+    def spy(name, fn):
+        def wrapped(*a, **k):
+            calls[name] += 1
+            return fn(*a, **k)
+        return wrapped
+
+    monkeypatch.setattr(runner, "_REF_INLINE_MAX", cap)
+    monkeypatch.setattr(runner, "single_job_limit_collect",
+                        spy("probe", runner.single_job_limit_collect))
+    monkeypatch.setattr(runner, "referential_violation_counts",
+                        spy("antijoin", referential_violation_counts))
+    dim = spark.createDataFrame([(k,) for k in keys], "source string")
+    suite = ValidationSuite(
+        name="s", components=[Component("n_tok", "numeric")],
+        partition_cols=["bucket"],
+        constraints=[Constraint("src_ref", "referential",
+                                {"column": "source", "dim": "d"})])
+    res = run_validation(spark, sequences, suite, dims={"d": dim},
+                         resume=False)
+    got = {v["partition"]: v["n_violations"] for v in res.verdicts
+           if v["constraint"] == "src_ref" and v["n_violations"]}
+    assert got == referential_violation_counts(sequences, "source", dim,
+                                               ["bucket"])
+    assert sum(got.values()) > 0
+    assert calls == {"probe": n_probes, "antijoin": int(antijoin)}
+
+
+# ---------------------------------------------------------------------------
+# the fused pass's concurrent actions: an overflowing histogram candidate
+# beside an in-cap one, a categoric component and a row condition
+# ---------------------------------------------------------------------------
+
+@pytest.mark.parametrize("concurrent_jobs", [1, 4])
+def test_fused_pass_with_overflowing_hist_candidate(wide, concurrent_jobs):
+    import numpy as np
+
+    import data_validation_spark.operators.profile as prof
+    from data_validation_spark.plans.suite import QUANTILE_PROBS
+
+    comps = [Component("big_id", "numeric"),
+             Component("small", "numeric", extractor="id % 37"),
+             Component("mod7", "categoric",
+                       extractor="cast(id % 7 as string)")]
+    orig = prof.HIST_MAX_GROUPS
+    prof.HIST_MAX_GROUPS = 1000  # big_id overflows, small (4 × 37) fits
+    try:
+        p, counts = prof.build_profile_and_counts(
+            wide, comps, ["grp"], row_conds={"even": F.col("id") % 2 == 0},
+            concurrent_jobs=concurrent_jobs)
+        sketch = build_profile(wide, comps[:1], ["grp"],
+                               quantile_strategy="sketch")
+    finally:
+        prof.HIST_MAX_GROUPS = orig
+
+    ids = np.arange(60_000)
+    for g in range(4):
+        part = f"grp={g}"
+        mine = ids[ids % 4 == g]
+        n = len(mine)
+        small = p.partitions[part]["small"].stats
+        assert small.hist is not None
+        assert small.quantiles == pytest.approx(
+            np.percentile(mine % 37, np.asarray(QUANTILE_PROBS) * 100),
+            abs=1e-9)
+        big = p.partitions[part]["big_id"].stats
+        assert big.hist is None and big.n == n
+        ref = sketch.partitions[part]["big_id"].stats.quantiles
+        vals = np.sort(mine * 7919 + 13)
+        for a, b in zip(big.quantiles, ref):
+            ranks = np.searchsorted(vals, [a, b], side="right")
+            assert abs(ranks[0] - ranks[1]) <= n / prof.DEFAULT_ACCURACY + 1
+        cat = p.partitions[part]["mod7"].stats
+        assert cat.counts == {str(v): int(c) for v, c in
+                              zip(*np.unique(mine % 7, return_counts=True))}
+        assert counts[part] == {"even": int((mine % 2 == 0).sum())}
+    assert p.components["small"].stats.hist is not None
+    assert p.components["big_id"].stats.n == 60_000

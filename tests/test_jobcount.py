@@ -6,7 +6,12 @@ queries count >1): r2 shape = 12 jobs; current = 7 (dropped: the
 partition-worklist distinct+collect, one incremental-limit round each
 for the inline-dim / histogram / categoric probes via
 ``single_job_limit_collect``, and a separate cardinality-guard job
-each for the histogram and categoric paths)."""
+each for the histogram and categoric paths).  Since the dimension
+probe reads the raw keys before any distinct, the run takes 5 jobs at
+local[4]; every one must carry the caller's job group, including those
+submitted from the runner's and the fused pass's thread pools."""
+
+import itertools
 
 from pyspark.sql import functions as F
 
@@ -22,16 +27,30 @@ from data_validation_spark.sources.sequences import (
 )
 
 GROUP = "jobcount-probe"
+_calls = itertools.count()
 
 
 def _jobs_for(spark, fn) -> int:
+    """Jobs ``fn`` started, asserting every one of them carries the
+    caller's job group — also those submitted from pool threads."""
     sc = spark.sparkContext
-    sc.setJobGroup(GROUP, "job-count probe")
+    tracker = sc.statusTracker()
+    group = f"{GROUP}-{next(_calls)}"
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, "job-count probe")
     try:
         fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(GROUP))
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    grouped = set(tracker.getJobIdsForGroup(group))
+    ungrouped = set(tracker.getJobIdsForGroup(None)) - ungrouped_before
+    # job ids are consecutive and nothing else runs during the call
+    ids = grouped | ungrouped
+    started = set(range(min(ids), max(ids) + 1)) if ids else set()
+    assert grouped == started, (
+        f"jobs {sorted(started - grouped)} lost the caller's job group")
+    return len(grouped)
 
 
 def _flagship_suite() -> ValidationSuite:
@@ -78,3 +97,57 @@ def test_no_sink_run_matches_resume_path_verdicts(spark, tmp_path):
     key = lambda v: (v["partition"], v["constraint"])  # noqa: E731
     assert sorted(a.verdicts, key=key) == sorted(b.verdicts, key=key)
     assert sorted(a.partitions) == sorted(b.partitions)
+
+
+def test_flagship_serial_and_concurrent_runs_agree(spark):
+    """``concurrent_jobs=1`` runs every action one after another; the
+    default overlaps them.  Both give the same verdicts and profile."""
+    df = synth_sequences(spark, 2000).persist()
+    df.count()
+    suite = _flagship_suite()
+    dims = {"allowed_sources": allowed_sources_df(spark)}
+    serial = run_validation(spark, df, suite, dims=dims, resume=False,
+                            concurrent_jobs=1)
+    default = run_validation(spark, df, suite, dims=dims, resume=False)
+    df.unpersist()
+    assert serial.verdicts == default.verdicts
+    assert serial.n_violations == default.n_violations > 0
+    assert serial.profile.to_json() == default.profile.to_json()
+
+
+def test_concurrent_single_job_probes(spark):
+    """Probes running at the same time share one hold on the session's
+    limit setting: each still takes one job, and the session's own value
+    is back once the last one ends."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
+
+    from data_validation_spark.operators.profile import (
+        single_job_limit_collect)
+
+    key = "spark.sql.limit.initialNumPartitions"
+    before = spark.conf.get(key)
+    # 5 rows per partition: a limit above 5 needs more than the first
+    # partition, so without the setting it takes several jobs
+    df = spark.range(0, 400, numPartitions=8).where(F.col("id") % 50 >= 45)
+    sizes = list(range(6, 30))
+    got = []
+
+    def probes():
+        old = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            with ThreadPoolExecutor(max_workers=12) as pool:
+                futures = [pool.submit(inheritable_thread_target(spark)(
+                    lambda n=n: len(single_job_limit_collect(df, n))))
+                    for n in sizes]
+                got.extend(f.result(timeout=300) for f in futures)
+        finally:
+            sys.setswitchinterval(old)
+
+    n_jobs = _jobs_for(spark, probes)
+    assert got == sizes
+    assert n_jobs == len(sizes)
+    assert spark.conf.get(key) == before
