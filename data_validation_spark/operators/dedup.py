@@ -10,8 +10,11 @@ Hamming join), and n-gram Jaccard verification.  Designed for the
   (a band shared by millions of near-identical docs would otherwise go
   quadratic; capped buckets are the documented trade-off, and AQE's
   skew-join split handles the rest),
-* verification recomputes shingles from the joined texts instead of
-  shuffling shingle arrays around,
+* verification hashes each text's shingle set and joins it to both
+  sides of every candidate pair,
+* an input with fewer partitions than cores (a one-row-group file) is
+  hash-spread by id over every core before hashing; other inputs are
+  left as they are,
 * everything except the SimHash bit-kernel is Catalyst expressions;
   the kernel is an Arrow-batched pandas UDF built on
   ``pandas.util.hash_array`` (vectorized SipHash) — no per-row Python.
@@ -28,6 +31,7 @@ from pyspark.sql.types import LongType
 from data_validation_spark.functions.arrays import (
     band_hashes_col,
     jaccard_col,
+    let_col,
     minhash_signature_col,
     word_shingle_hashes_col,
     word_shingles_col,
@@ -105,6 +109,83 @@ def _bucket_drop_stats(banded: DataFrame, keys: list[str],
             "n_dropped_memberships": int(r["dropped_members"] or 0)}
 
 
+def _band_rows(n_hashes: int, bands: int) -> int:
+    """Signature rows per LSH band; the bands must tile the signature."""
+    if n_hashes % bands:
+        raise ValueError("n_hashes must be divisible by bands")
+    return n_hashes // bands
+
+
+def _known_partitions(df: DataFrame) -> int | None:
+    """Partition count of ``df``'s physical plan when the driver can
+    read it without submitting a job: a plan with no exchange, no
+    adaptive wrapper, no cached relation and no subquery builds its RDD
+    lineage (file splits, local rows) on the driver alone.  ``None``
+    otherwise.  Reads ``df``'s own plan, which Spark plans once per
+    DataFrame, so repeated calls on one input cost about a millisecond."""
+    plan = df._jdf.queryExecution().executedPlan()
+    todo = [plan]
+    while todo:
+        node = todo.pop()
+        name = node.nodeName()
+        if ("Exchange" in name or name in ("AdaptiveSparkPlan",
+                                           "InMemoryTableScan")
+                or not node.subqueries().isEmpty()):
+            return None
+        kids = node.children()
+        todo += [kids.apply(i) for i in range(kids.size())]
+    return plan.execute().getNumPartitions()
+
+
+def _minhash_docs(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """``(id, text)``, hash-partitioned by id over every core when the
+    input has fewer partitions than ``defaultParallelism`` — a
+    one-row-group parquet file otherwise shingles and hashes the whole
+    corpus in one task.  An input already split at least once per core,
+    or whose partition count is unknown without a job, passes through
+    untouched: spreading it would shuffle the full text for no added
+    parallelism."""
+    docs = df.select(id_col, text_col)
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    n = _known_partitions(df)
+    if n is not None and n < cores:
+        return docs.repartition(cores, F.col(id_col))
+    return docs
+
+
+def _candidate_pairs(docs: DataFrame, text_col: str, id_col: str,
+                     k_shingle: int, n_hashes: int, bands: int,
+                     max_bucket: int, stats_out: dict | None) -> DataFrame:
+    """``lsh_candidate_pairs`` over a ``_minhash_docs`` frame."""
+    rows = _band_rows(n_hashes, bands)
+    sig = minhash_signatures(docs, text_col, id_col, k_shingle, n_hashes)
+    # let-bind the signature so banding doesn't re-inline (and thus
+    # recompute) the signature expression per band (functions/arrays.py
+    # let_col docstring has the measured pathology)
+    from pyspark import StorageLevel
+    banded = (sig.select(
+        F.col(id_col),
+        F.posexplode(let_col(
+            F.col("signature"),
+            lambda s: band_hashes_col(s, bands, rows)))
+        .alias("band", "band_hash"))
+        .persist(StorageLevel.MEMORY_AND_DISK))
+    if stats_out is not None:
+        stats_out.update(_bucket_drop_stats(
+            banded, ["band", "band_hash"], max_bucket))
+    sizes = (banded.groupBy("band", "band_hash")
+             .agg(F.count(F.lit(1)).alias("bucket_n"))
+             .filter((F.col("bucket_n") > 1)
+                     & (F.col("bucket_n") <= max_bucket)))
+    in_bucket = banded.join(sizes.select("band", "band_hash"),
+                            ["band", "band_hash"])
+    a = in_bucket.select("band", "band_hash", F.col(id_col).alias("id_a"))
+    b = in_bucket.select("band", "band_hash", F.col(id_col).alias("id_b"))
+    return (a.join(b, ["band", "band_hash"])
+            .filter(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b").distinct())
+
+
 def lsh_candidate_pairs(df: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id", k_shingle: int = 3,
                         n_hashes: int = 16, bands: int = 8,
@@ -132,54 +213,31 @@ def lsh_candidate_pairs(df: DataFrame, text_col: str = "text",
     join sides), so it is persisted MEMORY_AND_DISK: without it Spark
     re-runs the shingle+signature scan — the dominant cost — once per
     branch (measured 6.7 s → 3.2 s on the sf0.1 near-dup bench).  At
-    scale the frame is N × bands narrow rows (id, band, hash ≈ 24 B),
-    spilling to executor disk past memory — the standard LSH-index
-    materialization trade.
+    scale the frame is N × bands narrow rows (id, band, hash; ~60 B per
+    document in the columnar cache), spilling to executor disk past
+    memory — the standard LSH-index materialization trade.  The
+    shingle-hash sets stay out of it: they are the size of the corpus
+    text, and nothing releases the frame.  A call with the same
+    arguments reuses it, as does ``minhash_near_duplicates``' candidate
+    step on the same input.  An input with fewer partitions than cores
+    is first spread by id (``_minhash_docs``).
     """
-    if n_hashes % bands:
-        raise ValueError("n_hashes must be divisible by bands")
-    rows = n_hashes // bands
-    sig = minhash_signatures(df, text_col, id_col, k_shingle, n_hashes)
-    # let-bind the signature so banding doesn't re-inline (and thus
-    # recompute) the signature expression per band (functions/arrays.py
-    # let_col docstring has the measured pathology)
-    from pyspark import StorageLevel
-
-    from data_validation_spark.functions.arrays import let_col
-    banded = (sig.select(
-        F.col(id_col),
-        F.posexplode(let_col(
-            F.col("signature"),
-            lambda s: band_hashes_col(s, bands, rows)))
-        .alias("band", "band_hash"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    if stats_out is not None:
-        stats_out.update(_bucket_drop_stats(
-            banded, ["band", "band_hash"], max_bucket))
-    sizes = (banded.groupBy("band", "band_hash")
-             .agg(F.count(F.lit(1)).alias("bucket_n"))
-             .filter((F.col("bucket_n") > 1)
-                     & (F.col("bucket_n") <= max_bucket)))
-    in_bucket = banded.join(sizes.select("band", "band_hash"),
-                            ["band", "band_hash"])
-    a = in_bucket.select("band", "band_hash", F.col(id_col).alias("id_a"))
-    b = in_bucket.select("band", "band_hash", F.col(id_col).alias("id_b"))
-    return (a.join(b, ["band", "band_hash"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b").distinct())
+    return _candidate_pairs(_minhash_docs(df, text_col, id_col), text_col,
+                            id_col, k_shingle, n_hashes, bands, max_bucket,
+                            stats_out)
 
 
 def verify_pairs_jaccard(df: DataFrame, pairs: DataFrame,
                          text_col: str = "text", id_col: str = "doc_id",
                          k_shingle: int = 3,
                          prune_verify: bool = False) -> DataFrame:
-    """Exact shingle-set Jaccard for candidate pairs — shingles are
-    recomputed from the two joined texts (cheap, JVM-side) instead of
-    shuffling shingle arrays through the LSH stage.  Sets enter as
-    64-bit shingle hashes: |A∩B| and |A∪B| are identical to the string
-    formulation unless two distinct shingles of the same pair collide
-    in 64 bits (≈ n²·2⁻⁶⁴ — no effect at any feasible doc size), and
-    long-array intersects beat string-array intersects.
+    """Exact shingle-set Jaccard for candidate pairs over ``df``: each
+    document's shingle-hash set is computed from its text and joined to
+    both sides of every pair.  Sets enter as 64-bit shingle hashes:
+    |A∩B| and |A∪B| are identical to the string formulation unless two
+    distinct shingles of the same pair collide in 64 bits (≈ n²·2⁻⁶⁴ —
+    no effect at any feasible doc size), and long-array intersects beat
+    string-array intersects.
 
     ``prune_verify``: semi-join ``df`` down to the ids that appear in
     ``pairs`` BEFORE hashing.  At production sparsity (candidates ≪
@@ -208,16 +266,19 @@ def minhash_near_duplicates(df: DataFrame, text_col: str = "text",
                             n_hashes: int = 16, bands: int = 8,
                             threshold: float = 0.7,
                             max_bucket: int = 1000,
-                            stats_out: dict | None = None,
-                            prune_verify: bool = False) -> DataFrame:
-    """LSH candidates verified by exact Jaccard ≥ threshold.
-    ``stats_out={}`` adds hot-bucket drop accounting; ``prune_verify``
-    restricts verify-tier hashing to candidate docs (the sparse-
-    candidate production setting — see ``verify_pairs_jaccard``)."""
-    pairs = lsh_candidate_pairs(df, text_col, id_col, k_shingle,
-                                n_hashes, bands, max_bucket, stats_out)
-    return (verify_pairs_jaccard(df, pairs, text_col, id_col, k_shingle,
-                                 prune_verify)
+                            stats_out: dict | None = None) -> DataFrame:
+    """LSH candidates (``lsh_candidate_pairs``) verified by exact
+    Jaccard ≥ threshold (``verify_pairs_jaccard``).  Both read one
+    ``(id, text)`` frame, spread over every core when the input has
+    fewer partitions than cores, so the signature stage and the verify
+    tier's shingle hashing both run on every core.  ``stats_out={}``
+    adds hot-bucket drop accounting.  For the sparse-candidate setting,
+    compose ``lsh_candidate_pairs`` with
+    ``verify_pairs_jaccard(prune_verify=True)``."""
+    docs = _minhash_docs(df, text_col, id_col)
+    pairs = _candidate_pairs(docs, text_col, id_col, k_shingle, n_hashes,
+                             bands, max_bucket, stats_out)
+    return (verify_pairs_jaccard(docs, pairs, text_col, id_col, k_shingle)
             .filter(F.col("jaccard") >= threshold))
 
 
@@ -487,9 +548,8 @@ def minhash_band_state(df: DataFrame, text_col: str = "text",
     ["band", "band_hash"], N)`` so every future increment's candidate
     join leaves the state SHUFFLE-FREE (same contract as the exact
     fingerprint state; the index is ~2% of a text corpus's bytes)."""
-    from data_validation_spark.functions.arrays import let_col
+    rows = _band_rows(n_hashes, bands)
     sig = minhash_signatures(df, text_col, id_col, k_shingle, n_hashes)
-    rows = n_hashes // bands
     return sig.select(
         F.col(id_col),
         F.posexplode(let_col(
@@ -531,13 +591,10 @@ def increment_near_dups(batch: DataFrame, band_state: DataFrame,
     (``minhash_near_duplicates``) catch this at the Jaccard step; a
     signature-only verify cannot, so length-gate inputs below
     ``k_shingle`` words upstream (the standard pre-filter)."""
-    if n_hashes % bands:
-        raise ValueError("n_hashes must be divisible by bands")
+    rows = _band_rows(n_hashes, bands)
     from pyspark import StorageLevel
-    from data_validation_spark.functions.arrays import let_col
     sig = minhash_signatures(batch, text_col, id_col, k_shingle,
                              n_hashes).persist(StorageLevel.MEMORY_AND_DISK)
-    rows = n_hashes // bands
     batch_bands = sig.select(
         F.col(id_col).alias("batch_id"), "signature",
         F.posexplode(let_col(

@@ -1,5 +1,7 @@
 """Dedup operators on a constructed corpus with known duplicate structure."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -179,16 +181,140 @@ def test_token_ngram_contamination_on_real_token_arrays(spark, sequences):
 
 
 def test_minhash_prune_verify_same_answer(spark, sequences):
-    """prune_verify (the sparse-candidate production setting) must not
-    change the answer, only the verify tier's scan set."""
-    from data_validation_spark.operators.dedup import (
-        minhash_near_duplicates)
+    """prune_verify (the sparse-candidate production setting) of
+    ``verify_pairs_jaccard`` must not change the answer, only the
+    shingle-hashing scan set."""
     docs = sequences.limit(300).select(
         "doc_id", F.concat_ws(" ", F.transform(
             "tokens", lambda t: t.cast("string"))).alias("text"))
-    base = {(r.id_a, r.id_b) for r in
-            minhash_near_duplicates(docs, threshold=0.7).collect()}
-    pruned = {(r.id_a, r.id_b) for r in
-              minhash_near_duplicates(docs, threshold=0.7,
-                                      prune_verify=True).collect()}
+    pairs = dedup.lsh_candidate_pairs(docs)
+    base, pruned = ({(r.id_a, r.id_b): r.jaccard for r in
+                     dedup.verify_pairs_jaccard(docs, pairs,
+                                                prune_verify=p).collect()}
+                    for p in (False, True))
     assert base == pruned and len(base) > 0
+
+
+_SPREAD = re.compile(r"hashpartitioning\(doc_id#\d+L?, \d+\), REPARTITION_BY_NUM")
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _split_cap(spark, size: int):
+    """Context manager pinning ``spark.sql.files.maxPartitionBytes`` to
+    ``size`` bytes, restoring the previous setting on exit."""
+    from contextlib import contextmanager
+
+    @contextmanager
+    def pinned():
+        key = "spark.sql.files.maxPartitionBytes"
+        old = spark.conf.get(key, None)
+        spark.conf.set(key, str(size))
+        try:
+            yield
+        finally:
+            spark.conf.unset(key) if old is None else spark.conf.set(key, old)
+    return pinned()
+
+
+def test_minhash_spread_same_pairs(spark, tmp_path):
+    """A one-row-group corpus (one scan partition) is hash-spread by id
+    before hashing, and the spread changes no candidate, no pair and no
+    Jaccard value — NULL, empty, shorter-than-k and identical texts
+    included: an unspread run, forced by a split size that cuts the
+    file into more splits than cores, returns the same."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    cores = spark.sparkContext.defaultParallelism
+    if cores < 2:
+        pytest.skip("one core: nothing to spread over")
+    rows = [(1, BASE), (2, BASE), (3, NEAR), (4, UNRELATED),
+            (5, "tiny doc"), (6, None), (7, "")]
+    rows += [(100 + i, f"{BASE} extra words number {i}") for i in range(20)]
+    path = str(tmp_path / "corpus.parquet")
+    pq.write_table(pa.table({"doc_id": [r[0] for r in rows],
+                             "text": [r[1] for r in rows]}), path)
+    assert pq.ParquetFile(path).num_row_groups == 1
+
+    def run():
+        # a DataFrame keeps the physical plan it was first given, so
+        # each run reads the file afresh under the current split size
+        df = spark.read.parquet(path)
+        found = dedup.minhash_near_duplicates(df, threshold=0.5)
+        return (found, {(r.id_a, r.id_b) for r in
+                        dedup.lsh_candidate_pairs(df).collect()})
+
+    spread, cands = run()
+    got = {(r.id_a, r.id_b): r.jaccard for r in spread.collect()}
+    assert _SPREAD.search(_plan(spread))
+    # the spread is decided when the frame is built; its scan later
+    # runs with the restored split size
+    with _split_cap(spark, os.path.getsize(path) // (2 * cores)):
+        plain, plain_cands = run()
+    want = {(r.id_a, r.id_b): r.jaccard for r in plain.collect()}
+    assert not _SPREAD.search(_plan(plain))
+    assert got == want and (1, 2) in got and len(got) > 20
+    assert cands == plain_cands and {(1, 2), (6, 7)} <= cands
+
+
+def test_minhash_no_spread_for_wide_table_over_split_cap(spark, tmp_path):
+    """A text table with wide metadata, split into at least one scan
+    partition per core, is not reshuffled: the size estimate of its
+    (id, text) projection counts each string as 20 B and lands under
+    cores × maxPartitionBytes, but the spread follows the partition
+    count, not that estimate."""
+    import os
+    import random
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    rng = random.Random(7)
+    n = 400
+
+    def noise(k):
+        return " ".join(f"{rng.getrandbits(40):x}" for _ in range(k))
+    cols = {"doc_id": list(range(n)), "text": [noise(40) for _ in range(n)]}
+    cols.update({f"meta{j}": [noise(3) for _ in range(n)] for j in range(8)})
+    path = str(tmp_path / "wide.parquet")
+    pq.write_table(pa.table(cols), path, row_group_size=25,
+                   compression="none")
+    size = os.path.getsize(path)
+    cores = spark.sparkContext.defaultParallelism
+    cap = size // (2 * cores)
+    with _split_cap(spark, cap):
+        df = spark.read.parquet(path)
+        estimate = int(df.select("doc_id", "text")._jdf.queryExecution()
+                       .optimizedPlan().stats().sizeInBytes())
+        assert estimate <= cores * cap < size
+        assert df.rdd.getNumPartitions() >= cores
+        found = dedup.minhash_near_duplicates(df)
+        assert "REPARTITION_BY_NUM" not in _plan(found)
+
+
+def test_minhash_repeated_calls_persist_at_most_one_rdd(spark, corpus):
+    """The first call leaves at most one persisted frame; repeated
+    identical calls, and ``lsh_candidate_pairs`` with the same geometry,
+    reuse it."""
+    jsc = spark.sparkContext._jsc
+    for call in range(3):
+        before = jsc.getPersistentRDDs().size()
+        dedup.minhash_near_duplicates(corpus, threshold=0.5).collect()
+        added = jsc.getPersistentRDDs().size() - before
+        assert added <= 1 if call == 0 else added == 0
+    before = jsc.getPersistentRDDs().size()
+    dedup.lsh_candidate_pairs(corpus).count()
+    assert jsc.getPersistentRDDs().size() == before
+
+
+@pytest.mark.parametrize("op", ["lsh_candidate_pairs",
+                                "minhash_near_duplicates",
+                                "minhash_band_state"])
+def test_minhash_bands_must_tile_signature(corpus, op):
+    """16 hashes do not split into 5 bands; every LSH entry point says
+    so instead of dropping the trailing hashes."""
+    with pytest.raises(ValueError, match="divisible"):
+        getattr(dedup, op)(corpus, n_hashes=16, bands=5)

@@ -2,6 +2,8 @@
 reference's test_extractors.py scope: each extractor pulls a scalar
 feature from a raw datum, here vectorized over columns."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -282,7 +284,7 @@ def test_parse_wav_headers_real_layouts(spark):
         assert out[bad].n_frames is None
 
 
-def test_parse_wav_headers_is_pure_catalyst(spark):
+def test_parse_wav_headers_is_pure_catalyst(spark, monkeypatch):
     df = spark.createDataFrame([("a", b"RIFF")],
                                "doc_id string, payload binary")
     plan = multimodal.parse_wav_headers(df)._jdf.queryExecution() \
@@ -293,9 +295,15 @@ def test_parse_wav_headers_is_pure_catalyst(spark):
     # unrolled when-chain re-embedded the prior hop's pos ~5x per hop,
     # the expression tree grew geometrically with the hop budget, and
     # Catalyst analysis alone cost 43-55 s of driver time per query at
-    # ANY data size.  The aggregate form measures ~12 KB; anything near
-    # the unrolled regime is megabytes.
-    assert len(plan) < 200_000, len(plan)
+    # ANY data size.  Shape, not size: one aggregate lambda, and a plan
+    # whose CASE WHEN count does not grow with the hop budget.
+    assert len(re.findall(r"\baggregate\(", plan)) == 1, plan
+    monkeypatch.setattr(multimodal, "_WAV_MAX_HOPS",
+                        4 * multimodal._WAV_MAX_HOPS)
+    wider = multimodal.parse_wav_headers(df)._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert len(re.findall(r"\baggregate\(", wider)) == 1, wider
+    assert wider.count("CASE WHEN") == plan.count("CASE WHEN")
 
 
 def _mp4_bytes(brand=b"isom", minor=512, version=0, timescale=1000,

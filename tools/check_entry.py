@@ -7,12 +7,14 @@ value hash.  Usage: python tools/check_entry.py [name ...]
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = ("region nation customer supplier part orders lineitem events "
