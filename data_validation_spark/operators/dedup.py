@@ -10,6 +10,8 @@ Hamming join), and n-gram Jaccard verification.  Designed for the
   (a band shared by millions of near-identical docs would otherwise go
   quadratic; capped buckets are the documented trade-off, and AQE's
   skew-join split handles the rest),
+* ``_bucket_pairs`` is that step for MinHash and SimHash, and no call
+  leaves its persisted banded frame cached,
 * verification hashes each text's shingle set and joins it to both
   sides of every candidate pair,
 * an input with fewer partitions than cores (a one-row-group file) is
@@ -91,16 +93,14 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
                      .alias("signature"))
 
 
-def _bucket_drop_stats(banded: DataFrame, keys: list[str],
-                       max_bucket: int) -> dict:
-    """One aggregate action over a banded frame counting what the
-    hot-bucket cap will exclude: (n_buckets, n_dropped_buckets,
+def _bucket_drop_stats(sizes: DataFrame, max_bucket: int) -> dict:
+    """One aggregate action over per-bucket sizes ``n`` counting what
+    the hot-bucket cap will exclude: (n_buckets, n_dropped_buckets,
     n_dropped_memberships).  A pipeline owner cannot trust "0 near-dups
     found" without these.  Costs one extra evaluation of the banded
     plan — opt in via the operators' ``stats_out``."""
     over = F.col("n") > max_bucket
-    r = (banded.groupBy(*keys).agg(F.count(F.lit(1)).alias("n"))
-         .agg(F.count(F.lit(1)).alias("n_buckets"),
+    r = (sizes.agg(F.count(F.lit(1)).alias("n_buckets"),
               F.sum(F.when(over, 1).otherwise(0)).alias("dropped_buckets"),
               F.sum(F.when(over, F.col("n")).otherwise(0))
               .alias("dropped_members")).collect()[0])
@@ -153,37 +153,31 @@ def _minhash_docs(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     return docs
 
 
-def _candidate_pairs(docs: DataFrame, text_col: str, id_col: str,
-                     k_shingle: int, n_hashes: int, bands: int,
-                     max_bucket: int, stats_out: dict | None) -> DataFrame:
-    """``lsh_candidate_pairs`` over a ``_minhash_docs`` frame."""
-    rows = _band_rows(n_hashes, bands)
-    sig = minhash_signatures(docs, text_col, id_col, k_shingle, n_hashes)
-    # let-bind the signature so banding doesn't re-inline (and thus
-    # recompute) the signature expression per band (functions/arrays.py
-    # let_col docstring has the measured pathology)
+def _bucket_pairs(banded: DataFrame, keys: list[str], id_col: str,
+                  max_bucket: int, stats_out: dict | None, finish,
+                  carry: tuple[str, ...] = ()) -> DataFrame:
+    """``finish`` over the ``id_a < id_b`` pairs sharing a bucket of
+    2..``max_bucket`` rows of ``banded`` (``id_col``, ``keys``, ``carry``
+    columns, the last as ``<c>_a``/``<c>_b``), materialized in one plan;
+    ``banded`` stays persisted only until then."""
     from pyspark import StorageLevel
-    banded = (sig.select(
-        F.col(id_col),
-        F.posexplode(let_col(
-            F.col("signature"),
-            lambda s: band_hashes_col(s, bands, rows)))
-        .alias("band", "band_hash"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    if stats_out is not None:
-        stats_out.update(_bucket_drop_stats(
-            banded, ["band", "band_hash"], max_bucket))
-    sizes = (banded.groupBy("band", "band_hash")
-             .agg(F.count(F.lit(1)).alias("bucket_n"))
-             .filter((F.col("bucket_n") > 1)
-                     & (F.col("bucket_n") <= max_bucket)))
-    in_bucket = banded.join(sizes.select("band", "band_hash"),
-                            ["band", "band_hash"])
-    a = in_bucket.select("band", "band_hash", F.col(id_col).alias("id_a"))
-    b = in_bucket.select("band", "band_hash", F.col(id_col).alias("id_b"))
-    return (a.join(b, ["band", "band_hash"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b").distinct())
+    banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        sizes = banded.groupBy(*keys).agg(F.count(F.lit(1)).alias("n"))
+        if stats_out is not None:
+            stats_out.update(_bucket_drop_stats(sizes, max_bucket))
+        in_bucket = banded.join(
+            sizes.filter((F.col("n") > 1) & (F.col("n") <= max_bucket))
+            .select(*keys), keys)
+        a, b = (in_bucket.select(*keys, F.col(id_col).alias(f"id_{s}"),
+                                 *[F.col(c).alias(f"{c}_{s}") for c in carry])
+                for s in "ab")
+        pairs = (a.join(b, keys)
+                 .filter(F.col("id_a") < F.col("id_b"))
+                 .drop(*keys).distinct())
+        return finish(pairs).localCheckpoint(eager=True)
+    finally:
+        banded.unpersist()
 
 
 def lsh_candidate_pairs(df: DataFrame, text_col: str = "text",
@@ -210,21 +204,20 @@ def lsh_candidate_pairs(df: DataFrame, text_col: str = "text",
     not docs) — with the banded frame persisted, nearly free.
 
     The banded frame feeds three plan branches (bucket sizes, the two
-    join sides), so it is persisted MEMORY_AND_DISK: without it Spark
-    re-runs the shingle+signature scan — the dominant cost — once per
-    branch (measured 6.7 s → 3.2 s on the sf0.1 near-dup bench).  At
-    scale the frame is N × bands narrow rows (id, band, hash; ~60 B per
-    document in the columnar cache), spilling to executor disk past
-    memory — the standard LSH-index materialization trade.  The
-    shingle-hash sets stay out of it: they are the size of the corpus
-    text, and nothing releases the frame.  A call with the same
-    arguments reuses it, as does ``minhash_near_duplicates``' candidate
-    step on the same input.  An input with fewer partitions than cores
-    is first spread by id (``_minhash_docs``).
+    join sides), so it is persisted MEMORY_AND_DISK for the call;
+    without it Spark re-runs the shingle+signature scan — the dominant
+    cost — once per branch (measured 6.7 s → 3.2 s on the sf0.1
+    near-dup bench).  At scale it is N × bands narrow rows (~60 B per
+    document in the columnar cache), spilling to disk past memory.
+    The pairs come back materialized (``localCheckpoint``: lineage
+    truncated, as in ``graph.py``) and nothing stays cached.  An input
+    with fewer partitions than cores is first spread by id
+    (``_minhash_docs``).
     """
-    return _candidate_pairs(_minhash_docs(df, text_col, id_col), text_col,
-                            id_col, k_shingle, n_hashes, bands, max_bucket,
-                            stats_out)
+    return _bucket_pairs(
+        minhash_band_state(_minhash_docs(df, text_col, id_col), text_col,
+                           id_col, k_shingle, n_hashes, bands),
+        ["band", "band_hash"], id_col, max_bucket, stats_out, lambda p: p)
 
 
 def verify_pairs_jaccard(df: DataFrame, pairs: DataFrame,
@@ -271,15 +264,20 @@ def minhash_near_duplicates(df: DataFrame, text_col: str = "text",
     Jaccard ≥ threshold (``verify_pairs_jaccard``).  Both read one
     ``(id, text)`` frame, spread over every core when the input has
     fewer partitions than cores, so the signature stage and the verify
-    tier's shingle hashing both run on every core.  ``stats_out={}``
-    adds hot-bucket drop accounting.  For the sparse-candidate setting,
-    compose ``lsh_candidate_pairs`` with
+    tier's shingle hashing both run on every core.  The candidates and
+    the verify run as one plan before the call returns, and the pairs
+    come back materialized (``localCheckpoint``, lineage truncated).
+    ``stats_out={}`` adds hot-bucket drop accounting.  For the
+    sparse-candidate setting, compose ``lsh_candidate_pairs`` with
     ``verify_pairs_jaccard(prune_verify=True)``."""
     docs = _minhash_docs(df, text_col, id_col)
-    pairs = _candidate_pairs(docs, text_col, id_col, k_shingle, n_hashes,
-                             bands, max_bucket, stats_out)
-    return (verify_pairs_jaccard(docs, pairs, text_col, id_col, k_shingle)
-            .filter(F.col("jaccard") >= threshold))
+    return _bucket_pairs(
+        minhash_band_state(docs, text_col, id_col, k_shingle, n_hashes,
+                           bands),
+        ["band", "band_hash"], id_col, max_bucket, stats_out,
+        lambda pairs: (verify_pairs_jaccard(docs, pairs, text_col, id_col,
+                                            k_shingle)
+                       .filter(F.col("jaccard") >= threshold)))
 
 
 # ---------------------------------------------------------------------------
@@ -366,41 +364,28 @@ def simhash_pairs_from_signatures(sig: DataFrame, id_col: str = "doc_id",
     16-bit bands — any pair within the Hamming radius must agree on at
     least one band (pigeonhole), so a band-bucket equi-join finds all of
     them; verification is JVM-side bit_count(a XOR b).
-    ``stats_out={}`` adds hot-bucket drop accounting (with the banded
-    frame persisted, nearly free).  The banded frame is persisted
-    MEMORY_AND_DISK for the same three-branch reason as
-    ``lsh_candidate_pairs`` — it saves re-running the signature subplan
-    (the Arrow kernel, when fed from ``simhash_near_duplicates``) once
-    per branch.
+    ``stats_out={}`` adds hot-bucket drop accounting.  As in
+    ``lsh_candidate_pairs``, the banded frame is persisted for the call
+    (saving a re-run of the signature subplan — the Arrow kernel, when
+    fed from ``simhash_near_duplicates`` — per branch) and the pairs
+    come back materialized (``localCheckpoint``, lineage truncated).
     """
-    from pyspark import StorageLevel
     n_bands = 4
     banded = sig.select(
         id_col, "simhash",
         F.posexplode(F.array(*[
             F.shiftrightunsigned(F.col("simhash"), 16 * b)
             .bitwiseAND(F.lit(0xFFFF)) for b in range(n_bands)]))
-        .alias("band", "band_key")).persist(StorageLevel.MEMORY_AND_DISK)
-    if stats_out is not None:
-        stats_out.update(_bucket_drop_stats(
-            banded, ["band", "band_key"], max_bucket))
-    sizes = (banded.groupBy("band", "band_key")
-             .agg(F.count(F.lit(1)).alias("n"))
-             .filter((F.col("n") > 1) & (F.col("n") <= max_bucket)))
-    in_bucket = banded.join(sizes.select("band", "band_key"),
-                            ["band", "band_key"])
-    a = in_bucket.select("band", "band_key", F.col(id_col).alias("id_a"),
-                         F.col("simhash").alias("sim_a"))
-    b = in_bucket.select("band", "band_key", F.col(id_col).alias("id_b"),
-                         F.col("simhash").alias("sim_b"))
-    pairs = (a.join(b, ["band", "band_key"])
-             .filter(F.col("id_a") < F.col("id_b"))
-             .select("id_a", "id_b", "sim_a", "sim_b").distinct())
-    return (pairs
-            .withColumn("hamming", F.bit_count(
-                F.col("sim_a").bitwiseXOR(F.col("sim_b"))))
-            .filter(F.col("hamming") <= max_hamming)
-            .select("id_a", "id_b", "hamming"))
+        .alias("band", "band_key"))
+
+    def within_radius(pairs):
+        return (pairs
+                .withColumn("hamming", F.bit_count(
+                    F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))))
+                .filter(F.col("hamming") <= max_hamming)
+                .select("id_a", "id_b", "hamming"))
+    return _bucket_pairs(banded, ["band", "band_key"], id_col, max_bucket,
+                         stats_out, within_radius, carry=("simhash",))
 
 
 # ---------------------------------------------------------------------------
@@ -548,10 +533,19 @@ def minhash_band_state(df: DataFrame, text_col: str = "text",
     ["band", "band_hash"], N)`` so every future increment's candidate
     join leaves the state SHUFFLE-FREE (same contract as the exact
     fingerprint state; the index is ~2% of a text corpus's bytes)."""
+    return _signature_bands(
+        minhash_signatures(df, text_col, id_col, k_shingle, n_hashes),
+        id_col, n_hashes, bands)
+
+
+def _signature_bands(sig: DataFrame, id_col: str, n_hashes: int,
+                     bands: int, *carry: str) -> DataFrame:
+    """``(id, *carry, band, band_hash)`` over a ``minhash_signatures``
+    frame.  The signature is let-bound so banding doesn't recompute it
+    per band (functions/arrays.py let_col has the measured pathology)."""
     rows = _band_rows(n_hashes, bands)
-    sig = minhash_signatures(df, text_col, id_col, k_shingle, n_hashes)
     return sig.select(
-        F.col(id_col),
+        F.col(id_col), *carry,
         F.posexplode(let_col(
             F.col("signature"),
             lambda s: band_hashes_col(s, bands, rows)))
@@ -591,25 +585,17 @@ def increment_near_dups(batch: DataFrame, band_state: DataFrame,
     (``minhash_near_duplicates``) catch this at the Jaccard step; a
     signature-only verify cannot, so length-gate inputs below
     ``k_shingle`` words upstream (the standard pre-filter)."""
-    rows = _band_rows(n_hashes, bands)
-    from pyspark import StorageLevel
-    sig = minhash_signatures(batch, text_col, id_col, k_shingle,
-                             n_hashes).persist(StorageLevel.MEMORY_AND_DISK)
-    batch_bands = sig.select(
-        F.col(id_col).alias("batch_id"), "signature",
-        F.posexplode(let_col(
-            F.col("signature"),
-            lambda s: band_hashes_col(s, bands, rows)))
-        .alias("band", "band_hash"))
+    batch_bands = _signature_bands(
+        minhash_signatures(batch, text_col, id_col, k_shingle, n_hashes),
+        id_col, n_hashes, bands, "signature"
+    ).withColumnRenamed(id_col, "batch_id")
     state = band_state.select("band", "band_hash",
                               F.col(id_col).alias("corpus_id"))
+    sizes = state.groupBy("band", "band_hash").agg(
+        F.count(F.lit(1)).alias("n"))
     if stats_out is not None:
-        stats_out.update(_bucket_drop_stats(
-            state, ["band", "band_hash"], max_bucket))
-    keep = (state.groupBy("band", "band_hash")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") <= max_bucket)
-            .select("band", "band_hash"))
+        stats_out.update(_bucket_drop_stats(sizes, max_bucket))
+    keep = sizes.filter(F.col("n") <= max_bucket).select("band", "band_hash")
     cand = (batch_bands
             .join(keep, ["band", "band_hash"])
             .join(state, ["band", "band_hash"])
@@ -646,7 +632,10 @@ def dedup_increment_near(batch: DataFrame, band_state: DataFrame,
     vs_corpus = increment_near_dups(
         batch, band_state, corpus_sigs, text_col, id_col, k_shingle,
         n_hashes, bands, threshold, max_bucket, stats_out)
-    matched = vs_corpus.select(F.col("batch_id").alias(id_col)).distinct()
+    # materialized: ``fresh`` has three readers, and each would re-run
+    # the corpus probe
+    matched = (vs_corpus.select(F.col("batch_id").alias(id_col))
+               .distinct().localCheckpoint(eager=True))
     fresh = batch.join(matched, id_col, "left_anti")
     in_batch = minhash_near_duplicates(
         fresh, text_col, id_col, k_shingle, n_hashes, bands, threshold,

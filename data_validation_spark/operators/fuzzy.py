@@ -52,9 +52,10 @@ def fuzzy_duplicate_strings(df: DataFrame, str_col: str,
         raise ValueError("max_distance must be >= 1")
     k = d + 1
 
+    # read by four branches: materialized once, freed with the result
     vals = (df.select(F.col(str_col).alias("s"))
             .filter(F.col("s").isNotNull()).distinct()
-            .persist())
+            .localCheckpoint(eager=True))
 
     # segment side: k near-equal chunks; first (len % k) chunks get the
     # extra char.  Only lengths > d (every chunk non-empty there).

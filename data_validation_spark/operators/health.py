@@ -801,13 +801,14 @@ def emd_report(df: DataFrame, group_col: str, value_col: str,
 
     Shape at scale: the table collapses to (group, bin) counts in ONE
     map-side-combined shuffle (reduce cardinality = groups × n_bins,
-    never rows) and that frame is persisted MEMORY_AND_DISK — it feeds
-    three branches (per-group totals, global histogram, the cells
-    join) and without the persist Spark re-scans the raw table once
-    per branch.  The global histogram is the persisted frame
-    re-aggregated; the per-group bin spine is ``sequence(0, n_bins-1)``
-    exploded from the groups frame (groups × n_bins rows); CDFs are
-    window cumsums over n_bins-row partitions.
+    never rows) and that frame is persisted until the report is
+    materialized (``localCheckpoint``) — it feeds three branches
+    (per-group totals, global histogram, the cells join) and without
+    the persist Spark re-scans the raw table once per branch.  The
+    global histogram is the persisted frame re-aggregated; the
+    per-group bin spine is ``sequence(0, n_bins-1)`` exploded from the
+    groups frame (groups × n_bins rows); CDFs are window cumsums over
+    n_bins-row partitions.
 
     Determinism: binning is pure integer floor division on an exact
     span; cumulative counts are exact integers; each bin's term is the
@@ -864,14 +865,18 @@ def emd_report(df: DataFrame, group_col: str, value_col: str,
     agg = (cum.groupBy("g", "n_g", "n_all")
            .agg(F.sum(term).alias("__num")))
     den = (dec("n_g") * dec("n_all") * F.lit(n_bins).cast("decimal(38,0)"))
-    return (agg.withColumn("__den", den)
-            .withColumn("emd_micro",
-                        F.expr("(2 * __num * 1000000 + __den) "
-                               "div (2 * __den)").cast("long"))
-            .select(F.col("g").alias(group_col), "n_g", "n_all",
-                    "emd_micro",
-                    (F.col("emd_micro").cast("double") / F.lit(1e6))
-                    .alias("emd_norm")))
+    try:
+        return (agg.withColumn("__den", den)
+                .withColumn("emd_micro",
+                            F.expr("(2 * __num * 1000000 + __den) "
+                                   "div (2 * __den)").cast("long"))
+                .select(F.col("g").alias(group_col), "n_g", "n_all",
+                        "emd_micro",
+                        (F.col("emd_micro").cast("double") / F.lit(1e6))
+                        .alias("emd_norm"))
+                .localCheckpoint(eager=True))
+    finally:
+        counts.unpersist()
 
 
 def iqr_outlier_report(df: DataFrame, cols: list[str],
@@ -887,9 +892,11 @@ def iqr_outlier_report(df: DataFrame, cols: list[str],
     ONE melt scan for all N columns (same shape as entropy_report:
     payload columns prune, the table is read once) collapses to
     (column, value) counts — map-side combinable; the shuffle carries
-    Σ per-column cardinalities, never rows — persisted and read by
-    both the quartile branch (window cumsum over |distinct| rows) and
-    the outlier-count branch (broadcast fence join).
+    Σ per-column cardinalities, never rows — and that collapse is
+    consumed once: windows partitioned by column give each value its
+    column's total and running count (cumsum over |distinct| rows) and
+    then the quartiles, and one aggregate on the same partitioning
+    counts the fence breaches.  No persist, no join, no second scan.
 
     Quartile definition: ``q`` = smallest value whose cumulative count
     reaches ``ceil(q_frac * n)`` (4*cum >= n for q1, >= 3n for q3) —
@@ -900,45 +907,44 @@ def iqr_outlier_report(df: DataFrame, cols: list[str],
     """
     if not cols:
         raise ValueError("cols must be non-empty")
-    from pyspark import StorageLevel
     kv = []
     for c in cols:
         kv += [F.lit(c), F.col(c).cast("long")]
     pairs = df.select(F.explode(F.create_map(*kv)).alias("column", "v"))
     counts = (pairs.groupBy("column", "v")
               .agg(F.count(F.lit(1)).alias("c")))
-    counts.persist(StorageLevel.MEMORY_AND_DISK)
 
-    nn = counts.where(F.col("v").isNotNull())
-    nulls = (counts.where(F.col("v").isNull())
-             .select("column", F.col("c").alias("n_null")))
-    tot = nn.groupBy("column").agg(F.sum("c").alias("n"))
-    wcum = (Window.partitionBy("column").orderBy("v")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    cum = nn.withColumn("cum", F.sum("c").over(wcum)) \
-        .join(F.broadcast(tot), "column")
-    quart = cum.groupBy("column", "n").agg(
+    # NULL values sort first and add nothing to n or the running count
+    c_nn = F.when(F.col("v").isNotNull(), F.col("c"))
+    wcol = Window.partitionBy("column")
+    wcum = wcol.orderBy("v").rowsBetween(Window.unboundedPreceding,
+                                         Window.currentRow)
+    cum = counts.select("column", "v", "c",
+                        F.sum(c_nn).over(wcol).alias("n"),
+                        F.sum(c_nn).over(wcum).alias("cum"))
+    quart = cum.select(
+        "*",
         F.min(F.when(F.col("cum") * 4 >= F.col("n"), F.col("v")))
-        .alias("q1"),
+        .over(wcol).alias("q1"),
         F.min(F.when(F.col("cum") * 4 >= F.col("n") * 3, F.col("v")))
-        .alias("q3"))
+        .over(wcol).alias("q3"))
 
     kd, kn = F.lit(int(k_den)), F.lit(int(k_num))
     lo_breach = kd * F.col("v") < (kd + kn) * F.col("q1") - kn * F.col("q3")
     hi_breach = kd * F.col("v") > (kd + kn) * F.col("q3") - kn * F.col("q1")
-    out = (nn.join(F.broadcast(quart), "column")
-           .groupBy("column", "n", "q1", "q3")
+    out = (quart.groupBy("column", "n", "q1", "q3")
            .agg(F.sum(F.when(lo_breach, F.col("c")).otherwise(0))
                 .alias("n_below"),
                 F.sum(F.when(hi_breach, F.col("c")).otherwise(0))
-                .alias("n_above")))
-    return (out.join(F.broadcast(nulls), "column", "left")
-            .select("column", F.col("n").alias("n_rows"),
-                    F.coalesce("n_null", F.lit(0)).alias("n_null"),
-                    "q1", "q3", "n_below", "n_above",
-                    F.round((F.col("n_below") + F.col("n_above"))
-                            .cast("double") / F.col("n").cast("double"),
-                            6).alias("outlier_ratio")))
+                .alias("n_above"),
+                F.sum(F.when(F.col("v").isNull(), F.col("c")).otherwise(0))
+                .alias("n_null"))
+           .where(F.col("n").isNotNull()))
+    return out.select("column", F.col("n").alias("n_rows"), "n_null",
+                      "q1", "q3", "n_below", "n_above",
+                      F.round((F.col("n_below") + F.col("n_above"))
+                              .cast("double") / F.col("n").cast("double"),
+                              6).alias("outlier_ratio"))
 
 
 def event_order_report(df: DataFrame, key_col: str, ts_col: str,

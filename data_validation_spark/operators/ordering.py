@@ -63,8 +63,8 @@ def global_order_index(df: DataFrame, order_cols: list,
         position_col,
         (off_col + F.row_number().over(w) - 1).cast("long"))
         .drop("_pid"))
-    # caller's first action materializes through the persisted parted;
-    # lineage keeps working after unpersist, so this is safe to leave
+    # parted stays persisted: it pins the range split the offsets came
+    # from, and releasing it means materializing out, a table copy
     return out
 
 

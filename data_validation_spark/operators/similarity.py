@@ -559,15 +559,13 @@ def embedding_near_duplicates(df: DataFrame, dim: int,
             "n_dropped_memberships": n_dropped_members,
             "est_recall": 1.0 - (1.0 - p ** n_planes) ** n_tables})
 
-    from pyspark import StorageLevel
-    # final banded frame feeds two branches (sizes + candidate join):
-    # persist so the assignment kernel runs once, not twice
-    banded = banded_frame().persist(StorageLevel.MEMORY_AND_DISK)
-    sizes = (banded.groupBy("table", "bucket")
-             .agg(F.count(F.lit(1)).alias("n")))
-    keep = (sizes.where((F.col("n") > 1) & (F.col("n") <= max_bucket))
-            .select("table", "bucket"))
-    cand = banded.join(keep, ["table", "bucket"])
+    from pyspark.sql import Window
+    # a window count shares the per-bucket groupBy's exchange, so the
+    # assignment kernel runs once and nothing is persisted
+    n = F.count(F.lit(1)).over(Window.partitionBy("table", "bucket"))
+    cand = (banded_frame().withColumn("__n", n)
+            .where((F.col("__n") > 1) & (F.col("__n") <= max_bucket))
+            .drop("__n"))
 
     def pairwise(pdf: pd.DataFrame) -> pd.DataFrame:
         mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)

@@ -80,9 +80,9 @@ def vocab_drift_summary(cur: DataFrame, ref: DataFrame, unit,
                      oracle-hashed),
       ``drifted``  — tv > tv_threshold.
 
-    Two aggregate jobs over the persisted vocab-sized frame; the
-    totals row rides back via broadcast crossJoin so no statistic is
-    driver-computed.
+    The vocab-sized frame is persisted until the one-row result is
+    materialized (``localCheckpoint``); the totals row rides back via
+    broadcast crossJoin so no statistic is driver-computed.
     """
     from pyspark import StorageLevel
     frame = vocab_drift_frame(cur, ref, unit) \
@@ -110,11 +110,15 @@ def vocab_drift_summary(cur: DataFrame, ref: DataFrame, unit,
         F.sum(p * F.log(p / q)).alias("kl_ab"))
     denom = (2 * (2 * F.col("n_tokens_a") + F.col("vocab_joint"))
              * (2 * F.col("n_tokens_b") + F.col("vocab_joint")))
-    return out.select(
-        "vocab_joint", "n_tokens_a", "n_tokens_b", "tv_num4",
-        (F.col("tv_num4").cast("double") / denom.cast("double"))
-        .alias("tv"),
-        "kl_ab").withColumn("drifted", F.col("tv") > tv_threshold)
+    try:
+        return out.select(
+            "vocab_joint", "n_tokens_a", "n_tokens_b", "tv_num4",
+            (F.col("tv_num4").cast("double") / denom.cast("double"))
+            .alias("tv"),
+            "kl_ab").withColumn("drifted", F.col("tv") > tv_threshold) \
+            .localCheckpoint(eager=True)
+    finally:
+        frame.unpersist()
 
 
 def vocab_top_movers(cur: DataFrame, ref: DataFrame, unit,

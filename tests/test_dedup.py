@@ -245,18 +245,16 @@ def test_minhash_spread_same_pairs(spark, tmp_path):
         # each run reads the file afresh under the current split size
         df = spark.read.parquet(path)
         found = dedup.minhash_near_duplicates(df, threshold=0.5)
-        return (found, {(r.id_a, r.id_b) for r in
-                        dedup.lsh_candidate_pairs(df).collect()})
+        return (_plan(dedup._minhash_docs(df, "text", "doc_id")),
+                {(r.id_a, r.id_b): r.jaccard for r in found.collect()},
+                {(r.id_a, r.id_b) for r in
+                 dedup.lsh_candidate_pairs(df).collect()})
 
-    spread, cands = run()
-    got = {(r.id_a, r.id_b): r.jaccard for r in spread.collect()}
-    assert _SPREAD.search(_plan(spread))
-    # the spread is decided when the frame is built; its scan later
-    # runs with the restored split size
+    spread, got, cands = run()
+    assert _SPREAD.search(spread)
     with _split_cap(spark, os.path.getsize(path) // (2 * cores)):
-        plain, plain_cands = run()
-    want = {(r.id_a, r.id_b): r.jaccard for r in plain.collect()}
-    assert not _SPREAD.search(_plan(plain))
+        plain, want, plain_cands = run()
+    assert not _SPREAD.search(plain)
     assert got == want and (1, 2) in got and len(got) > 20
     assert cands == plain_cands and {(1, 2), (6, 7)} <= cands
 
@@ -291,23 +289,8 @@ def test_minhash_no_spread_for_wide_table_over_split_cap(spark, tmp_path):
                        .optimizedPlan().stats().sizeInBytes())
         assert estimate <= cores * cap < size
         assert df.rdd.getNumPartitions() >= cores
-        found = dedup.minhash_near_duplicates(df)
-        assert "REPARTITION_BY_NUM" not in _plan(found)
-
-
-def test_minhash_repeated_calls_persist_at_most_one_rdd(spark, corpus):
-    """The first call leaves at most one persisted frame; repeated
-    identical calls, and ``lsh_candidate_pairs`` with the same geometry,
-    reuse it."""
-    jsc = spark.sparkContext._jsc
-    for call in range(3):
-        before = jsc.getPersistentRDDs().size()
-        dedup.minhash_near_duplicates(corpus, threshold=0.5).collect()
-        added = jsc.getPersistentRDDs().size() - before
-        assert added <= 1 if call == 0 else added == 0
-    before = jsc.getPersistentRDDs().size()
-    dedup.lsh_candidate_pairs(corpus).count()
-    assert jsc.getPersistentRDDs().size() == before
+        docs = dedup._minhash_docs(df, "text", "doc_id")
+        assert "REPARTITION_BY_NUM" not in _plan(docs)
 
 
 @pytest.mark.parametrize("op", ["lsh_candidate_pairs",

@@ -436,16 +436,17 @@ def test_iqr_matches_numpy_definition(spark):
 
 
 def test_iqr_single_scan(spark):
-    """The melt reads the input once; both branches reuse the
-    persisted (column, value) collapse."""
+    """The melt reads the input once, and its (column, value) collapse
+    is consumed once: no persist, no join back onto it."""
     from data_validation_spark.operators.health import iqr_outlier_report
     df = spark.range(100).select(F.col("id").alias("a"),
                                  (F.col("id") * 2).alias("b"))
     plan = iqr_outlier_report(df, ["a", "b"])._jdf.queryExecution() \
         .executedPlan().toString()
-    # every consumer (quartile cumsum, fence counts, null counts)
-    # reads the persisted collapse, never re-derives it from the input
-    assert plan.count("InMemoryTableScan") >= 3
+    # quartiles, fence counts and null counts all come from one pass
+    # over the collapse, never re-derived from the input
+    assert plan.count("Range (") == 1
+    assert "InMemoryTableScan" not in plan and "Join" not in plan
 
 
 # -- join_explosion_report ---------------------------------------------------

@@ -19,6 +19,15 @@ from data_validation_spark.streaming.validate import (
 N = 1000
 
 
+@pytest.fixture(autouse=True)
+def stop_leftover_queries(spark):
+    """Stops any streaming query a test leaves running, so it does not
+    keep running micro-batches through the rest of the session."""
+    yield
+    for q in spark.streams.active:
+        q.stop()
+
+
 @pytest.fixture(scope="module")
 def stream_input(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("stream_in"))
