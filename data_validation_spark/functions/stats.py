@@ -91,8 +91,9 @@ def tokens_agg_exprs(name: str, expr: str,
     """Token-array profile (S5/S6): length stats + element min/max +
     null-array count, all without exploding rows.  The only place the
     full ``tokens`` column is read (P1: keep it out of other paths).
-    Length quantiles default to the histogram path (lengths are bounded
-    integers), so ``include_quantiles`` is False in practice."""
+    The exact-histogram path takes only ``numeric`` components, so the
+    profile always asks for length quantiles here: the GK sketch added
+    when ``include_quantiles`` is True."""
     c = F.expr(expr)
     length = F.when(c.isNotNull(), F.array_size(c).cast("double"))
     p = f"{name}__"

@@ -14,13 +14,25 @@ column evaluated in a single ``select`` over the table, violations are
 Every violation row carries the full original row (token-array-equality
 invariant, BASELINE.json:15), the partition label, and an
 ``errors: array<string>`` of failed constraint names.
+
+Each evaluation step has ONE implementation here, which
+``evaluate_constraints`` (and so ``validate_stream``) and
+``plans/runner.run_validation`` both call: ``resolve_dim`` (dimension
+lookup), ``set_violation_frame`` / ``violation_frame`` (violation rows),
+``violation_counts`` (per-partition counts of a violation frame) and
+``metric_value_thunks`` (metric measurements).  The runner's no-sink
+path adds counts-only plans (``uniqueness_violation_counts``,
+``referential_violation_counts`` and the fused stats pass) that never
+materialize violation rows.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass, field
+from functools import reduce
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_validation_spark.plans.suite import (
@@ -76,6 +88,19 @@ def _scoped_df(df: DataFrame, c: Constraint) -> DataFrame:
     return df.filter(scope) if scope is not None else df
 
 
+def _target(p: dict) -> Column:
+    """The value a component-style constraint checks: its ``expr`` if
+    given, else its ``component``."""
+    return F.expr(p["expr"] if "expr" in p else p["component"])
+
+
+def _flagged(frame: DataFrame, name: str, pcols: list[str]) -> DataFrame:
+    """A set-level violation frame's tail: ``errors = [name]`` plus the
+    partition label, the shape every violation frame shares."""
+    return (frame.withColumn("errors", F.array(F.lit(name)))
+            .withColumn("partition", partition_label_col(pcols)))
+
+
 def _row_violation_cond(c: Constraint) -> Column:
     p = c.params
     scope = _scope_cond(c)
@@ -87,7 +112,7 @@ def _row_violation_cond(c: Constraint) -> Column:
             Constraint(c.name, c.kind,
                        {k: v for k, v in p.items() if k != "where"}))
     if c.kind == "bounds":
-        col = F.expr((p["expr"] if "expr" in p else p["component"]))
+        col = _target(p)
         cond = F.lit(False)
         if p.get("min") is not None:
             cond = cond | (col < F.lit(p["min"]))
@@ -95,10 +120,10 @@ def _row_violation_cond(c: Constraint) -> Column:
             cond = cond | (col > F.lit(p["max"]))
         return F.coalesce(cond, F.lit(False))  # NULL → not a bounds error
     if c.kind == "in_domain":
-        col = F.expr((p["expr"] if "expr" in p else p["component"]))
+        col = _target(p)
         return col.isNotNull() & ~col.isin(list(p["values"]))
     if c.kind == "not_null":
-        return F.expr((p["expr"] if "expr" in p else p["component"])).isNull()
+        return _target(p).isNull()
     if c.kind == "expression":
         # row passes iff the SQL predicate is true; NULL result = violation
         return ~F.coalesce(F.expr(p["sql"]), F.lit(False))
@@ -109,7 +134,7 @@ def _row_violation_cond(c: Constraint) -> Column:
         # composes with numeric/date columns; NULL is not a pattern
         # violation (that's not_null's job).  Keep patterns RE2-portable
         # (no backrefs/lookaround) so oracles replay engine-identically.
-        col = F.expr((p["expr"] if "expr" in p else p["component"])).cast("string")
+        col = _target(p).cast("string")
         return col.isNotNull() & ~col.rlike(p["pattern"])
     raise ValueError(f"not a row-level constraint: {c.kind}")
 
@@ -164,14 +189,18 @@ def referential_violation_counts(df: DataFrame, column: str, dim: DataFrame,
     return {r["partition"]: r["n"] for r in rows}
 
 
+def _errors_col(row_cs: list[Constraint]) -> Column:
+    """``array<string>`` of the row-level constraints a row fails."""
+    return F.array_compact(F.array(
+        *[F.when(_row_violation_cond(c), F.lit(c.name)) for c in row_cs]))
+
+
 def row_level_violations(df: DataFrame, constraints: list[Constraint],
                          partition_cols: list[str]) -> DataFrame:
     """One vectorized pass: all row-level checks as boolean columns,
     violations = rows with a non-empty ``errors`` array."""
-    flags = [F.when(_row_violation_cond(c), F.lit(c.name))
-             for c in constraints]
     out = (df
-           .withColumn("errors", F.array_compact(F.array(*flags)))
+           .withColumn("errors", _errors_col(constraints))
            .withColumn("partition", partition_label_col(partition_cols)))
     return out.filter(F.array_size("errors") > 0)
 
@@ -185,16 +214,12 @@ def uniqueness_violations(df: DataFrame, keys: list[str],
     split across input partitions, so phase-1 reducers see bounded
     groups.  Phase 2 sums the partial counts per key (tiny — one row per
     distinct key per input split).  Keys with total > 1 are duplicated;
-    the violation rows are the original rows semi-joined on those keys.
+    the violation rows are the original rows semi-joined on those keys
+    (the keys ``duplicate_key_counts`` reports).
     """
-    partial = (df.select(*keys)
-               .withColumn("__split", F.spark_partition_id())
-               .groupBy(*keys, "__split").agg(F.count(F.lit(1)).alias("__c")))
-    dup_keys = (partial.groupBy(*keys).agg(F.sum("__c").alias("__n"))
-                .filter(F.col("__n") > 1).select(*keys))
-    return (df.join(dup_keys, on=keys, how="left_semi")
-            .withColumn("errors", F.array(F.lit(constraint_name)))
-            .withColumn("partition", partition_label_col(partition_cols)))
+    dup_keys = duplicate_key_counts(df, keys).select(*keys)
+    return _flagged(df.join(dup_keys, on=keys, how="left_semi"),
+                    constraint_name, partition_cols)
 
 
 def duplicate_key_counts(df: DataFrame, keys: list[str]) -> DataFrame:
@@ -222,9 +247,7 @@ def referential_violations(df: DataFrame, column: str, dim: DataFrame,
     dim_column = dim_column or column
     dim_keys = dim.select(F.col(dim_column).alias(column)).distinct()
     missing = df.join(F.broadcast(dim_keys), on=column, how="left_anti")
-    return (missing
-            .withColumn("errors", F.array(F.lit(constraint_name)))
-            .withColumn("partition", partition_label_col(partition_cols)))
+    return _flagged(missing, constraint_name, partition_cols)
 
 
 def split_valid_invalid(df: DataFrame, suite: ValidationSuite
@@ -244,8 +267,7 @@ def split_valid_invalid(df: DataFrame, suite: ValidationSuite
     if not row_cs:
         raise ValueError("split_valid_invalid: the suite has no "
                          "row-level constraints")
-    flags = [F.when(_row_violation_cond(c), F.lit(c.name)) for c in row_cs]
-    tagged = df.withColumn("errors", F.array_compact(F.array(*flags)))
+    tagged = df.withColumn("errors", _errors_col(row_cs))
     clean = tagged.filter(F.array_size("errors") == 0).drop("errors")
     quarantined = (tagged.filter(F.array_size("errors") > 0)
                    .withColumn("partition",
@@ -289,6 +311,77 @@ def validation_tags(df: DataFrame, suite: ValidationSuite) -> DataFrame:
         "tags", F.array_compact(F.array(*feature_tags, *error_tags)))
 
 
+def resolve_dim(spark: SparkSession, c: Constraint,
+                dims: dict[str, DataFrame] | None) -> DataFrame:
+    """The dimension of a referential or join_rule constraint: its
+    inline ``values`` as a one-column frame, else ``dims[params["dim"]]``.
+    A dimension missing from ``dims`` is a ValueError naming it."""
+    p = c.params
+    if "values" in p:
+        return spark.createDataFrame([(v,) for v in p["values"]],
+                                     f"{p['column']} string")
+    if not dims or p["dim"] not in dims:
+        raise ValueError(
+            f"{c.kind} constraint {c.name!r}: dimension {p['dim']!r} "
+            f"not provided in dims (got: {sorted(dims or {})})")
+    return dims[p["dim"]]
+
+
+#: set-level kinds with one violation frame per constraint
+#: (completeness fuses all its constraints into one aggregate instead)
+_FRAME_KINDS = ("unique", "referential", "fd", "join_rule")
+
+
+def set_violation_frame(df: DataFrame, c: Constraint, pcols: list[str],
+                        dims: dict[str, DataFrame] | None) -> DataFrame:
+    """Violation rows of one ``unique`` / ``referential`` / ``fd`` /
+    ``join_rule`` constraint, its ``where`` scope applied first."""
+    scoped = _scoped_df(df, c)
+    p = c.params
+    if c.kind == "unique":
+        return uniqueness_violations(scoped, list(p["keys"]), pcols, c.name)
+    if c.kind == "referential":
+        return referential_violations(
+            scoped, p["column"], resolve_dim(df.sparkSession, c, dims),
+            pcols, p.get("dim_column"), c.name)
+    if c.kind == "fd":
+        return fd_violation_frame(scoped, c, pcols)
+    if c.kind == "join_rule":
+        return join_rule_violation_frame(scoped, c, dims, pcols)
+    raise ValueError(f"no violation frame for constraint kind {c.kind!r}")
+
+
+def violation_frame(df: DataFrame, constraints: list[Constraint],
+                    pcols: list[str],
+                    dims: dict[str, DataFrame] | None = None) -> DataFrame:
+    """Every violation row of ``constraints`` (input columns +
+    ``partition`` + ``errors``): the row-level pass, the fused
+    completeness frames and one frame per other set-level constraint,
+    unioned.  No row- or set-level constraint gives an empty frame of
+    the same shape.  Lazy: no action runs."""
+    row_cs = [c for c in constraints if c.kind in ROW_LEVEL_KINDS]
+    frames = [row_level_violations(df, row_cs, pcols)] if row_cs else []
+    comp_cs = [c for c in constraints if c.kind == "completeness"]
+    frames += [f for _, f in completeness_violation_frames(df, comp_cs, pcols)]
+    frames += [set_violation_frame(df, c, pcols, dims)
+               for c in constraints if c.kind in _FRAME_KINDS]
+    if not frames:
+        return (df.limit(0)
+                .withColumn("errors", F.array(F.lit("")))
+                .withColumn("partition", partition_label_col(pcols)))
+    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True),
+                  frames)
+
+
+def violation_counts(violations: DataFrame) -> DataFrame:
+    """``(partition, constraint, n_violations)`` of a violation frame:
+    a row failing two constraints counts once under each.  Lazy."""
+    return (violations
+            .select("partition", F.explode("errors").alias("constraint"))
+            .groupBy("partition", "constraint")
+            .agg(F.count(F.lit(1)).alias("n_violations")))
+
+
 @dataclass
 class ConstraintRun:
     """Distributed outputs of one evaluation pass."""
@@ -300,76 +393,31 @@ class ConstraintRun:
 def evaluate_constraints(df: DataFrame, suite: ValidationSuite,
                          dims: dict[str, DataFrame] | None = None
                          ) -> ConstraintRun:
-    """Evaluate all row/set-level constraints of ``suite``.
+    """Evaluate all row/set-level and metric constraints of ``suite``.
 
-    ``dims`` maps dimension names (referenced by referential constraints
-    via ``params["dim"]``) to DataFrames; a referential constraint may
-    instead inline ``params["values"]``.  Drift constraints are profile-
-    level and handled by operators/contrast.py + plans/runner.py.
+    ``dims`` maps dimension names (referenced by referential and
+    join_rule constraints via ``params["dim"]``) to DataFrames; a
+    referential constraint may instead inline ``params["values"]``.
+    Drift constraints are profile-level and handled by
+    operators/contrast.py + plans/runner.py.
     """
-    dims = dims or {}
     pcols = suite.partition_cols
-    frames: list[DataFrame] = []
-    names: list[str] = []
-
     constraints = suite.resolved_constraints()
-    row_cs = [c for c in constraints if c.kind in ROW_LEVEL_KINDS]
-    if row_cs:
-        frames.append(row_level_violations(df, row_cs, pcols))
-        names += [c.name for c in row_cs]
-
-    comp_cs = [c for c in constraints if c.kind == "completeness"]
-    for name, frame in completeness_violation_frames(df, comp_cs, pcols):
-        frames.append(frame)
-        names.append(name)
-
-    for c in constraints:
-        if c.kind == "unique":
-            frames.append(uniqueness_violations(
-                _scoped_df(df, c), list(c.params["keys"]), pcols, c.name))
-            names.append(c.name)
-        elif c.kind == "fd":
-            frames.append(fd_violation_frame(_scoped_df(df, c), c, pcols))
-            names.append(c.name)
-        elif c.kind == "join_rule":
-            frames.append(join_rule_violation_frame(
-                _scoped_df(df, c), c, dims, pcols))
-            names.append(c.name)
-        elif c.kind == "referential":
-            p = c.params
-            if "values" in p:
-                spark = df.sparkSession
-                dim = spark.createDataFrame(
-                    [(v,) for v in p["values"]], f"{p['column']} string")
-            else:
-                dim = dims[p["dim"]]
-            frames.append(referential_violations(
-                _scoped_df(df, c), p["column"], dim, pcols,
-                p.get("dim_column"), c.name))
-            names.append(c.name)
-
-    spark = df.sparkSession
-    if frames:
-        violations = frames[0]
-        for f in frames[1:]:
-            violations = violations.unionByName(f, allowMissingColumns=True)
-    else:
-        violations = (df.limit(0)
-                      .withColumn("errors", F.array(F.lit("")))
-                      .withColumn("partition", partition_label_col(pcols)))
+    violations = violation_frame(df, constraints, pcols, dims)
+    names = ([c.name for c in constraints if c.kind in ROW_LEVEL_KINDS]
+             + [c.name for c in constraints if c.kind == "completeness"]
+             + [c.name for c in constraints if c.kind in _FRAME_KINDS])
 
     # verdict universe: every (partition × constraint), so partitions with
     # zero violations still get an explicit passed=true row
+    spark = df.sparkSession
     parts = (df.select(partition_label_col(pcols).alias("partition"))
              .distinct())
     cons = spark.createDataFrame([(n,) for n in names] or [("<none>",)],
                                  "constraint string")
-    counts = (violations
-              .select("partition", F.explode("errors").alias("constraint"))
-              .groupBy("partition", "constraint")
-              .agg(F.count(F.lit(1)).alias("n_violations")))
     verdicts = (parts.crossJoin(F.broadcast(cons))
-                .join(counts, ["partition", "constraint"], "left")
+                .join(violation_counts(violations),
+                      ["partition", "constraint"], "left")
                 .withColumn("n_violations",
                             F.coalesce("n_violations", F.lit(0)))
                 .withColumn("passed", F.col("n_violations") == 0))
@@ -381,12 +429,9 @@ def evaluate_constraints(df: DataFrame, suite: ValidationSuite,
     # they contribute no violation rows by definition (see METRIC_KINDS)
     metric_cs = [c for c in constraints if c.kind in METRIC_KINDS]
     if metric_cs:
-        vals = metric_fused_values(df, metric_cs, pcols)
-        for c in metric_cs:
-            if c.kind == "distinctness":
-                vals[c.name] = distinctness_values(df, c, pcols)
-            elif c.kind == "ordering":
-                vals[c.name] = ordering_values(df, c, pcols)
+        vals: dict[str, dict] = {}
+        for measure in metric_value_thunks(df, metric_cs, pcols):
+            vals.update(measure())
         observed = sorted({p for d in vals.values() for p in d}) \
             or ["<global>"]
         mrows = metric_verdict_rows(vals, metric_cs, observed)
@@ -413,8 +458,7 @@ def completeness_violation_frames(df: DataFrame, comp_cs: list[Constraint],
     (shared by evaluate_constraints and run_validation)."""
     if not comp_cs:
         return []
-    exprs = {c.name: F.expr((c.params["expr"] if "expr" in c.params else c.params["component"]))
-             for c in comp_cs}
+    exprs = {c.name: _target(c.params) for c in comp_cs}
     scopes = {c.name: _scope_cond(c) for c in comp_cs}
 
     def _ratio(c: Constraint) -> Column:
@@ -434,14 +478,11 @@ def completeness_violation_frames(df: DataFrame, comp_cs: list[Constraint],
     for i, c in enumerate(comp_cs):
         null_in_scope = exprs[c.name].isNull() if scopes[c.name] is None \
             else (scopes[c.name] & exprs[c.name].isNull())
-        out.append((c.name,
-                    with_r.filter(
-                        (F.col(f"__r_{i}")
-                         < F.lit(float(c.params["min_ratio"])))
-                        & null_in_scope)
-                    .drop(*[f"__r_{j}" for j in range(len(comp_cs))])
-                    .withColumn("errors", F.array(F.lit(c.name)))
-                    .withColumn("partition", partition_label_col(pcols))))
+        bad = (with_r.filter((F.col(f"__r_{i}")
+                              < F.lit(float(c.params["min_ratio"])))
+                             & null_in_scope)
+               .drop(*[f"__r_{j}" for j in range(len(comp_cs))]))
+        out.append((c.name, _flagged(bad, c.name, pcols)))
     return out
 
 
@@ -454,9 +495,8 @@ def fd_violation_frame(df: DataFrame, c: Constraint,
     bad_keys = functional_dependency_violations(
         df, list(p["determinant"]), p["dependent"]
     ).select(*p["determinant"])
-    return (df.join(bad_keys, list(p["determinant"]), "left_semi")
-            .withColumn("errors", F.array(F.lit(c.name)))
-            .withColumn("partition", partition_label_col(pcols)))
+    return _flagged(df.join(bad_keys, list(p["determinant"]), "left_semi"),
+                    c.name, pcols)
 
 
 def join_rule_violation_frame(df: DataFrame, c: Constraint,
@@ -471,22 +511,17 @@ def join_rule_violation_frame(df: DataFrame, c: Constraint,
     (alias in the dim frame); violations keep df's columns only so the
     frame shape matches every other kind."""
     p = c.params
-    if not dims or p["dim"] not in dims:
-        raise ValueError(
-            f"join_rule constraint {c.name!r}: dimension {p['dim']!r} "
-            f"not provided in dims (got: {sorted(dims or {})})")
+    dim = resolve_dim(df.sparkSession, c, dims)
     # dims share referential's contract: broadcast-sized by definition
     # (the fact table is the 10^12-row side and must never shuffle for
     # a suite constraint; a table-scale "dimension" belongs in a
     # pre-bucketed upstream join, not here).  Explicit hint because
     # driver-built dims (createDataFrame → ExistingRDD) carry no stats
     # for the auto-broadcast threshold.
-    joined = df.join(F.broadcast(dims[p["dim"]]), on=list(p["on"]),
-                     how="left")
-    return (joined.filter(~F.coalesce(F.expr(p["sql"]), F.lit(False)))
-            .select(*df.columns)
-            .withColumn("errors", F.array(F.lit(c.name)))
-            .withColumn("partition", partition_label_col(pcols)))
+    joined = df.join(F.broadcast(dim), on=list(p["on"]), how="left")
+    return _flagged(
+        joined.filter(~F.coalesce(F.expr(p["sql"]), F.lit(False)))
+        .select(*df.columns), c.name, pcols)
 
 
 def functional_dependency_violations(df: DataFrame, determinant: list[str],
@@ -517,17 +552,20 @@ def functional_dependency_violations(df: DataFrame, determinant: list[str],
 # METRIC assertions (deequ hasSize / hasMean / hasDistinctness / freshness)
 # ---------------------------------------------------------------------------
 #
-# Shared by evaluate_constraints and plans/runner.run_validation so both
-# paths compute identical verdicts:
-#   * value scan  — metric_fused_values (ONE column-pruned grouped agg for
-#                   every stat_bounds + freshness + row_count constraint) and
-#                   distinctness_values (one two-phase value-collapse per
-#                   constraint; different group keys cannot fuse);
-#   * evaluation  — metric_breach (driver-side, ~numPartitions rows).
-# run_validation additionally reads stat_bounds values straight from the
-# fused profile (zero extra scans); a parity test pins the two sources to
-# identical verdicts.
-
+# evaluate_constraints and plans/runner.run_validation measure and judge
+# metric constraints through the same functions, so both paths compute
+# identical verdicts:
+#   * measurement — metric_value_thunks: ONE column-pruned grouped agg
+#                   (metric_fused_frame) for every stat_bounds + freshness
+#                   + row_count constraint, plus one action per
+#                   distinctness (a two-phase value-collapse) and ordering
+#                   (a key-hash window) constraint — different group keys
+#                   cannot fuse;
+#   * evaluation  — metric_verdict_rows / metric_breach (driver-side,
+#                   ~numPartitions rows).
+# run_validation reads unscoped stat_bounds values straight from the
+# fused profile instead (profile_stat_values, zero extra scans); a parity
+# test pins the two sources to identical verdicts.
 
 
 def as_of_micros(params: dict) -> int:
@@ -547,7 +585,7 @@ def as_of_micros(params: dict) -> int:
 
 def _stat_bounds_agg(c: Constraint) -> Column:
     p = c.params
-    raw = F.expr((p["expr"] if "expr" in p else p["component"]))
+    raw = _target(p)
     scope = _scope_cond(c)
     # conditional aggregation: `when` without `otherwise` yields NULL
     # for out-of-scope rows and every agg below ignores NULLs, so a
@@ -597,9 +635,7 @@ def metric_fused_frame(df: DataFrame, metric_cs: list[Constraint],
             # here regardless
             aggs.append(_stat_bounds_agg(c).alias(f"__m_{len(keep)}"))
         elif c.kind == "freshness":
-            ts = F.expr((c.params["expr"] if "expr" in c.params else c.params["component"])) \
-                .cast("timestamp")
-            us = F.unix_micros(ts)
+            us = F.unix_micros(_target(c.params).cast("timestamp"))
             aggs.append(F.max(us if scope is None else F.when(scope, us))
                         .alias(f"__m_{len(keep)}"))
         elif c.kind == "row_count":
@@ -615,22 +651,35 @@ def metric_fused_frame(df: DataFrame, metric_cs: list[Constraint],
     return df.groupBy(label).agg(*aggs), keep
 
 
-def metric_fused_values(df: DataFrame, metric_cs: list[Constraint],
-                        pcols: list[str],
-                        skip_stat_bounds: bool = False
-                        ) -> dict[str, dict[str, object]]:
-    """Collected form of ``metric_fused_frame``: ``values[constraint]
-    [partition] = measured value`` (freshness values are epoch micros).
-    Driver-bounded: one row per logical partition."""
+def metric_value_thunks(df: DataFrame, metric_cs: list[Constraint],
+                        pcols: list[str], skip_stat_bounds: bool = False
+                        ) -> list[Callable[[], dict[str, dict]]]:
+    """The independent actions that measure ``metric_cs``, as thunks
+    each returning ``{constraint: {partition: value}}`` (freshness
+    values are epoch micros): one for the fused metric aggregate when it
+    has anything to measure, one per distinctness and ordering
+    constraint.  No metric constraint, no thunk.  ``skip_stat_bounds``
+    leaves unscoped stat_bounds to ``profile_stat_values``.
+    Driver-bounded: one row per logical partition per action."""
+    thunks = []
     frame, keep = metric_fused_frame(df, metric_cs, pcols,
                                      skip_stat_bounds)
-    if frame is None:
-        return {}
-    out: dict[str, dict[str, object]] = {c.name: {} for c in keep}
-    for r in frame.collect():
-        for i, c in enumerate(keep):
-            out[c.name][r["__label"]] = r[f"__m_{i}"]
-    return out
+    if frame is not None:
+        def fused() -> dict[str, dict]:
+            out: dict[str, dict] = {c.name: {} for c in keep}
+            for r in frame.collect():
+                for i, c in enumerate(keep):
+                    out[c.name][r["__label"]] = r[f"__m_{i}"]
+            return out
+        thunks.append(fused)
+    for c in metric_cs:
+        if c.kind == "distinctness":
+            thunks.append(lambda c=c: {c.name: distinctness_values(
+                df, c, pcols)})
+        elif c.kind == "ordering":
+            thunks.append(lambda c=c: {c.name: ordering_values(
+                df, c, pcols)})
+    return thunks
 
 
 def distinctness_frame(df: DataFrame, c: Constraint,
@@ -686,8 +735,7 @@ def ordering_values(df: DataFrame, c: Constraint,
     pass).  Honors ``where`` by filtering before the window."""
     p = c.params
     df = _scoped_df(df, c)
-    ts_expr = (p["expr"] if "expr" in p else p["component"])
-    ts_us = F.unix_micros(F.expr(ts_expr).cast("timestamp"))
+    ts_us = F.unix_micros(_target(p).cast("timestamp"))
     w = (Window.partitionBy("__k").orderBy("__a")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     tagged = (df.select(partition_label_col(pcols).alias("__label"),
@@ -726,6 +774,16 @@ def stat_value_from_profile(profile, c: Constraint):
         out[part] = getattr(pc.stats, stat, None) \
             if pc is not None and pc.stats is not None else None
     return out
+
+
+def profile_stat_values(profile, metric_cs: list[Constraint]
+                        ) -> dict[str, dict]:
+    """``{constraint: {partition: value}}`` for the unscoped stat_bounds
+    constraints of ``metric_cs`` — the ones
+    ``metric_value_thunks(skip_stat_bounds=True)`` leaves out — read from
+    a profile built over the same rows."""
+    return {c.name: stat_value_from_profile(profile, c) for c in metric_cs
+            if c.kind == "stat_bounds" and "where" not in c.params}
 
 
 def metric_breach(c: Constraint, value) -> bool:

@@ -27,19 +27,16 @@ from data_validation_spark.operators.constraints import (
     _scope_cond,
     _scoped_df,
     completeness_violation_frames,
-    distinctness_values,
-    fd_violation_frame,
-    join_rule_violation_frame,
-    metric_fused_values,
+    metric_value_thunks,
     metric_verdict_rows,
-    ordering_values,
     partition_label_col,
+    profile_stat_values,
     referential_violation_counts,
-    referential_violations,
-    row_level_violations,
-    stat_value_from_profile,
+    resolve_dim,
+    set_violation_frame,
     uniqueness_violation_counts,
-    uniqueness_violations,
+    violation_counts,
+    violation_frame,
 )
 from data_validation_spark.operators.contrast import DriftReport, contrast
 from data_validation_spark.operators.profile import (
@@ -216,7 +213,7 @@ def run_validation(spark: SparkSession, df: DataFrame, suite: ValidationSuite,
                 row_conds[c.name] = _not_in_keys(c, vals)
                 inline_ref.add(c.name)
         elif sink is None:
-            dim_refs.append(c)
+            dim_refs.append((c, resolve_dim(spark, c, dims)))
 
     # The fused stats pass and every set-level count below are
     # INDEPENDENT Spark actions — assembled as thunks and submitted
@@ -230,9 +227,8 @@ def run_validation(spark: SparkSession, df: DataFrame, suite: ValidationSuite,
     def _fused():
         conds = dict(row_conds)
         over_cap: dict[str, dict[str, int]] = {}
-        for c in dim_refs:
+        for c, dim in dim_refs:
             p = c.params
-            dim = _resolve_dim(spark, p, dims)
             keys = _dim_keys(dim, p.get("dim_column") or p["column"])
             if keys is None:
                 over_cap[c.name] = referential_violation_counts(
@@ -245,30 +241,17 @@ def run_validation(spark: SparkSession, df: DataFrame, suite: ValidationSuite,
             name=suite.name, concurrent_jobs=concurrent_jobs)
         return profile, counts, over_cap
 
-    actions: dict[str, object] = {"__fused__": _fused}
+    # action keys: "__fused__", ("metric", i) and ("set", name)
+    actions: dict[object, object] = {"__fused__": _fused}
 
     # -- metric assertions (deequ hasSize/hasMean/freshness family) ------
-    # stat_bounds reads the fused profile (zero extra scans — evaluated
-    # after the pool below); freshness + row_count share ONE column-
-    # pruned grouped agg; each distinctness is its own value-collapse
-    # pass (distinct group keys cannot fuse).  All are verdict-only.
+    # unscoped stat_bounds read the fused profile (zero extra scans —
+    # evaluated after the pool below); every other metric constraint is
+    # measured by the shared actions.  All are verdict-only.
     metric_cs = [c for c in suite.constraints if c.kind in METRIC_KINDS]
-    # `where`-scoped stat_bounds cannot read the (unscoped) fused
-    # profile — they join freshness/row_count in the shared metric scan
-    scan_metric_cs = [c for c in metric_cs
-                      if c.kind in ("freshness", "row_count")
-                      or (c.kind == "stat_bounds" and "where" in c.params)]
-    if scan_metric_cs:
-        actions["__metric_fused__"] = (
-            lambda: metric_fused_values(df, scan_metric_cs, pcols,
-                                        skip_stat_bounds=True))
-    for c in metric_cs:
-        if c.kind == "distinctness":
-            actions[f"__dist__{c.name}"] = (
-                lambda c=c: distinctness_values(df, c, pcols))
-        elif c.kind == "ordering":
-            actions[f"__dist__{c.name}"] = (
-                lambda c=c: ordering_values(df, c, pcols))
+    for i, measure in enumerate(metric_value_thunks(
+            df, metric_cs, pcols, skip_stat_bounds=True)):
+        actions[("metric", i)] = measure
 
     # -- set-level constraints -------------------------------------------
     # Without a sink: counts-only, column-pruned scans per constraint
@@ -281,24 +264,18 @@ def run_validation(spark: SparkSession, df: DataFrame, suite: ValidationSuite,
     set_names = [c.name for c in suite.constraints
                  if c.kind in ("unique", "fd", "completeness", "join_rule")
                  or (c.kind == "referential" and c.name not in inline_ref)]
-    set_counts: dict[str, dict[str, int]] = {}
     violations: DataFrame | None = None
     if sink is not None:
-        violations = _violation_rows(spark, df, suite, dims)
+        violations = violation_frame(df, suite.constraints, pcols, dims)
         violations.persist(StorageLevel.MEMORY_AND_DISK)
         if set_names:
-            vframe = violations
+            counted = (violation_counts(violations)
+                       .where(F.col("constraint").isin(set_names)))
 
             def _counted():
-                rows = (vframe
-                        .select("partition",
-                                F.explode("errors").alias("constraint"))
-                        .where(F.col("constraint").isin(set_names))
-                        .groupBy("partition", "constraint")
-                        .agg(F.count(F.lit(1)).alias("n")).collect())
                 out: dict[str, dict[str, int]] = {n: {} for n in set_names}
-                for r in rows:
-                    out[r["constraint"]][r["partition"]] = r["n"]
+                for r in counted.collect():
+                    out[r["constraint"]][r["partition"]] = r["n_violations"]
                 return out
 
             actions["__viol_counts__"] = _counted
@@ -312,42 +289,38 @@ def run_validation(spark: SparkSession, df: DataFrame, suite: ValidationSuite,
 
         comp_cs = [c for c in suite.constraints if c.kind == "completeness"]
         for name, frame in completeness_violation_frames(df, comp_cs, pcols):
-            actions[name] = (lambda fr=frame: _frame_counts(fr))
+            actions[("set", name)] = lambda fr=frame: _frame_counts(fr)
         for c in suite.constraints:
             if c.kind == "unique":
-                actions[c.name] = (
+                actions[("set", c.name)] = (
                     lambda c=c, keys=list(c.params["keys"]):
                     uniqueness_violation_counts(
                         _scoped_df(df, c), keys, pcols))
             elif (c.kind == "referential" and c.name not in inline_ref
                   and "values" in c.params):
                 p = c.params
-                dim = _resolve_dim(spark, p, dims)
-                actions[c.name] = (
+                dim = resolve_dim(spark, c, dims)
+                actions[("set", c.name)] = (
                     lambda c=c, p=p, dim=dim: referential_violation_counts(
                         _scoped_df(df, c), p["column"], dim, pcols,
                         p.get("dim_column")))
-            elif c.kind == "fd":
-                actions[c.name] = (
-                    lambda c=c: _frame_counts(fd_violation_frame(
-                        _scoped_df(df, c), c, pcols)))
-            elif c.kind == "join_rule":
-                actions[c.name] = (
-                    lambda c=c: _frame_counts(join_rule_violation_frame(
-                        _scoped_df(df, c), c, dims, pcols)))
+            elif c.kind in ("fd", "join_rule"):
+                frame = set_violation_frame(df, c, pcols, dims)
+                actions[("set", c.name)] = (
+                    lambda fr=frame: _frame_counts(fr))
 
     results = run_concurrently(spark, actions, concurrent_jobs)
     profile, counts_by_part, over_cap = results.pop("__fused__")
-    inline_ref |= {c.name for c in dim_refs} - over_cap.keys()
-    set_counts.update(over_cap)
+    inline_ref |= {c.name for c, _ in dim_refs} - over_cap.keys()
+    set_counts: dict[str, dict[str, int]] = dict(over_cap)
     set_counts.update(results.pop("__viol_counts__", {}))
-    metric_values: dict[str, dict] = results.pop("__metric_fused__", {})
-    for k in [k for k in results if k.startswith("__dist__")]:
-        metric_values[k[len("__dist__"):]] = results.pop(k)
-    set_counts.update(results)
-    for c in metric_cs:
-        if c.kind == "stat_bounds" and "where" not in c.params:
-            metric_values[c.name] = stat_value_from_profile(profile, c)
+    metric_values: dict[str, dict] = {}
+    for (kind, name), got in results.items():
+        if kind == "metric":
+            metric_values.update(got)
+        else:
+            set_counts[name] = got
+    metric_values.update(profile_stat_values(profile, metric_cs))
 
     # -- verdict assembly (driver-side; universe = every observed
     #    partition × every constraint, explicit passed=true rows) --------
@@ -421,15 +394,6 @@ def partition_lbl(row, pcols: list[str]) -> str:
     return "/".join(f"{c}={row[c]}" for c in pcols)
 
 
-def _resolve_dim(spark: SparkSession, params: dict,
-                 dims: dict[str, DataFrame] | None) -> DataFrame:
-    """Referential dimension: inline value list or a named DataFrame."""
-    if "values" in params:
-        return spark.createDataFrame([(v,) for v in params["values"]],
-                                     f"{params['column']} string")
-    return (dims or {})[params["dim"]]
-
-
 def _dim_keys(dim: DataFrame, dim_col: str) -> list | None:
     """The dimension's distinct non-NULL keys, or None when there are
     more than ``_REF_INLINE_MAX``.  The raw keys are probed first and
@@ -457,46 +421,6 @@ def _not_in_keys(c, keys: list) -> F.Column:
     cond = col.isNull() | ~col.isin(keys)
     scope = _scope_cond(c)
     return cond if scope is None else scope & cond
-
-
-def _violation_rows(spark: SparkSession, df: DataFrame,
-                    suite: ValidationSuite,
-                    dims: dict[str, DataFrame] | None) -> DataFrame:
-    """Full violation rows (original columns + partition + errors) —
-    the sink payload.  Kept OUT of the verdict path: verdict counts
-    come from the fused stats pass and column-pruned count jobs, so a
-    no-sink run never pays the row-materialization scans."""
-    pcols = suite.partition_cols
-    frames: list[DataFrame] = []
-    row_cs = [c for c in suite.constraints if c.kind in ROW_LEVEL_KINDS]
-    if row_cs:
-        frames.append(row_level_violations(df, row_cs, pcols))
-    comp_cs = [c for c in suite.constraints if c.kind == "completeness"]
-    frames.extend(f for _, f in
-                  completeness_violation_frames(df, comp_cs, pcols))
-    for c in suite.constraints:
-        if c.kind == "unique":
-            frames.append(uniqueness_violations(
-                _scoped_df(df, c), list(c.params["keys"]), pcols, c.name))
-        elif c.kind == "referential":
-            p = c.params
-            frames.append(referential_violations(
-                _scoped_df(df, c), p["column"],
-                _resolve_dim(spark, p, dims), pcols,
-                p.get("dim_column"), c.name))
-        elif c.kind == "fd":
-            frames.append(fd_violation_frame(_scoped_df(df, c), c, pcols))
-        elif c.kind == "join_rule":
-            frames.append(join_rule_violation_frame(
-                _scoped_df(df, c), c, dims, pcols))
-    if not frames:
-        return (df.limit(0)
-                .withColumn("errors", F.array(F.lit("")))
-                .withColumn("partition", partition_label_col(pcols)))
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f, allowMissingColumns=True)
-    return out
 
 
 @dataclass

@@ -25,7 +25,8 @@ Two shapes, matching Spark's two streaming idioms:
   sharded by a hash bucket of the key; the default state is a
   FIXED-SIZE Bloom filter per shard (constant bytes at any key count,
   no false negatives), with an exact seen-key-list mode for small key
-  spaces; both expire on a processing-time timeout.
+  spaces; a shard's state that has been idle for the TTL is dropped
+  when the shard's next keys arrive.
 
 At scale: foreachBatch inherits all batch-path properties (map-side
 partials, broadcast joins); the windowed agg's state is bounded by
@@ -170,7 +171,14 @@ def streaming_duplicates(stream_df: DataFrame, key_col: str = "doc_id",
     emits ``(key, shard, n_dup)`` for every key that arrived again
     after its first-ever occurrence (``n_dup`` = duplicate arrivals in
     this batch); state expires after ``state_ttl_ms`` of shard
-    inactivity (processing-time timeout), bounding state lifetime.
+    inactivity: each shard stores the processing time of its last
+    batch (``t_ms``), and state that has been idle for at least the TTL
+    is treated as empty when the shard's next keys arrive.  No timeout
+    is registered, so an ``availableNow`` drain ends by itself (a
+    processing-time timeout makes Spark plan one more no-data batch
+    forever).  The state schema gained ``t_ms``: checkpoints written
+    by the earlier timeout-based version of this operator cannot be
+    restored and must restart.
 
     ``state_mode`` picks the shard state representation:
 
@@ -218,29 +226,33 @@ def streaming_duplicates(stream_df: DataFrame, key_col: str = "doc_id",
                                 "shard": shard_id,
                                 "n_dup": n_dup[keep]})
 
+    def live_state(state: GroupState, now_ms: int):
+        """The shard's state without its ``t_ms``, or None when there is
+        none or it has been idle for at least ``state_ttl_ms``."""
+        if not state.exists:
+            return None
+        *value, t_ms = state.get
+        return value if now_ms - t_ms < state_ttl_ms else None
+
     def detect_exact(key, pdfs: Iterator[pd.DataFrame],
                      state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        (seen,) = state.get if state.exists else ([],)
+        now_ms = state.getCurrentProcessingTimeMs()
+        (seen,) = live_state(state, now_ms) or ([],)
         seen_set = set(seen)
         counts = batch_counts(pdfs)
         first = ~counts.index.isin(seen_set)
         seen_set.update(counts.index)
-        state.update((list(seen_set),))
-        state.setTimeoutDuration(state_ttl_ms)
+        state.update((list(seen_set), now_ms))
         yield from emit(key[0], counts, first)
 
     def detect_bloom(key, pdfs: Iterator[pd.DataFrame],
                      state: GroupState) -> Iterator[pd.DataFrame]:
         import numpy as np
 
-        if state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            raw, n_seen = state.get
+        now_ms = state.getCurrentProcessingTimeMs()
+        live = live_state(state, now_ms)
+        if live is not None:
+            raw, n_seen = live
             bloom = np.frombuffer(bytes(raw), dtype=np.uint8).copy()
         else:
             bloom, n_seen = np.zeros(n_bits // 8, dtype=np.uint8), 0
@@ -252,19 +264,19 @@ def streaming_duplicates(stream_df: DataFrame, key_col: str = "doc_id",
             n_seen += int((~seen_before).sum())
         else:
             seen_before = np.zeros(0, dtype=bool)
-        state.update((bytearray(bloom.tobytes()), n_seen))
-        state.setTimeoutDuration(state_ttl_ms)
+        state.update((bytearray(bloom.tobytes()), n_seen, now_ms))
         yield from emit(key[0], counts, ~seen_before)
 
     detect = detect_bloom if state_mode == "bloom" else detect_exact
-    state_schema = ("bloom binary, n_seen long" if state_mode == "bloom"
-                    else "seen array<string>")
+    state_schema = ("bloom binary, n_seen long, t_ms long"
+                    if state_mode == "bloom"
+                    else "seen array<string>, t_ms long")
     return (keyed.groupBy("__shard").applyInPandasWithState(
         detect,
         outputStructType="key string, shard long, n_dup long",
         stateStructType=state_schema,
         outputMode="update",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout))
+        timeoutConf=GroupStateTimeout.NoTimeout))
 
 
 STREAM_DRIFT_TABLE = "stream_drift"

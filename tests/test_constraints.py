@@ -327,16 +327,95 @@ def test_runner_rejects_unknown_constraint_kind(spark):
         run_validation(spark, df, suite, resume=False)
 
 
-def test_join_rule_missing_dim_is_descriptive(spark):
+@pytest.mark.parametrize("caller", ["evaluate_constraints", "run_validation",
+                                    "run_validation_sink"])
+@pytest.mark.parametrize("kind", ["join_rule", "referential"])
+def test_missing_dim_is_descriptive(spark, tmp_path, kind, caller):
     """ADVICE r3 (low): dims=None or a missing dimension name must be a
-    clear ValueError naming the dimension, not a bare TypeError."""
+    clear ValueError naming the dimension, not a bare TypeError or
+    KeyError — for referential and join_rule constraints alike, and
+    whichever caller resolves the dimension."""
+    from data_validation_spark.plans.runner import run_validation
+    from data_validation_spark.sources.table_provider import TableProvider
     df = spark.createDataFrame([(1, 10)], "k long, user_id long")
+    params = ({"dim": "signups", "on": ["user_id"], "sql": "true"}
+              if kind == "join_rule"
+              else {"column": "user_id", "dim": "signups"})
     suite = ValidationSuite(
-        name="jr", components=[Component("k", "numeric")],
-        constraints=[Constraint("r", "join_rule",
-                                {"dim": "signups", "on": ["user_id"],
-                                 "sql": "true"})])
-    with pytest.raises(ValueError, match="'signups' not provided"):
-        evaluate_constraints(df, suite)
-    with pytest.raises(ValueError, match="'signups' not provided"):
-        evaluate_constraints(df, suite, dims={"other": df})
+        name="dim", components=[Component("k", "numeric")],
+        constraints=[Constraint("r", kind, params)])
+    for dims in (None, {"other": df}):
+        with pytest.raises(ValueError, match=f"{kind} constraint 'r': "
+                                             "dimension 'signups' not provided"):
+            if caller == "evaluate_constraints":
+                evaluate_constraints(df, suite, dims=dims)
+            else:
+                sink = (TableProvider(spark, str(tmp_path / "sink"))
+                        if caller == "run_validation_sink" else None)
+                run_validation(spark, df, suite, sink=sink, dims=dims,
+                               resume=False)
+
+
+def test_sink_violation_rows_match_evaluate_constraints(spark, tmp_path):
+    """The violation ROWS ``run_validation`` writes to its sink and the
+    ones ``evaluate_constraints`` returns are the same multiset of
+    (key, sorted errors), over every row- and set-level kind plus
+    ``where``-scoped constraints."""
+    import json
+    from data_validation_spark.plans.runner import run_validation
+    from data_validation_spark.sources.table_provider import TableProvider
+    rows = [  # k, id, x, cat, code, src, user_id, v, part
+        (1, 1, 1.0, "a", "AB", "web", 10, "p", "p0"),
+        (2, 2, 11.0, "c", "ab", "web", 10, "q", "p0"),
+        (3, 2, 5.0, "b", None, "books", 11, "r", "p1"),
+        (4, 3, 4.0, "a", "CD", "code", 99, None, "p1"),
+        (5, 4, 4.0, None, "EF", None, 11, "s", "p0"),
+        (6, 4, 2.0, "b", "GH", "web", 11, "t", "p1"),
+        (7, 5, 2.0, "a", "IJ", "web", 10, "u", "p1"),
+        (8, 5, 2.0, "a", "KL", "books", 10, "u", "p1"),
+    ]
+    df = spark.createDataFrame(
+        rows, "k long, id long, x double, cat string, code string, "
+              "src string, user_id long, v string, part string")
+    dims = {"srcs": spark.createDataFrame([("web",), ("books",)],
+                                          "src string"),
+            "signups": spark.createDataFrame([(10, 0), (11, 4)],
+                                             "user_id long, min_k long")}
+    constraints = [
+        Constraint("x_bounds", "bounds", {"component": "x", "min": 0,
+                                          "max": 10}),
+        Constraint("x_bounds_p0", "bounds", {"component": "x", "max": 3,
+                                             "where": "part = 'p0'"}),
+        Constraint("cat_domain", "in_domain", {"component": "cat",
+                                               "values": ["a", "b"]}),
+        Constraint("code_nn", "not_null", {"component": "code"}),
+        Constraint("x_not_5", "expression", {"sql": "x <> 5"}),
+        Constraint("code_pat", "pattern", {"component": "code",
+                                           "pattern": "^[A-Z]{2}$"}),
+        Constraint("id_unique", "unique", {"keys": ["id"]}),
+        Constraint("id_unique_p1", "unique", {"keys": ["id"],
+                                              "where": "part = 'p1'"}),
+        Constraint("src_dim", "referential", {"column": "src",
+                                              "dim": "srcs"}),
+        Constraint("src_values", "referential",
+                   {"column": "src", "values": ["web", "books"]}),
+        Constraint("id_fd", "fd", {"determinant": ["id"],
+                                   "dependent": "v"}),
+        Constraint("v_complete", "completeness", {"component": "v",
+                                                  "min_ratio": 0.95}),
+        Constraint("k_after_min", "join_rule",
+                   {"dim": "signups", "on": ["user_id"],
+                    "sql": "k >= min_k"}),
+    ]
+    suite = ValidationSuite(name="rows", components=[Component("x", "numeric")],
+                            partition_cols=["part"], constraints=constraints)
+    sink = TableProvider(spark, str(tmp_path / "sink"))
+    run_validation(spark, df, suite, sink=sink, dims=dims, resume=False)
+    sunk = sorted((r["k"], tuple(sorted(json.loads(r["errors"]))))
+                  for r in sink.read("violations").collect())
+    evaluated = sorted((r["k"], tuple(sorted(r["errors"])))
+                       for r in evaluate_constraints(df, suite, dims)
+                       .violations.collect())
+    assert sunk == evaluated
+    assert {e for _, errs in sunk for e in errs} == \
+        {c.name for c in constraints}

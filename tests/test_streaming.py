@@ -54,7 +54,7 @@ def test_validate_stream_matches_batch(spark, stream_input, tmp_path):
     sink = TableProvider(spark, str(tmp_path / "sink"))
     q = validate_stream(stream_df, suite, sink, dims=dims,
                         checkpoint_dir=str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
 
     verdicts = sink.read(STREAM_VERDICTS_TABLE)
     violations = sink.read(STREAM_VIOLATIONS_TABLE)
@@ -79,7 +79,7 @@ def test_validate_stream_matches_batch(spark, stream_input, tmp_path):
                   .option("maxFilesPerTrigger", "100").parquet(path))
     q2 = validate_stream(stream_df2, suite, sink, dims=dims,
                          checkpoint_dir=str(tmp_path / "ckpt"))
-    q2.awaitTermination(120)
+    assert q2.awaitTermination(120)
     assert sink.read(STREAM_VERDICTS_TABLE).count() == n_before
 
 
@@ -113,7 +113,7 @@ def test_validate_stream_metric_kinds(spark, tmp_path):
     sink = TableProvider(spark, str(tmp_path / "sink"))
     q = validate_stream(stream_df, suite, sink,
                         checkpoint_dir=str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
 
     v = sink.read(STREAM_VERDICTS_TABLE).collect()
     by = {}
@@ -140,7 +140,7 @@ def test_streaming_stats_windowed(spark, tmp_path):
                             watermark="1 minute")
     q = (stats.writeStream.format("memory").queryName("win_stats")
          .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
 
     out = spark.sql("select * from win_stats").collect()
     assert len(out) == 4  # four 1-minute windows
@@ -152,16 +152,13 @@ def test_streaming_stats_windowed(spark, tmp_path):
     assert all(r["min_v"] == 0.0 and r["max_v"] == 2.0 for r in out)
 
 
-@pytest.mark.parametrize("mode", ["bloom", "exact"])
-def test_streaming_duplicates_cross_batch(spark, tmp_path, mode):
-    """Cross-batch uniqueness via the applyInPandasWithState operator:
-    a key that first appears in batch 1 and again in batch 2 is caught
-    — exactly the case per-batch foreachBatch uniqueness cannot see.
-    Both state modes (fixed-size Bloom / exact key list) must agree on
-    this key space (Bloom FPR at 5 keys in 2^23 bits ≈ 0)."""
+def _drain_duplicates(spark, tmp_path, mode, name, **kw) -> dict:
+    """Drain two files through ``streaming_duplicates`` (one file per
+    micro-batch) into memory table ``name``; return ``{key: n_dup}``.
+    File 1 holds a,b,c,c and file 2 b,d,e: b repeats ACROSS batches,
+    c within one."""
     from data_validation_spark.streaming.validate import streaming_duplicates
     path = str(tmp_path / "in")
-    # file 1: a,b,c,c   file 2: b,d,e  (b dups ACROSS batches, c within)
     spark.createDataFrame([("a",), ("b",), ("c",), ("c",)], "doc_id string") \
         .coalesce(1).write.mode("append").parquet(path)
     spark.createDataFrame([("b",), ("d",), ("e",)], "doc_id string") \
@@ -170,16 +167,35 @@ def test_streaming_duplicates_cross_batch(spark, tmp_path, mode):
     stream = (spark.readStream.schema("doc_id string")
               .option("maxFilesPerTrigger", "1").parquet(path))
     dups = streaming_duplicates(stream, "doc_id", n_shards=4,
-                                state_mode=mode)
-    q = (dups.writeStream.format("memory").queryName(f"dups_{mode}")
+                                state_mode=mode, **kw)
+    q = (dups.writeStream.format("memory").queryName(name)
          .outputMode("update").trigger(availableNow=True).start())
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
+    return {r["key"]: r["n_dup"]
+            for r in spark.sql(f"select * from {name}").collect()}
 
-    rows = spark.sql(f"select * from dups_{mode}").collect()
-    got = {r["key"]: r["n_dup"] for r in rows}
+
+@pytest.mark.parametrize("mode", ["bloom", "exact"])
+def test_streaming_duplicates_cross_batch(spark, tmp_path, mode):
+    """Cross-batch uniqueness via the applyInPandasWithState operator:
+    a key that first appears in batch 1 and again in batch 2 is caught
+    — exactly the case per-batch foreachBatch uniqueness cannot see.
+    Both state modes (fixed-size Bloom / exact key list) must agree on
+    this key space (Bloom FPR at 5 keys in 2^23 bits ≈ 0)."""
+    got = _drain_duplicates(spark, tmp_path, mode, f"dups_{mode}")
     # c duplicated within its batch; b across batches (file order may
     # swap, but either order yields exactly these two duplicates)
     assert got == {"b": 1, "c": 1}
+
+
+@pytest.mark.parametrize("mode", ["bloom", "exact"])
+def test_streaming_duplicates_state_expires_after_ttl(spark, tmp_path, mode):
+    """With a 1 ms TTL, batch 1's shard state is idle past the TTL when
+    batch 2 arrives, so it counts as empty: b is a first-time key again,
+    while c's duplicate within its own batch is still caught."""
+    got = _drain_duplicates(spark, tmp_path, mode, f"dups_ttl_{mode}",
+                            state_ttl_ms=1)
+    assert got == {"c": 1}
 
 
 def test_bloom_kernel_bounded_no_false_negatives():
@@ -260,7 +276,7 @@ def test_streaming_drift_detects_shifted_batch(spark, tmp_path):
     q = streaming_drift(stream, reference, comps, sink,
                         min_batch_rows=1000,
                         checkpoint_dir=str(tmp_path / "ckpt"))
-    q.awaitTermination(300)
+    assert q.awaitTermination(300)
 
     rows = sink.read(STREAM_DRIFT_TABLE).collect()
     # the two 12k batches are distinguished by drift outcome
@@ -343,7 +359,7 @@ def test_streaming_ingest_dedup_accumulates_state(spark, tmp_path):
         stream = (spark.readStream.schema(schema)
                   .parquet(str(src)))
         q = streaming_ingest_dedup(stream, sink, checkpoint_dir=ckpt)
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
 
     spark.createDataFrame(
         [(1, "content X"), (2, "content Y"), (3, "content  X ")],
@@ -398,7 +414,7 @@ def test_stream_ordering_kind_per_batch(spark, tmp_path):
     sink = TableProvider(spark, str(tmp_path / "sink"))
     q = validate_stream(stream_df, suite, sink,
                         checkpoint_dir=str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
 
     v = sink.read(STREAM_VERDICTS_TABLE).collect()
     assert len({r["batch_id"] for r in v}) == 2
