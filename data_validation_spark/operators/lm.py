@@ -51,15 +51,16 @@ def unigram_model(df: DataFrame, text_col: str = "text",
     counts = (df.select(F.explode(words_col(text_col)).alias("word"))
               .groupBy("word").agg(F.count(F.lit(1)).alias("cnt")))
     counts = counts.persist()
-    total = counts.agg(F.sum("cnt")).first()[0] or 0
-    head = (counts.orderBy(F.desc("cnt"), F.asc("word")).limit(top_v)
-            .withColumn("logp", F.log(F.col("cnt").cast("double")
-                                      / F.lit(float(total)))))
-    # the head is what callers broadcast-join; materialize it off the
-    # persisted counts, then let the full counts frame go
-    head = head.localCheckpoint(eager=True)
-    counts.unpersist()
-    return head
+    try:
+        total = counts.agg(F.sum("cnt")).first()[0] or 0
+        head = (counts.orderBy(F.desc("cnt"), F.asc("word")).limit(top_v)
+                .withColumn("logp", F.log(F.col("cnt").cast("double")
+                                          / F.lit(float(total)))))
+        # the head is what callers broadcast-join; materialize it off
+        # the persisted counts, then let the full counts frame go
+        return head.localCheckpoint(eager=True)
+    finally:
+        counts.unpersist()
 
 
 def doc_lm_scores(df: DataFrame, model: DataFrame,

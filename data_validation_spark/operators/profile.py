@@ -122,7 +122,6 @@ def _array_referencing(components: list[Component],
 
 
 def _hist_specs(df: DataFrame, components: list[Component],
-                quantile_strategy: str,
                 sketch_forced: set[str]) -> dict[str, F.Column]:
     """Components whose quantiles come from an exact value histogram
     instead of a GK sketch: SCALAR integral-typed numerics (bounded
@@ -137,10 +136,7 @@ def _hist_specs(df: DataFrame, components: list[Component],
       component whose histogram exceeds ``HIST_MAX_GROUPS`` rows back to
       the sketch BEFORE anything is collected to the driver, so an
       unbounded integral column (ids, epochs) can never OOM the driver.
-
-    ``quantile_strategy="sketch"`` forces the sketch everywhere."""
-    if quantile_strategy == "sketch":
-        return {}
+    """
     specs: dict[str, F.Column] = {}
     for comp in components:
         if comp.ctype != "numeric":
@@ -202,18 +198,24 @@ _limit_lock = threading.Lock()
 _limit_holds: dict = {}
 
 
-def run_concurrently(spark: SparkSession, actions: dict[Hashable, Callable],
-                     max_workers: int) -> dict:
+#: how many independent Spark actions ``run_concurrently`` submits at
+#: once (``1`` = one after another; identical results either way)
+CONCURRENT_ACTIONS = 4
+
+
+def run_concurrently(spark: SparkSession,
+                     actions: dict[Hashable, Callable]) -> dict:
     """Call the independent Spark-action thunks ``actions``, up to
-    ``max_workers`` at a time, and return their results under the same
-    keys.  Serial driver actions leave the cluster idle between stages
-    (a reduce tail runs on a few tasks while the other cores wait for
-    the next job's scan); overlapping them fills that gap.  Every pool
-    thread inherits the caller's local properties (job group,
-    description, scheduler pool) and job tags, so the jobs it submits
-    are attributed like the caller's own.  ``max_workers <= 1`` calls
-    every thunk in order on the calling thread."""
-    if max_workers <= 1 or len(actions) <= 1:
+    ``CONCURRENT_ACTIONS`` at a time, and return their results under
+    the same keys.  Serial driver actions leave the cluster idle
+    between stages (a reduce tail runs on a few tasks while the other
+    cores wait for the next job's scan); overlapping them fills that
+    gap.  Every pool thread inherits the caller's local properties (job
+    group, description, scheduler pool) and job tags, so the jobs it
+    submits are attributed like the caller's own.
+    ``CONCURRENT_ACTIONS <= 1`` calls every thunk in order on the
+    calling thread."""
+    if CONCURRENT_ACTIONS <= 1 or len(actions) <= 1:
         return {k: f() for k, f in actions.items()}
 
     def inherit(f: Callable) -> Callable:
@@ -223,7 +225,7 @@ def run_concurrently(spark: SparkSession, actions: dict[Hashable, Callable],
         return f if wrap is spark else wrap(f)  # pinned-thread mode off
 
     with ThreadPoolExecutor(
-            max_workers=min(max_workers, len(actions))) as pool:
+            max_workers=min(CONCURRENT_ACTIONS, len(actions))) as pool:
         futures = {k: pool.submit(inherit(f)) for k, f in actions.items()}
         return {k: f.result() for k, f in futures.items()}
 
@@ -311,17 +313,18 @@ def _hist_probe(df: DataFrame, hist: dict[str, F.Column],
         # frame is milliseconds at any data size.
         if guarded:
             hist_counts.persist()
+        try:
             per_comp = {r["comp"]: r["cnt"] for r in
                         hist_counts.groupBy("comp")
-                        .agg(F.count(F.lit(1)).alias("cnt")).collect()}
+                        .agg(F.count(F.lit(1)).alias("cnt")).collect()
+                        } if guarded else {}
             too_big = {n for n, c in per_comp.items()
                        if c > HIST_MAX_GROUPS and n not in forced}
-        else:
-            too_big = set()
-        keep = set(hist) - too_big
-        hist_rows = (hist_counts.where(F.col("comp").isin(list(keep)))
-                     .collect() if keep else [])
-        hist_counts.unpersist()
+            keep = set(hist) - too_big
+            hist_rows = (hist_counts.where(F.col("comp").isin(list(keep)))
+                         .collect() if keep else [])
+        finally:
+            hist_counts.unpersist()
     hists: dict[str, dict[str, dict[int, int]]] = {}
     for r in hist_rows:
         if r["val"] is None:
@@ -364,14 +367,12 @@ def _freq_probe(df: DataFrame, comp: Component,
 
 
 def _catalyst_records(df: DataFrame, components: list[Component],
-                      partition_cols: list[str], accuracy: int,
-                      quantile_strategy: str = "auto",
+                      partition_cols: list[str],
                       extra_names: list[str] | None = None,
-                      sketch_forced: set[str] = frozenset(),
-                      concurrent_jobs: int = 4
+                      sketch_forced: set[str] = frozenset()
                       ) -> tuple[list[dict], dict[str, dict]]:
     """The pass's independent Spark actions, submitted together (up to
-    ``concurrent_jobs`` at a time) and assembled into records on the
+    ``CONCURRENT_ACTIONS`` at a time) and assembled into records on the
     driver once all of them have finished:
 
     * the main agg computes every numeric/tokens summary, every
@@ -391,14 +392,14 @@ def _catalyst_records(df: DataFrame, components: list[Component],
     small."""
     numericish = [c for c in components if c.ctype in ("numeric", "tokens")]
     categoric = [c for c in components if c.ctype == "categoric"]
-    hist = _hist_specs(df, numericish, quantile_strategy, sketch_forced)
+    hist = _hist_specs(df, numericish, sketch_forced)
     forced = {c.name for c in numericish
               if c.name in hist and c.quantile_strategy == "hist"}
 
     exprs = []
     for comp in numericish:
         make = tokens_agg_exprs if comp.ctype == "tokens" else numeric_agg_exprs
-        exprs += make(comp.name, _ccol(comp.name), accuracy,
+        exprs += make(comp.name, _ccol(comp.name), DEFAULT_ACCURACY,
                       include_quantiles=comp.name not in hist)
     for comp in categoric:
         exprs += categoric_agg_exprs(comp.name, _ccol(comp.name))
@@ -422,11 +423,12 @@ def _catalyst_records(df: DataFrame, components: list[Component],
     for comp in categoric:
         actions[("freq", comp.name)] = (
             lambda comp=comp: _freq_probe(df, comp, partition_cols))
-    results = run_concurrently(df.sparkSession, actions, concurrent_jobs)
+    results = run_concurrently(df.sparkSession, actions)
     totals: dict[str, dict] = results.get("agg", {})
     hists, kept = results.get("hist", ({}, set()))
     overflow = [n for n in hist if n not in kept]
-    sketches = grouped_agg([numeric_quantile_expr(n, _ccol(n), accuracy)
+    sketches = grouped_agg([numeric_quantile_expr(n, _ccol(n),
+                                                  DEFAULT_ACCURACY)
                             for n in overflow]) if overflow else {}
 
     records: list[dict] = []
@@ -627,30 +629,24 @@ def merge_profiles(profiles: list[Profile], name: str = "merged") -> Profile:
 
 def build_profile(df: DataFrame, components: list[Component],
                   partition_cols: list[str] | None = None,
-                  accuracy: int = DEFAULT_ACCURACY,
-                  name: str = "profile",
-                  quantile_strategy: str = "auto") -> Profile:
+                  name: str = "profile") -> Profile:
     """Compute a built Profile (global + per-partition) in one stats pass.
 
-    ``quantile_strategy``: "auto" uses exact value-histogram quantiles
-    for integral-typed components (bounded domains — n_tok, tokens
-    length) and the GK sketch for everything else; "sketch" forces the
-    sketch (use for unbounded/high-cardinality integer domains where a
+    Integral-typed components (bounded domains — n_tok, tokens length)
+    get exact value-histogram quantiles and everything else the GK
+    sketch; ``Component.quantile_strategy="sketch"`` pins one component
+    to the sketch (unbounded/high-cardinality integer domains, where a
     per-value histogram would not be small).
     """
-    profile, _ = build_profile_and_counts(
-        df, components, partition_cols, accuracy=accuracy, name=name,
-        quantile_strategy=quantile_strategy)
+    profile, _ = build_profile_and_counts(df, components, partition_cols,
+                                          name=name)
     return profile
 
 
 def build_profile_and_counts(df: DataFrame, components: list[Component],
                              partition_cols: list[str] | None = None,
                              row_conds: dict[str, F.Column] | None = None,
-                             accuracy: int = DEFAULT_ACCURACY,
-                             name: str = "profile",
-                             quantile_strategy: str = "auto",
-                             concurrent_jobs: int = 4
+                             name: str = "profile"
                              ) -> tuple[Profile, dict[str, dict[str, int]]]:
     """The spec's literal "single per-partition vectorized pass"
     (BASELINE.json:6): one grouped aggregation computes every
@@ -659,18 +655,13 @@ def build_profile_and_counts(df: DataFrame, components: list[Component],
     predicate).  Returns (profile, counts[partition][constraint]).
     Sharing the scan halves the number of tokens-column decodes per
     validation run (the dominant cost — see BENCH/BASELINE.md).
-
-    ``concurrent_jobs``: how many of the pass's independent actions run
-    at once (``1`` = one after another; identical results either way).
     """
     partition_cols = partition_cols or []
     row_conds = row_conds or {}
     projected = _project(df, components, partition_cols, row_conds)
     records, extras = _catalyst_records(
-        projected, components, partition_cols, accuracy,
-        quantile_strategy, extra_names=list(row_conds),
-        sketch_forced=_array_referencing(components, df),
-        concurrent_jobs=concurrent_jobs)
+        projected, components, partition_cols, extra_names=list(row_conds),
+        sketch_forced=_array_referencing(components, df))
 
     profile = Profile(name=name)
     by_comp: dict[str, list[dict]] = {}

@@ -19,9 +19,12 @@ over vectors that are ALREADY co-partitioned by the clustering step,
 plus the repo's existing ``connected_components`` for transitive
 closure; no driver-side vector math, no all-pairs join:
 
-* pair generation: per-cluster blocked ``X @ X.T`` (Arrow batch,
-  float64, ``_PAIR_BLOCK``-row blocks so kernel memory is
-  ~block × |cluster| doubles even in the largest allowed cluster),
+* pair generation: ``similarity.cosine_pairs``, the blocked
+  ``X @ X.T`` sweep that ``embedding_near_duplicates`` runs per LSH
+  bucket, here run per cluster (kernel memory ~``_PAIR_BLOCK`` ×
+  |cluster| doubles even in the largest allowed cluster); the cell
+  assignment of the multi-probe path is ``similarity.ivf_index_multi``,
+  so this module writes no numpy kernel of its own,
 * the oversize guard is EXPLICIT (``oversize_clusters`` /
   ``on_oversize``): a cluster past ``max_cluster_rows`` either fails
   fast or is skipped WITH ACCOUNTING, never silently quadratic,
@@ -31,23 +34,24 @@ closure; no driver-side vector math, no all-pairs join:
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from data_validation_spark.operators.graph import dedup_clusters
+from data_validation_spark.operators.similarity import (
+    cosine_pairs,
+    ivf_index_multi,
+)
 
 __all__ = ["cluster_near_pairs", "oversize_clusters", "semantic_dedup",
            "semantic_dedup_multiprobe"]
 
-#: rows scored per matrix block inside the pair kernel
-_PAIR_BLOCK = 2048
-
-#: default per-cluster row bound — 8192² half-matrix of float64 sims is
-#: ~256 MiB transient per block-row sweep, comfortably inside an
-#: executor; SemDeDup sizes k so clusters land well under this
+#: default per-cluster row bound.  ``similarity.cosine_pairs`` sweeps
+#: a cluster ``_PAIR_BLOCK`` (2048) rows at a time, so an 8192-row
+#: cluster holds 2048 × 8192 float64 sims (128 MiB) at once and does
+#: 8192²/2 dot products in all — comfortably inside an executor;
+#: SemDeDup sizes k so clusters land well under this
 DEFAULT_MAX_CLUSTER_ROWS = 8192
 
 
@@ -74,9 +78,10 @@ def cluster_near_pairs(df: DataFrame, cluster_col: str,
     cosine ≥ ``threshold`` (``cosine`` emitted rounded to 6 for
     engine-portable comparison; the FILTER uses the unrounded value).
 
-    One shuffle keyed by ``cluster_col``; the kernel sorts members by
-    id (deterministic output order independent of partitioning),
-    normalizes once, and sweeps blocked upper-triangle ``X @ X.T``.
+    One shuffle keyed by ``cluster_col``; each cluster goes through
+    ``similarity.cosine_pairs``, which sorts members by id (output
+    order independent of partitioning), normalizes once, and sweeps
+    the blocked upper triangle of ``X @ X.T``.
     A cluster larger than ``max_cluster_rows`` raises — run
     ``oversize_clusters`` first or use ``semantic_dedup(...,
     on_oversize='skip')`` for counted exclusion."""
@@ -84,41 +89,16 @@ def cluster_near_pairs(df: DataFrame, cluster_col: str,
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         n = len(pdf)
-        empty = pd.DataFrame({"cluster": pd.Series([], dtype=object),
-                              "id_a": pd.Series([], dtype=np.int64),
-                              "id_b": pd.Series([], dtype=np.int64),
-                              "cosine": pd.Series([], dtype=np.float64)})
-        if n < 2:
-            return empty
         if n > max_cluster_rows:
             raise ValueError(
                 f"cluster {pdf[cluster_col].iloc[0]!r} has {n} rows > "
                 f"max_cluster_rows={max_cluster_rows}; raise the bound, "
                 "re-cluster with more centroids, or use "
                 "semantic_dedup(on_oversize='skip')")
-        pdf = pdf.sort_values(id_col, kind="stable").reset_index(drop=True)
-        mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-        norms = np.linalg.norm(mat, axis=1)
-        norms[norms == 0] = 1.0
-        mat /= norms[:, None]
-        ids = pdf[id_col].to_numpy()
-        out_a, out_b, out_c = [], [], []
-        for lo in range(0, n - 1, _PAIR_BLOCK):
-            hi = min(lo + _PAIR_BLOCK, n - 1)
-            sims = mat[lo:hi] @ mat.T  # (hi-lo, n)
-            # upper triangle only: column j must exceed global row i
-            ii, jj = np.nonzero(sims >= threshold)
-            keep = jj > (ii + lo)
-            out_a.append(ids[ii[keep] + lo])
-            out_b.append(ids[jj[keep]])
-            out_c.append(sims[ii[keep], jj[keep]])
-        if not out_a:
-            return empty
-        return pd.DataFrame({
-            "cluster": pdf[cluster_col].iloc[0],
-            "id_a": np.concatenate(out_a),
-            "id_b": np.concatenate(out_b),
-            "cosine": np.round(np.concatenate(out_c), 6)})
+        a, b, cos = cosine_pairs(pdf, vec_col, id_col, threshold)
+        return pd.DataFrame({"cluster": pdf[cluster_col].iloc[0],
+                             "id_a": a, "id_b": b,
+                             "cosine": np.round(cos, 6)})
 
     return (df.select(cluster_col, id_col, vec_col)
             .groupBy(cluster_col)
@@ -203,7 +183,6 @@ def semantic_dedup_multiprobe(df: DataFrame, centroids,
     all-pairs).  Labeling/closure runs over the ORIGINAL ``df`` so
     cluster sizes and canonical election are not inflated by the
     expansion."""
-    from data_validation_spark.operators.similarity import ivf_index_multi
     idx = ivf_index_multi(df, centroids, n_probe, vec_col, id_col)
     work = _guard_oversize(idx, "cell", max_cluster_rows,
                            on_oversize, stats_out)

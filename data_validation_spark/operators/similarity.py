@@ -13,8 +13,24 @@ Three tiers, trading exactness for scan cost:
   2^n_planes sign buckets; the query probes its own bucket plus
   ``n_probe`` single-bit-flip neighbors, scanning only those partitions
   of the index.  Approximate, tunable recall, scan cost ~ bucket share.
+* ``ivf_*`` — k-means cells (IVF): index, multi-probe index, query
+  probes and the batch kNN join.
 * ``embedding_near_duplicates`` — cosine ≥ threshold pairs within LSH
   buckets (near-dup path for embedding dedup).
+
+Each numpy step is written once, here, and every operator that needs
+it (``semantic`` and ``ann_index`` included) calls that copy:
+
+* ``_matrix`` stacks a batch's vector column to float64, ``_norms`` /
+  ``_unit`` normalise rows (a zero row stays zero);
+* ``cosine_pairs`` is the within-group pair sweep (LSH buckets here,
+  SemDeDup clusters in ``semantic``);
+* ``_nearest`` picks each row's nearest centroid cells, and ``_cells``
+  is the Arrow kernel around it (``ivf_index``, ``ivf_index_multi``,
+  ``ivf_assign_queries``; the Lloyd step of ``ivf_centroids`` calls
+  ``_nearest`` directly);
+* ``_sign_buckets`` assigns hyperplane sign buckets
+  (``lsh_bucket_index`` is its one-table, no-split case).
 
 Hyperplanes are generated from a fixed seed so index and query agree
 deterministically across jobs.
@@ -32,6 +48,55 @@ from pyspark.sql import functions as F
 from data_validation_spark.functions.arrays import cosine_col, lit_vector
 
 DEFAULT_SEED = 42
+
+#: rows per matrix block in ``cosine_pairs``: the sweep holds
+#: ~block × group-size doubles at once, however large the group
+_PAIR_BLOCK = 2048
+
+
+def _matrix(pdf: pd.DataFrame, col: str) -> np.ndarray:
+    """A batch's vector column stacked into one float64 matrix."""
+    return np.stack(pdf[col].to_numpy()).astype(np.float64)
+
+
+def _norms(mat: np.ndarray) -> np.ndarray:
+    """Row norms, with a zero row's norm taken as 1 so it stays zero."""
+    norms = np.linalg.norm(mat, axis=1)
+    norms[norms == 0] = 1.0
+    return norms
+
+
+def _unit(mat: np.ndarray) -> np.ndarray:
+    return mat / _norms(mat)[:, None]
+
+
+def cosine_pairs(pdf: pd.DataFrame, vec_col: str, id_col: str,
+                 threshold: float
+                 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Every pair of ``pdf``'s rows with cosine ≥ ``threshold``, as
+    arrays ``(id_a, id_b, cosine)`` with ``id_a < id_b``.
+
+    The rows are sorted by id and unit-normalised once, then the upper
+    triangle of ``X @ X.T`` is swept ``_PAIR_BLOCK`` rows at a time, so
+    the sweep never holds more than ``_PAIR_BLOCK`` × n cosines.  A
+    group of at most ``_PAIR_BLOCK`` rows is one block, ``X @ X.T`` in
+    full, which numpy hands to BLAS's symmetric product: its cosines
+    keep the bits an unblocked kernel gives.  The output order and every
+    cosine's bits depend only on the group's rows, not on their arrival
+    order."""
+    pdf = pdf.sort_values(id_col, kind="stable")
+    mat = _unit(_matrix(pdf, vec_col))
+    ids = pdf[id_col].to_numpy()
+    out_a, out_b, out_c = [ids[:0]], [ids[:0]], [np.empty(0)]
+    for lo in range(0, len(ids) - 1, _PAIR_BLOCK):
+        sims = mat[lo:lo + _PAIR_BLOCK] @ mat.T  # (block, n)
+        # upper triangle only: column j must exceed global row i
+        ii, jj = np.nonzero(sims >= threshold)
+        keep = jj > ii + lo
+        out_a.append(ids[ii[keep] + lo])
+        out_b.append(ids[jj[keep]])
+        out_c.append(sims[ii[keep], jj[keep]])
+    return np.concatenate(out_a), np.concatenate(out_b), np.concatenate(out_c)
 
 
 def brute_force_topk(df: DataFrame, query_vec, k: int = 10,
@@ -57,10 +122,8 @@ def brute_force_topk_pandas(df: DataFrame, query_vec, k: int = 10,
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            norms = np.linalg.norm(mat, axis=1)
-            norms[norms == 0] = 1.0
-            cos = (mat @ qn) / norms
+            mat = _matrix(pdf, vec_col)
+            cos = (mat @ qn) / _norms(mat)
             out = pd.DataFrame({id_col: pdf[id_col], "cosine": cos})
             yield out.nlargest(min(k, len(out)), "cosine")
 
@@ -77,19 +140,6 @@ def _hyperplanes(dim: int, n_planes: int, seed: int) -> np.ndarray:
     return np.random.default_rng(seed).standard_normal((n_planes, dim))
 
 
-def _bucket_kernel(planes: np.ndarray, vec_col: str, id_col: str):
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            signs = (mat @ planes.T) > 0
-            bucket = np.zeros(len(pdf), dtype=np.int64)
-            for b in range(planes.shape[0]):
-                bucket |= signs[:, b].astype(np.int64) << b
-            yield pd.DataFrame({id_col: pdf[id_col], "bucket": bucket,
-                                vec_col: pdf[vec_col]})
-    return assign
-
-
 def lsh_bucket_index(df: DataFrame, dim: int, n_planes: int = 8,
                      vec_col: str = "embedding", id_col: str = "vec_id",
                      seed: int = DEFAULT_SEED) -> DataFrame:
@@ -97,9 +147,8 @@ def lsh_bucket_index(df: DataFrame, dim: int, n_planes: int = 8,
     ``bucket`` as the ANN index (e.g. write partitioned parquet so a
     probe prunes to the probed buckets' files)."""
     planes = _hyperplanes(dim, n_planes, seed)
-    return df.select(id_col, vec_col).mapInPandas(
-        _bucket_kernel(planes, vec_col, id_col),
-        schema=f"{id_col} long, bucket long, {vec_col} array<float>")
+    return _sign_buckets(df, [planes], n_planes, 0, [[]], vec_col,
+                         id_col).drop("table")
 
 
 def query_buckets(query_vec, dim: int, n_planes: int = 8, n_probe: int = 4,
@@ -160,13 +209,13 @@ def ivf_centroids(df: DataFrame, dim: int, n_centroids: int = 16,
                       for r in rows[:n_centroids]])
 
     for _ in range(n_iters):
-        c = cents.copy()
+        cu = _unit(cents)
 
         def partials(batches: Iterator[pd.DataFrame]
                      ) -> Iterator[pd.DataFrame]:
             for pdf in batches:
-                mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                assign = np.argmax(_unit(mat) @ _unit(c).T, axis=1)
+                mat = _matrix(pdf, vec_col)
+                assign = _nearest(mat, cu, 1)[:, 0]
                 ks, inv = np.unique(assign, return_inverse=True)
                 sums = np.zeros((len(ks), mat.shape[1]))
                 np.add.at(sums, inv, mat)  # k×dim accumulator, not hot
@@ -199,10 +248,37 @@ def ivf_centroids(df: DataFrame, dim: int, n_centroids: int = 16,
     return cents
 
 
-def _unit(mat: np.ndarray) -> np.ndarray:
-    norms = np.linalg.norm(mat, axis=1)
-    norms[norms == 0] = 1.0
-    return mat / norms[:, None]
+def _nearest(mat: np.ndarray, unit_centroids: np.ndarray,
+             n_probe: int) -> np.ndarray:
+    """Each row's ``n_probe`` nearest (cosine) centroid cells, shape
+    (rows, n_probe), nearest first.  Ties go to the lower cell id:
+    ``argmax`` keeps the first maximum, and the stable ``argsort`` keeps
+    equal similarities in cell order, so both picks agree at
+    ``n_probe == 1``."""
+    sims = _unit(mat) @ unit_centroids.T
+    if n_probe == 1:
+        return np.argmax(sims, axis=1)[:, None]
+    return np.argsort(-sims, kind="stable", axis=1)[:, :n_probe]
+
+
+def _cells(df: DataFrame, centroids: np.ndarray, n_probe: int,
+           vec_col: str, id_col: str, out_id: str, out_vec: str
+           ) -> DataFrame:
+    """The IVF cell kernel: one ``(out_id, cell, out_vec)`` row per
+    (vector, probed cell), ``n_probe`` rows per vector."""
+    cu = _unit(centroids)
+    n_probe = min(n_probe, len(cu))
+
+    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            cells = _nearest(_matrix(pdf, vec_col), cu, n_probe)
+            yield pd.DataFrame({
+                out_id: np.repeat(pdf[id_col].to_numpy(), n_probe),
+                "cell": cells.astype(np.int64).ravel(),
+                out_vec: np.repeat(pdf[vec_col].to_numpy(), n_probe)})
+
+    return df.select(id_col, vec_col).mapInPandas(
+        assign, schema=f"{out_id} long, cell long, {out_vec} array<float>")
 
 
 def ivf_index(df: DataFrame, centroids: np.ndarray,
@@ -211,19 +287,7 @@ def ivf_index(df: DataFrame, centroids: np.ndarray,
     """Assign every vector to its nearest (cosine) centroid cell.
     Persist partitioned by ``cell`` so a probe prunes to the probed
     cells' files — the IVF analogue of ``lsh_bucket_index``."""
-    c = centroids.copy()
-
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cu = _unit(c)
-        for pdf in batches:
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            cell = np.argmax(_unit(mat) @ cu.T, axis=1)
-            yield pd.DataFrame({id_col: pdf[id_col],
-                                "cell": cell.astype(np.int64),
-                                vec_col: pdf[vec_col]})
-
-    return df.select(id_col, vec_col).mapInPandas(
-        assign, schema=f"{id_col} long, cell long, {vec_col} array<float>")
+    return _cells(df, centroids, 1, vec_col, id_col, id_col, vec_col)
 
 
 def ivf_index_multi(df: DataFrame, centroids: np.ndarray,
@@ -235,24 +299,9 @@ def ivf_index_multi(df: DataFrame, centroids: np.ndarray,
     multi-probe expansion is what closes SemDeDup's cross-cluster miss
     for near-boundary vectors: two near-identical vectors on opposite
     sides of a Voronoi boundary still SHARE a cell once each also
-    lands in its second-nearest.  Ties break by cell id (stable
-    argsort), so the probe set is deterministic on any engine."""
-    c = centroids.copy()
-    n_probe = min(n_probe, len(c))
-
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cu = _unit(c)
-        for pdf in batches:
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            sims = _unit(mat) @ cu.T
-            probes = np.argsort(-sims, kind="stable", axis=1)[:, :n_probe]
-            yield pd.DataFrame({
-                id_col: np.repeat(pdf[id_col].to_numpy(), n_probe),
-                "cell": probes.astype(np.int64).ravel(),
-                vec_col: np.repeat(pdf[vec_col].to_numpy(), n_probe)})
-
-    return df.select(id_col, vec_col).mapInPandas(
-        assign, schema=f"{id_col} long, cell long, {vec_col} array<float>")
+    lands in its second-nearest.  Ties break by cell id, so the probe
+    set is deterministic on any engine."""
+    return _cells(df, centroids, n_probe, vec_col, id_col, id_col, vec_col)
 
 
 def ivf_topk(index: DataFrame, centroids: np.ndarray, query_vec,
@@ -265,7 +314,7 @@ def ivf_topk(index: DataFrame, centroids: np.ndarray, query_vec,
     pruning if the index is stored partitioned by cell)."""
     q = np.asarray(query_vec, dtype=np.float64)
     qu = q / (np.linalg.norm(q) or 1.0)
-    order = np.argsort(-(_unit(centroids.copy()) @ qu))
+    order = np.argsort(-(_unit(centroids) @ qu))
     probes = [int(x) for x in order[:n_probe]]
     cand = index.filter(F.col("cell").isin(probes))
     return brute_force_topk(cand, query_vec, k, vec_col, id_col)
@@ -275,26 +324,11 @@ def ivf_assign_queries(queries: DataFrame, centroids: np.ndarray,
                        n_probe: int = 4, vec_col: str = "embedding",
                        id_col: str = "vec_id") -> DataFrame:
     """Explode each query row to its ``n_probe`` nearest centroid cells
-    — ``(query_id, cell, qvec)``, one row per probe.  Same Arrow kernel
-    shape as ``ivf_index``; ties in centroid similarity break by cell
-    id (stable argsort) so the probe set is deterministic."""
-    c = centroids.copy()
-    n_probe = min(n_probe, len(c))
-
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cu = _unit(c)
-        for pdf in batches:
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            sims = _unit(mat) @ cu.T
-            probes = np.argsort(-sims, kind="stable", axis=1)[:, :n_probe]
-            n = len(pdf)
-            yield pd.DataFrame({
-                "query_id": np.repeat(pdf[id_col].to_numpy(), n_probe),
-                "cell": probes.astype(np.int64).ravel(),
-                "qvec": np.repeat(pdf[vec_col].to_numpy(), n_probe)})
-
-    return queries.select(id_col, vec_col).mapInPandas(
-        assign, schema="query_id long, cell long, qvec array<float>")
+    — ``(query_id, cell, qvec)``, one row per probe.  The same cell
+    kernel as ``ivf_index_multi``, so ties break by cell id and the
+    probe set is deterministic."""
+    return _cells(queries, centroids, n_probe, vec_col, id_col,
+                  "query_id", "qvec")
 
 
 #: query rows scored per matrix block inside the kNN-join kernel —
@@ -342,7 +376,7 @@ def ivf_knn_join(queries: DataFrame, index: DataFrame,
             return pd.DataFrame({"query_id": pd.Series(dtype="int64"),
                                  "vec_id": pd.Series(dtype="int64"),
                                  "cosine": pd.Series(dtype="float64")})
-        xmat = _unit(np.stack(xpdf[vec_col].to_numpy()).astype(np.float64))
+        xmat = _unit(_matrix(xpdf, vec_col))
         xids = xpdf[id_col].to_numpy()
         # stable order inside the cell so ties keep the smallest vec_id
         xorder = np.argsort(xids, kind="stable")
@@ -351,7 +385,7 @@ def ivf_knn_join(queries: DataFrame, index: DataFrame,
         outs = []
         for s in range(0, len(qpdf), _KNN_QUERY_BLOCK):
             qb = qpdf.iloc[s:s + _KNN_QUERY_BLOCK]
-            qmat = _unit(np.stack(qb["qvec"].to_numpy()).astype(np.float64))
+            qmat = _unit(_matrix(qb, "qvec"))
             cos = qmat @ xmat.T
             # local top-k per query: STABLE sort on -cosine over the
             # vec_id-ascending cell, so boundary ties always keep the
@@ -419,11 +453,13 @@ def scaled_n_tables(n_planes: int, threshold: float,
     return int(min(max_tables, max(1, need)))
 
 
-def _multitable_kernel(planes_by_table: list[np.ndarray], base_planes: int,
-                       extra_planes: int,
-                       oversized_by_table: list[list[np.ndarray]],
-                       vec_col: str, id_col: str):
-    """Emit (id, table, bucket, vec) — one row per LSH table.
+def _sign_buckets(df: DataFrame, planes_by_table: list[np.ndarray],
+                  base_planes: int, extra_planes: int,
+                  oversized_by_table: list[list[np.ndarray]],
+                  vec_col: str, id_col: str) -> DataFrame:
+    """The sign-bucket kernel: (id, table, bucket, vec), one row per
+    vector per LSH table; bit ``b`` of a bucket id is the sign of the
+    vector's dot product with plane ``b``.
 
     Refinement: a row whose depth-d bucket is in
     ``oversized_by_table[t][d]`` takes ``extra_planes`` more sign bits
@@ -434,9 +470,9 @@ def _multitable_kernel(planes_by_table: list[np.ndarray], base_planes: int,
     """
     n_tables = len(planes_by_table)
 
-    def assign(batches):
+    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            mat = _matrix(pdf, vec_col)
             ids = pdf[id_col].to_numpy()
             out_id, out_t, out_b = [], [], []
             for t in range(n_tables):
@@ -466,7 +502,10 @@ def _multitable_kernel(planes_by_table: list[np.ndarray], base_planes: int,
                 "table": np.concatenate(out_t),
                 "bucket": np.concatenate(out_b),
                 vec_col: np.tile(pdf[vec_col].to_numpy(), n_tables)})
-    return assign
+
+    return df.select(id_col, vec_col).mapInPandas(
+        assign, schema=f"{id_col} long, table long, bucket long, "
+                       f"{vec_col} array<float>")
 
 
 def embedding_near_duplicates(df: DataFrame, dim: int,
@@ -522,12 +561,10 @@ def embedding_near_duplicates(df: DataFrame, dim: int,
                      seed + 7919 * t)
         for t in range(n_tables)]
     oversized: list[list[np.ndarray]] = [[] for _ in range(n_tables)]
-    schema = f"{id_col} long, table long, bucket long, {vec_col} array<float>"
 
     def banded_frame():
-        return df.select(id_col, vec_col).mapInPandas(
-            _multitable_kernel(planes_by_table, n_planes, extra_planes,
-                               oversized, vec_col, id_col), schema=schema)
+        return _sign_buckets(df, planes_by_table, n_planes, extra_planes,
+                             oversized, vec_col, id_col)
 
     n_dropped_buckets = n_dropped_members = 0
     rounds_used = 0
@@ -568,18 +605,8 @@ def embedding_near_duplicates(df: DataFrame, dim: int,
             .drop("__n"))
 
     def pairwise(pdf: pd.DataFrame) -> pd.DataFrame:
-        mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-        norms = np.linalg.norm(mat, axis=1)
-        norms[norms == 0] = 1.0
-        unit = mat / norms[:, None]
-        cos = unit @ unit.T
-        ia, ib = np.triu_indices(len(pdf), k=1)
-        keep_m = cos[ia, ib] >= threshold
-        ids = pdf[id_col].to_numpy()
-        a, b = ids[ia[keep_m]], ids[ib[keep_m]]
-        lo, hi = np.minimum(a, b), np.maximum(a, b)
-        return pd.DataFrame({"id_a": lo, "id_b": hi,
-                             "cosine": cos[ia, ib][keep_m]})
+        a, b, cos = cosine_pairs(pdf, vec_col, id_col, threshold)
+        return pd.DataFrame({"id_a": a, "id_b": b, "cosine": cos})
 
     return (cand.groupBy("table", "bucket")
             .applyInPandas(pairwise, schema="id_a long, id_b long, cosine double")

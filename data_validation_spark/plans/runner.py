@@ -126,19 +126,18 @@ def run_validation(spark: SparkSession, df: DataFrame, suite: ValidationSuite,
                    dims: dict[str, DataFrame] | None = None,
                    run_id: str | None = None,
                    resume: bool = True,
-                   lineage: dict | None = None,
-                   concurrent_jobs: int = 4) -> RunResult:
+                   lineage: dict | None = None) -> RunResult:
     """Validate ``df`` against ``suite``; optionally write metrics /
     violations / manifest through ``sink`` (IO5-IO7).
 
-    ``concurrent_jobs``: independent Spark actions (the fused stats
-    pass, each set-level constraint count, and inside the fused pass
-    its main aggregate, histogram and categoric-frequency probes) are
-    submitted from thread pools of this size so their stages overlap —
-    a reduce tail on a few tasks no longer serializes the whole run
-    while the cluster idles.  ``1`` = strictly serial (identical
-    results either way; actions share no mutable state and the
-    scheduler interleaves stages fairly)."""
+    Independent Spark actions (the fused stats pass, each set-level
+    constraint count, and inside the fused pass its main aggregate,
+    histogram and categoric-frequency probes) are submitted from
+    thread pools of ``profile.CONCURRENT_ACTIONS`` threads so their
+    stages overlap — a reduce tail on a few tasks no longer serializes
+    the whole run while the cluster idles.  Results are identical at
+    any pool size: actions share no mutable state and the scheduler
+    interleaves stages fairly."""
     run_id = run_id or uuid.uuid4().hex[:12]
     # fill documented defaults (e.g. in_domain ← reference domain) up
     # front so a bad suite fails here with a clear message, not mid-job
@@ -238,7 +237,7 @@ def run_validation(spark: SparkSession, df: DataFrame, suite: ValidationSuite,
                 conds[c.name] = _not_in_keys(c, keys)
         profile, counts = build_profile_and_counts(
             df, suite.components, pcols, row_conds=conds,
-            name=suite.name, concurrent_jobs=concurrent_jobs)
+            name=suite.name)
         return profile, counts, over_cap
 
     # action keys: "__fused__", ("metric", i) and ("set", name)
@@ -309,7 +308,7 @@ def run_validation(spark: SparkSession, df: DataFrame, suite: ValidationSuite,
                 actions[("set", c.name)] = (
                     lambda fr=frame: _frame_counts(fr))
 
-    results = run_concurrently(spark, actions, concurrent_jobs)
+    results = run_concurrently(spark, actions)
     profile, counts_by_part, over_cap = results.pop("__fused__")
     inline_ref |= {c.name for c, _ in dim_refs} - over_cap.keys()
     set_counts: dict[str, dict[str, int]] = dict(over_cap)

@@ -114,9 +114,9 @@ RELEASED = {
     ("health.py", "emd_report"):
         "finally, after the report's localCheckpoint",
     ("lm.py", "unigram_model"):
-        "after the head's localCheckpoint",
+        "finally, after the head's localCheckpoint",
     ("profile.py", "_hist_probe"):
-        "after the kept histograms are collected",
+        "finally, after the kept histograms are collected",
     ("profile.py", "_freq_probe"):
         "finally, after the top-k rows are collected",
     ("vocab.py", "vocab_drift_summary"):
@@ -130,27 +130,37 @@ KEPT = {
 }
 
 
+def _calls(node, attr):
+    return [n for n in ast.walk(node) if isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute) and n.func.attr == attr]
+
+
 def _persists():
-    """(module, function, source) for every ``.persist(`` or
-    ``.cache()`` call under ``operators/``."""
+    """(module, function, node) for every function that makes a
+    ``.persist(`` or ``.cache()`` call under ``operators/``."""
     out = []
     for path in sorted(OPERATORS.glob("*.py")):
         src = path.read_text()
         for fn in ast.walk(ast.parse(src)):
             if not isinstance(fn, ast.FunctionDef):
                 continue
-            calls = [n for n in ast.walk(fn) if isinstance(n, ast.Call)
-                     and isinstance(n.func, ast.Attribute)
-                     and n.func.attr in ("persist", "cache")]
-            if calls:
-                out.append((path.name, fn.name,
-                            ast.get_source_segment(src, fn)))
+            if _calls(fn, "persist") or _calls(fn, "cache"):
+                out.append((path.name, fn.name, fn))
     return out
 
 
 def test_every_operator_persist_is_accounted_for():
     found = _persists()
     assert {(m, f) for m, f, _ in found} == set(RELEASED) | set(KEPT)
-    for module, fn, src in found:
-        if (module, fn) in RELEASED:
-            assert ".unpersist(" in src, f"{module}:{fn} never releases"
+    for module, fn, node in found:
+        if (module, fn) not in RELEASED:
+            continue
+        # a release that only runs on success leaves the frame cached
+        # whenever an action fails, so every one sits in a finally
+        released = {id(c) for c in _calls(node, "unpersist")}
+        in_finally = {id(c) for t in ast.walk(node) if isinstance(t, ast.Try)
+                      for stmt in t.finalbody
+                      for c in _calls(stmt, "unpersist")}
+        assert released, f"{module}:{fn} never releases"
+        assert released <= in_finally, \
+            f"{module}:{fn} releases outside a finally"

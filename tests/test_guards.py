@@ -339,7 +339,8 @@ def test_referential_dim_cap_paths(spark, sequences, monkeypatch,
 # ---------------------------------------------------------------------------
 
 @pytest.mark.parametrize("concurrent_jobs", [1, 4])
-def test_fused_pass_with_overflowing_hist_candidate(wide, concurrent_jobs):
+def test_fused_pass_with_overflowing_hist_candidate(wide, concurrent_jobs,
+                                                    monkeypatch):
     import numpy as np
 
     import data_validation_spark.operators.profile as prof
@@ -349,14 +350,15 @@ def test_fused_pass_with_overflowing_hist_candidate(wide, concurrent_jobs):
              Component("small", "numeric", extractor="id % 37"),
              Component("mod7", "categoric",
                        extractor="cast(id % 7 as string)")]
+    monkeypatch.setattr(prof, "CONCURRENT_ACTIONS", concurrent_jobs)
     orig = prof.HIST_MAX_GROUPS
     prof.HIST_MAX_GROUPS = 1000  # big_id overflows, small (4 × 37) fits
     try:
         p, counts = prof.build_profile_and_counts(
-            wide, comps, ["grp"], row_conds={"even": F.col("id") % 2 == 0},
-            concurrent_jobs=concurrent_jobs)
-        sketch = build_profile(wide, comps[:1], ["grp"],
-                               quantile_strategy="sketch")
+            wide, comps, ["grp"], row_conds={"even": F.col("id") % 2 == 0})
+        sketch = build_profile(
+            wide, [Component("big_id", "numeric", quantile_strategy="sketch")],
+            ["grp"])
     finally:
         prof.HIST_MAX_GROUPS = orig
 

@@ -41,7 +41,7 @@ def test_ge_import_maps_every_type_and_runs(spark):
     df = spark.createDataFrame(
         [("a1", 5, "web", 1), ("a2", 200, "ftp", 1), ("a2", 7, "web", 9)],
         "doc_id string, val int, src string, lo int")
-    res = run_validation(spark, df, suite, concurrent_jobs=1)
+    res = run_validation(spark, df, suite)
     by = {v["constraint"]: v for v in res.verdicts}
     assert by["expect_column_values_to_be_between_val"]["n_violations"] == 1
     assert by["expect_column_values_to_be_in_set_src"]["n_violations"] == 1
@@ -81,7 +81,7 @@ def test_ge_row_condition_becomes_where(spark):
     assert suite.constraints[0].params["where"] == "src = 'web'"
     df = spark.createDataFrame(
         [("web", 5), ("web", 50), ("ftp", 500)], "src string, val int")
-    res = run_validation(spark, df, suite, concurrent_jobs=1)
+    res = run_validation(spark, df, suite)
     assert res.verdicts[0]["n_violations"] == 1   # only the web 50
 
     with pytest.raises(ValueError, match="parser"):
@@ -103,7 +103,7 @@ def test_ge_strict_bounds_map_exclusively(spark):
     c = suite.constraints[0]
     assert c.kind == "expression"
     df = spark.createDataFrame([(0,), (1,), (10,), (None,)], "val int")
-    res = run_validation(spark, df, suite, concurrent_jobs=1)
+    res = run_validation(spark, df, suite)
     # 0 and 10 are now violations (exclusive); NULL passes (GE between
     # never counts NULL unexpected — same as the bounds kind)
     assert res.verdicts[0]["n_violations"] == 2
@@ -160,7 +160,7 @@ def test_ge_pair_where_null_scope_means_out_of_scope(spark):
          ("y", 5, 1),      # in scope, ok
          (None, 1, 5)],    # NULL scope -> out of scope, NOT a violation
         "flag string, a int, b int")
-    res = run_validation(spark, df, suite, concurrent_jobs=1)
+    res = run_validation(spark, df, suite)
     assert res.verdicts[0]["n_violations"] == 1
 
 
@@ -175,7 +175,7 @@ def test_ge_pair_ignore_row_if_policies(spark):
              "kwargs": {"column_A": "a", "column_B": "b",
                         "ignore_row_if": pol}}]})
         df = spark.createDataFrame(df_rows, "a int, b int")
-        res = run_validation(spark, df, suite, concurrent_jobs=1)
+        res = run_validation(spark, df, suite)
         counts[pol] = res.verdicts[0]["n_violations"]
     # (1,5) always fails; (1,None) fails unless either-missing ignores
     # it; (None,None) fails only under "neither"

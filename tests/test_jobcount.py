@@ -99,15 +99,18 @@ def test_no_sink_run_matches_resume_path_verdicts(spark, tmp_path):
     assert sorted(a.partitions) == sorted(b.partitions)
 
 
-def test_flagship_serial_and_concurrent_runs_agree(spark):
-    """``concurrent_jobs=1`` runs every action one after another; the
-    default overlaps them.  Both give the same verdicts and profile."""
+def test_flagship_serial_and_concurrent_runs_agree(spark, monkeypatch):
+    """``CONCURRENT_ACTIONS = 1`` runs every action one after another;
+    the default overlaps them.  Both give the same verdicts and
+    profile."""
+    from data_validation_spark.operators import profile
     df = synth_sequences(spark, 2000).persist()
     df.count()
     suite = _flagship_suite()
     dims = {"allowed_sources": allowed_sources_df(spark)}
-    serial = run_validation(spark, df, suite, dims=dims, resume=False,
-                            concurrent_jobs=1)
+    with monkeypatch.context() as m:
+        m.setattr(profile, "CONCURRENT_ACTIONS", 1)
+        serial = run_validation(spark, df, suite, dims=dims, resume=False)
     default = run_validation(spark, df, suite, dims=dims, resume=False)
     df.unpersist()
     assert serial.verdicts == default.verdicts

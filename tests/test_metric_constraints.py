@@ -58,7 +58,7 @@ def test_pattern_rides_fused_pass_and_materializes_rows(spark, mdf,
     suite = _suite([Constraint("id_shape", "pattern",
                                {"component": "doc_id",
                                 "pattern": "^[a-z][0-9]+$"})])
-    res = run_validation(spark, mdf, suite, concurrent_jobs=1)
+    res = run_validation(spark, mdf, suite)
     assert _verdict(res, "source=api", "id_shape")["n_violations"] == 1
     assert _verdict(res, "source=web", "id_shape")["passed"]
 
@@ -73,7 +73,7 @@ def test_pattern_rides_fused_pass_and_materializes_rows(spark, mdf,
 def test_pattern_casts_non_string_values(spark, mdf):
     suite = _suite([Constraint("ntok_digit", "pattern",
                                {"component": "n_tok", "pattern": "^[12]$"})])
-    res = run_validation(spark, mdf, suite, concurrent_jobs=1)
+    res = run_validation(spark, mdf, suite)
     # web: n_tok 3 fails, 2 passes; api: 1,2,1 all pass
     assert _verdict(res, "source=web", "ntok_digit")["n_violations"] == 1
     assert _verdict(res, "source=api", "ntok_digit")["passed"]
@@ -84,7 +84,7 @@ def test_pattern_over_derived_component_uses_extractor(spark, mdf):
                                {"component": "len_tokens",
                                 "pattern": "^[123]$"})])
     # len_tokens extractor = size(tokens): lengths 3,2 / 1,2,1 — all match
-    res = run_validation(spark, mdf, suite, concurrent_jobs=1)
+    res = run_validation(spark, mdf, suite)
     assert all(v["passed"] for v in res.verdicts)
 
 
@@ -98,7 +98,7 @@ def test_stat_bounds_per_partition_from_profile(spark, mdf):
         Constraint("max_len", "stat_bounds",
                    {"component": "len_tokens", "stat": "max", "max": 10}),
     ])
-    res = run_validation(spark, mdf, suite, concurrent_jobs=1)
+    res = run_validation(spark, mdf, suite)
     # web mean 2.5 breaches [1,2]; api mean 4/3 passes
     assert not _verdict(res, "source=web", "mean_ntok")["passed"]
     assert _verdict(res, "source=api", "mean_ntok")["passed"]
@@ -118,7 +118,7 @@ def test_stat_bounds_missing_stat_fails_closed(spark):
                                 {"component": "x", "stat": "std",
                                  "max": 100.0})],
         partition_cols=["grp"])
-    res = run_validation(spark, df, suite, concurrent_jobs=1)
+    res = run_validation(spark, df, suite)
     assert _verdict(res, "grp=a", "x_std")["passed"]
     assert not _verdict(res, "grp=b", "x_std")["passed"]
 
@@ -134,7 +134,7 @@ def test_stat_bounds_pinv_and_n(spark):
             Constraint("x_n", "stat_bounds",
                        {"component": "x", "stat": "n", "min": 4, "max": 4}),
         ])
-    res = run_validation(spark, df, suite, concurrent_jobs=1)
+    res = run_validation(spark, df, suite)
     # pinv = 2/4 (NULL + NaN both invalid) > 0.4 → breach; n = 4 exact
     assert not _verdict(res, "<global>", "x_pinv")["passed"]
     assert _verdict(res, "<global>", "x_n")["passed"]
@@ -145,7 +145,7 @@ def test_stat_bounds_pinv_and_n(spark):
 def test_row_count_bounds(spark, mdf):
     suite = _suite([Constraint("big_enough", "row_count", {"min": 3}),
                     Constraint("not_huge", "row_count", {"max": 2})])
-    res = run_validation(spark, mdf, suite, concurrent_jobs=1)
+    res = run_validation(spark, mdf, suite)
     assert not _verdict(res, "source=web", "big_enough")["passed"]  # 2 < 3
     assert _verdict(res, "source=api", "big_enough")["passed"]      # 3
     assert _verdict(res, "source=web", "not_huge")["passed"]
@@ -156,7 +156,7 @@ def test_freshness_verdicts_and_as_of_forms(spark, mdf):
     iso = Constraint("fresh", "freshness",
                      {"component": "day", "max_age_seconds": 86400 * 40,
                       "as_of": "2026-02-01T00:00:00"})
-    res = run_validation(spark, mdf, _suite([iso]), concurrent_jobs=1)
+    res = run_validation(spark, mdf, _suite([iso]))
     assert _verdict(res, "source=web", "fresh")["passed"]   # 2026-01-06
     assert not _verdict(res, "source=api", "fresh")["passed"]  # 2025-06-03
 
@@ -186,7 +186,7 @@ def test_distinctness_metrics_and_null_as_value(spark):
         Constraint("ur", "distinctness",
                    {**base, "metric": "unique_ratio", "min": 0.3}),
     ])
-    res = run_validation(spark, df, suite, concurrent_jobs=1)
+    res = run_validation(spark, df, suite)
     # values: k1×2, k2×1, NULL×2 → distinct 3/5 = 0.6 < 0.7 breach;
     # exactly-once 1/5 = 0.2 < 0.3 breach — NULLs must NOT read unique
     assert not _verdict(res, "<global>", "dr")["passed"]
@@ -196,7 +196,7 @@ def test_distinctness_metrics_and_null_as_value(spark):
         Constraint("dr2", "distinctness",
                    {**base, "metric": "distinct_ratio", "min": 0.5}),
     ])
-    res2 = run_validation(spark, df, ok, concurrent_jobs=1)
+    res2 = run_validation(spark, df, ok)
     assert _verdict(res2, "<global>", "dr2")["passed"]
 
 
@@ -221,7 +221,7 @@ def _full_suite():
 
 def test_runner_and_evaluate_constraints_agree(spark, mdf):
     suite = _full_suite()
-    res = run_validation(spark, mdf, suite, concurrent_jobs=1)
+    res = run_validation(spark, mdf, suite)
     run = evaluate_constraints(mdf, suite)
     ev = sorted(((r["partition"], r["constraint"], int(r["n_violations"]),
                   r["passed"]) for r in run.verdicts.collect()))
@@ -230,13 +230,14 @@ def test_runner_and_evaluate_constraints_agree(spark, mdf):
     assert ev == rv
 
 
-def test_concurrent_jobs_identical_verdicts(spark, mdf):
+def test_concurrent_jobs_identical_verdicts(spark, mdf, monkeypatch):
+    from data_validation_spark.operators import profile
     suite = _full_suite()
     key = lambda v: (v["partition"], v["constraint"])  # noqa: E731
-    serial = sorted(run_validation(spark, mdf, suite,
-                                   concurrent_jobs=1).verdicts, key=key)
-    pooled = sorted(run_validation(spark, mdf, suite,
-                                   concurrent_jobs=4).verdicts, key=key)
+    monkeypatch.setattr(profile, "CONCURRENT_ACTIONS", 1)
+    serial = sorted(run_validation(spark, mdf, suite).verdicts, key=key)
+    monkeypatch.setattr(profile, "CONCURRENT_ACTIONS", 4)
+    pooled = sorted(run_validation(spark, mdf, suite).verdicts, key=key)
     assert serial == pooled
 
 
@@ -251,7 +252,7 @@ def test_expr_only_constraints_no_component_key(spark, mdf):
                     "max_age_seconds": 86400 * 40,
                     "as_of": "2026-02-01T00:00:00"}),
     ])
-    res = run_validation(spark, mdf, suite, concurrent_jobs=1)
+    res = run_validation(spark, mdf, suite)
     assert _verdict(res, "source=web", "len_pat")["passed"]
     assert not _verdict(res, "source=api", "fresh_expr")["passed"]
 
@@ -328,7 +329,7 @@ def test_ordering_kind_per_partition_verdicts(spark):
                        {"key": "u", "arrival": "arr", "component": "ts",
                         "max_lateness_seconds": 40}),
         ])
-    res = run_validation(spark, df, suite, concurrent_jobs=1)
+    res = run_validation(spark, df, suite)
     # p1: late_micro = 333333 (1/3) > 0.25 -> fail; <= 0.5 -> pass;
     # max 50s > 40s cap -> fail.  p2: everything passes.
     assert not _verdict(res, "part=p1", "mostly_ordered")["passed"]
@@ -355,7 +356,7 @@ def test_ordering_kind_where_scope_and_preflight(spark):
                                  "component": "ts",
                                  "max_late_ratio": 0.0,
                                  "where": "arr <= 2"})])
-    res = run_validation(spark, df, suite, concurrent_jobs=1)
+    res = run_validation(spark, df, suite)
     assert all(v["passed"] for v in res.verdicts)
 
     bad = ValidationSuite(

@@ -258,7 +258,7 @@ def test_suggest_suite_metric_kinds(spark):
     assert kinds["row_count_min"] == "row_count"
     assert kinds["n_tok_mean"] == "stat_bounds"
 
-    clean = run_validation(spark, df, suite, concurrent_jobs=1)
+    clean = run_validation(spark, df, suite)
     assert clean.passed
 
     # a level shift: +400 on a [29, 2010] envelope — most rows stay in
@@ -266,14 +266,14 @@ def test_suggest_suite_metric_kinds(spark):
     # (clean per-source deviation from the global mean is ≤ 50.1 on
     # this seeded data; the pad is 99, the shifted deviation ≥ 350)
     shifted = df.withColumn("n_tok", F.col("n_tok") + F.lit(400))
-    res = run_validation(spark, shifted, suite, concurrent_jobs=1)
+    res = run_validation(spark, shifted, suite)
     mean_vs = [v for v in res.verdicts if v["constraint"] == "n_tok_mean"]
     assert mean_vs and all(not v["passed"] for v in mean_vs)
 
     # a truncated feed (web dropped to ~1 row, below the 16-row floor)
     trunc = df.filter((F.col("source") != "web")
                       | (F.xxhash64("doc_id") % 1000 == 0))
-    res2 = run_validation(spark, trunc, suite, concurrent_jobs=1)
+    res2 = run_validation(spark, trunc, suite)
     rc = {v["partition"]: v["passed"] for v in res2.verdicts
           if v["constraint"] == "row_count_min"}
     assert not rc["source=web"]

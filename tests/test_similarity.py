@@ -257,3 +257,92 @@ def test_knn_join_k_larger_than_cells(emb):
                                   n_probe=1).collect()
     assert 0 < len(out) < N          # one cell's worth
     assert all(r["query_id"] == 0 for r in out)
+
+
+# ---------------------------------------------------------------------------
+# the shared kernels: pair sweep, nearest-cell pick, sign buckets
+# ---------------------------------------------------------------------------
+
+def _brute_pairs(ids, mat, threshold):
+    norms = np.linalg.norm(mat, axis=1)
+    unit = mat / np.where(norms == 0, 1.0, norms)[:, None]
+    cos = unit @ unit.T
+    return {(min(ids[i], ids[j]), max(ids[i], ids[j])): cos[i, j]
+            for i in range(len(ids)) for j in range(i + 1, len(ids))
+            if cos[i, j] >= threshold}
+
+
+@pytest.mark.parametrize("threshold", [-1.0, 0.25])
+def test_cosine_pairs_sweeps_every_block(monkeypatch, threshold):
+    """A group spanning several blocks, the last of them one row that
+    still has a pair to emit, gives numpy brute force's pairs and
+    cosines whatever order its rows arrive in."""
+    import pandas as pd
+    rng = np.random.default_rng(11)
+    block, n = 4, 3 * 4 + 2  # rows 12 and 13 form the last block
+    mat = rng.standard_normal((n, 6))
+    mat[5] = mat[2] * 3.0    # a cosine-1 pair in different blocks
+    mat[9] = 0.0             # a zero row stays zero, never NaN
+    ids = rng.permutation(np.arange(100, 100 + 7 * n, 7))
+    pdf = pd.DataFrame({"vec_id": ids, "embedding": list(mat)})
+    monkeypatch.setattr(similarity, "_PAIR_BLOCK", block)
+    a, b, cos = similarity.cosine_pairs(pdf, "embedding", "vec_id",
+                                        threshold)
+    expect = _brute_pairs(ids, mat, threshold)
+    # no cosine sits within rounding of the threshold
+    assert min(abs(c - threshold)
+               for c in _brute_pairs(ids, mat, -2.0).values()) > 1e-9
+    assert (a < b).all()
+    got = dict(zip(zip(a.tolist(), b.tolist()), cos.tolist()))
+    assert len(got) == len(a) and got.keys() == expect.keys()
+    for k, c in expect.items():
+        assert got[k] == pytest.approx(c, abs=1e-12)
+    # one block holding the whole group gives the same pairs
+    monkeypatch.setattr(similarity, "_PAIR_BLOCK", 2048)
+    whole = similarity.cosine_pairs(pdf, "embedding", "vec_id", threshold)
+    assert sorted(zip(*whole[:2])) == sorted(got)
+
+
+def test_cell_kernels_agree_and_break_ties_by_cell_id(emb, vectors):
+    """Two identical centroids tie for every vector nearest them: the
+    pick keeps the lower cell id.  ``ivf_index`` is
+    ``ivf_index_multi`` at one probe, and ``ivf_assign_queries``
+    probes the cells ``ivf_index_multi`` assigns."""
+    cents = similarity.ivf_centroids(emb, DIM, n_centroids=4)
+    cents = np.vstack([cents[:1], cents[:1], cents[1:]])  # cells 0 == 1
+
+    def cells(frame, id_col):
+        # no sort: a vector's probe rows keep the kernel's nearest-first
+        # order, which a sort by id alone would not preserve
+        out: dict[int, list[int]] = {}
+        for r in frame.collect():
+            out.setdefault(r[id_col], []).append(r["cell"])
+        return out
+
+    one = cells(similarity.ivf_index(emb, cents), "vec_id")
+    assert one == cells(similarity.ivf_index_multi(emb, cents, 1), "vec_id")
+    assert all(len(c) == 1 and c[0] != 1 for c in one.values())
+    tied = [i for i, c in one.items() if c == [0]]
+    assert tied  # some vectors sit nearest the duplicated centroid
+    multi = cells(similarity.ivf_index_multi(emb, cents, 3), "vec_id")
+    queries = similarity.ivf_assign_queries(emb, cents, 3)
+    assert multi == cells(queries, "query_id")
+    assert all(multi[i][:2] == [0, 1] for i in tied)
+    unit = vectors / np.linalg.norm(vectors, axis=1, keepdims=True)
+    cu = cents / np.linalg.norm(cents, axis=1, keepdims=True)
+    expect = np.argsort(-(unit.astype(np.float64) @ cu.T), kind="stable",
+                        axis=1)[:, :3]
+    assert all(multi[i] == expect[i].tolist() for i in range(N))
+
+
+def test_lsh_bucket_ids_are_plane_sign_bits(emb, vectors):
+    """Bit ``b`` of a vector's bucket is the sign of its dot product
+    with hyperplane ``b``."""
+    planes = similarity._hyperplanes(DIM, 8, similarity.DEFAULT_SEED)
+    signs = (vectors.astype(np.float64) @ planes.T) > 0
+    expect = (signs * (1 << np.arange(8))).sum(axis=1)
+    got = {r["vec_id"]: r["bucket"] for r in
+           similarity.lsh_bucket_index(emb, DIM, n_planes=8).collect()}
+    assert similarity.lsh_bucket_index(emb, DIM).columns == [
+        "vec_id", "bucket", "embedding"]
+    assert got == {i: int(expect[i]) for i in range(N)}
