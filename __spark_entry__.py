@@ -1908,10 +1908,10 @@ def q_dq_constraint_kinds(spark, sf_dir):
 def q_metric_constraints(spark, sf_dir):
     """The METRIC-assertion constraint family (deequ hasSize / hasMean /
     hasDistinctness / hasPattern / freshness) end-to-end through
-    run_validation: pattern rides the fused stats pass, stat_bounds is
-    free post-processing of the fused profile, row_count + freshness
-    share one column-pruned agg, distinctness is a two-phase value
-    collapse.  Output = the full per-(status-partition × constraint)
+    run_validation: pattern, stat_bounds, row_count and freshness all
+    ride the fused stats pass (a row count and three per-partition
+    aggregates beside the profile's own), distinctness is a two-phase
+    value collapse.  Output = the full per-(status-partition × constraint)
     verdict table; the oracle re-derives every verdict in SQL —
     thresholds sit between the per-status values so each metric kind
     produces BOTH pass and fail verdicts (a stuck-at-pass evaluator
@@ -1995,9 +1995,8 @@ def q_ordering_constraint(spark, sf_dir):
 def q_where_scoped(spark, sf_dir):
     """`where`-scoped constraints (deequ's analyzer scope option)
     end-to-end through run_validation: row-level scopes conjoin inside
-    the fused pass, scoped metrics ride the shared metric scan as
-    conditional aggregates, set-level scopes filter before the
-    operator.  Thresholds are placed BETWEEN the scoped and the global
+    the fused pass, scoped metrics ride the same pass as conditional
+    aggregates, set-level scopes filter before the operator.  Thresholds are placed BETWEEN the scoped and the global
     value (F-mean 249,983.9 vs global 250,562.6 straddle the 250,100
     floor; O-mean 251,429.9 vs global straddle 250,800) so an evaluator
     that ignores the scope flips at least two verdicts — the oracle

@@ -66,9 +66,10 @@ def numeric_quantile_expr(name: str, expr: str,
             .alias(f"{name}__quantiles"))
 
 
-def _invalid_valid(expr: str) -> tuple[Column, Column]:
-    """(is-invalid flag, value as double or NULL when invalid)."""
-    c = F.expr(expr)
+def _invalid_valid(expr: str | Column) -> tuple[Column, Column]:
+    """(is-invalid flag, value as double or NULL when invalid): a
+    numeric value is invalid when NULL or NaN."""
+    c = F.expr(expr) if isinstance(expr, str) else expr
     dbl = c.cast("double")
     invalid = c.isNull() | F.isnan(dbl)
     return invalid, F.when(~invalid, dbl)

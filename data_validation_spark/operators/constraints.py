@@ -15,15 +15,21 @@ Every violation row carries the full original row (token-array-equality
 invariant, BASELINE.json:15), the partition label, and an
 ``errors: array<string>`` of failed constraint names.
 
+Every per-partition result is keyed by ONE label, formatted in Catalyst
+by ``partition_label_col`` (``c=v/...``, a NULL value as
+``c=__HIVE_DEFAULT_PARTITION__``); aggregates attach it after grouping
+(``with_label``), once per group.
+
 Each evaluation step has ONE implementation here, which
 ``evaluate_constraints`` (and so ``validate_stream``) and
 ``plans/runner.run_validation`` both call: ``resolve_dim`` (dimension
 lookup), ``set_violation_frame`` / ``violation_frame`` (violation rows),
-``violation_counts`` (per-partition counts of a violation frame) and
-``metric_value_thunks`` (metric measurements).  The runner's no-sink
-path adds counts-only plans (``uniqueness_violation_counts``,
-``referential_violation_counts`` and the fused stats pass) that never
-materialize violation rows.
+``violation_counts`` (per-partition counts of a violation frame),
+``metric_aggs`` (the aggregate measuring each stat_bounds / row_count /
+freshness constraint) and ``metric_value_thunks`` (the actions that
+measure the rest).  The runner's no-sink path adds counts-only plans
+(``uniqueness_violation_counts``, ``referential_violation_counts`` and
+the fused stats pass) that never materialize violation rows.
 """
 
 from __future__ import annotations
@@ -35,9 +41,11 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from data_validation_spark.functions.stats import _invalid_valid
 from data_validation_spark.plans.suite import (
     DISTINCTNESS_METRICS,
     STAT_BOUNDS_STATS,
+    Component,
     Constraint,
     ValidationSuite,
 )
@@ -58,12 +66,46 @@ SUPPORTED_KINDS = (ROW_LEVEL_KINDS + SET_LEVEL_KINDS + METRIC_KINDS
                    + ("drift",))
 
 
+#: how a NULL partition value renders in a label — the name Spark gives
+#: the directory of a NULL partition
+NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+#: the label column of a per-partition aggregate (``with_label``)
+LABEL = "__label"
+
+
 def partition_label_col(partition_cols: list[str]) -> Column:
+    """The engine's one partition label, keying every verdict, violation
+    row, profile partition and manifest row: ``c=v`` per partition
+    column, joined by ``/``.  ``v`` is the value cast to string as
+    Spark's partition paths write it (booleans ``true``/``false``, dates
+    ``2024-01-31``); a NULL value is ``c=__HIVE_DEFAULT_PARTITION__``.
+    No partition columns: ``<global>``."""
     if not partition_cols:
         return F.lit("<global>")
-    parts = [F.concat(F.lit(f"{c}="), F.col(c).cast("string"))
+    parts = [F.concat(F.lit(f"{c}="),
+                      F.coalesce(F.col(c).cast("string"),
+                                 F.lit(NULL_PARTITION)))
              for c in partition_cols]
     return F.concat_ws("/", *parts)
+
+
+def with_label(grouped: DataFrame, partition_cols: list[str]) -> DataFrame:
+    """``grouped`` — an aggregate keyed by (at least) the partition
+    columns — plus its ``LABEL`` column: one label per group, never one
+    per input row."""
+    return grouped.withColumn(LABEL, partition_label_col(partition_cols))
+
+
+def agg_col(name: str) -> str:
+    """The column holding constraint ``name``'s per-partition aggregate
+    — prefixed so no constraint name collides with a partition column
+    or a component's stat column."""
+    return f"__x_{name}"
+
+
+def count_when(cond: Column) -> Column:
+    """The aggregate counting the rows where ``cond`` is TRUE."""
+    return F.sum(F.when(cond, 1).otherwise(0))
 
 
 def _scope_cond(c: Constraint) -> Column | None:
@@ -430,7 +472,8 @@ def evaluate_constraints(df: DataFrame, suite: ValidationSuite,
     metric_cs = [c for c in constraints if c.kind in METRIC_KINDS]
     if metric_cs:
         vals: dict[str, dict] = {}
-        for measure in metric_value_thunks(df, metric_cs, pcols):
+        for measure in metric_value_thunks(df, metric_cs, pcols,
+                                           suite.components):
             vals.update(measure())
         observed = sorted({p for d in vals.values() for p in d}) \
             or ["<global>"]
@@ -555,17 +598,18 @@ def functional_dependency_violations(df: DataFrame, determinant: list[str],
 # evaluate_constraints and plans/runner.run_validation measure and judge
 # metric constraints through the same functions, so both paths compute
 # identical verdicts:
-#   * measurement — metric_value_thunks: ONE column-pruned grouped agg
-#                   (metric_fused_frame) for every stat_bounds + freshness
-#                   + row_count constraint, plus one action per
-#                   distinctness (a two-phase value-collapse) and ordering
-#                   (a key-hash window) constraint — different group keys
+#   * measurement — metric_aggs: ONE per-partition aggregate column per
+#                   stat_bounds / row_count / freshness constraint, scoped
+#                   or not.  run_validation adds them to the fused stats
+#                   pass (operators/profile.py), so they cost no scan of
+#                   their own; evaluate_constraints groups them into one
+#                   aggregate of their own (metric_fused_frame).  Each
+#                   distinctness (a two-phase value-collapse) and
+#                   ordering (a key-hash window) constraint is one more
+#                   action (metric_value_thunks) — different group keys
 #                   cannot fuse;
 #   * evaluation  — metric_verdict_rows / metric_breach (driver-side,
 #                   ~numPartitions rows).
-# run_validation reads unscoped stat_bounds values straight from the
-# fused profile instead (profile_stat_values, zero extra scans); a parity
-# test pins the two sources to identical verdicts.
 
 
 def as_of_micros(params: dict) -> int:
@@ -583,93 +627,92 @@ def as_of_micros(params: dict) -> int:
     return int(ts.timestamp() * 1_000_000)
 
 
-def _stat_bounds_agg(c: Constraint) -> Column:
+def _stat_bounds_agg(c: Constraint, ctype: str) -> Column:
+    """The aggregate of one stat_bounds constraint, under the profile's
+    value rules for a ``ctype`` component: min / max / mean / std over
+    the values that are neither NULL nor NaN, pinv = the share of rows
+    that are NULL (or NaN, for a numeric component), n = rows."""
     p = c.params
-    raw = _target(p)
     scope = _scope_cond(c)
-    # conditional aggregation: `when` without `otherwise` yields NULL
-    # for out-of-scope rows and every agg below ignores NULLs, so a
-    # scoped stat STILL rides the shared fused metric scan — N scoped
-    # assertions never multiply the number of passes
-    expr = raw if scope is None else F.when(scope, raw)
     stat = p["stat"]
-    if stat == "min":
-        return F.min(expr)
-    if stat == "max":
-        return F.max(expr)
-    if stat == "mean":
-        return F.avg(expr)
-    if stat == "std":
-        # sample stddev — matches the profile's np.std(ddof=1)
-        return F.stddev_samp(expr)
-    if stat == "pinv":
-        bad = (raw.isNull() | F.isnan(raw.cast("double"))).cast("double")
-        return F.avg(bad if scope is None else F.when(scope, bad))
     if stat == "n":
-        if scope is not None:
-            return F.sum(F.when(scope, 1).otherwise(0))
-        return F.count(F.lit(1))
-    raise ValueError(f"stat_bounds {c.name!r}: unknown stat {stat!r} "
-                     f"(supported: {STAT_BOUNDS_STATS})")
+        return F.count(F.lit(1)) if scope is None else count_when(scope)
+    if stat not in STAT_BOUNDS_STATS:
+        raise ValueError(f"stat_bounds {c.name!r}: unknown stat {stat!r} "
+                         f"(supported: {STAT_BOUNDS_STATS})")
+    raw = _target(p)
+    if ctype == "numeric":
+        invalid, valid = _invalid_valid(raw)
+    else:  # no NaN outside numerics, and no numeric stat either
+        invalid, valid = raw.isNull(), F.lit(None).cast("double")
+    # conditional aggregation: `when` without `otherwise` yields NULL
+    # for out-of-scope rows and every agg below ignores NULLs
+    agg = {"min": F.min, "max": F.max, "mean": F.avg, "std": F.stddev_samp,
+           "pinv": F.avg}[stat]
+    value = invalid.cast("double") if stat == "pinv" else valid
+    return agg(value if scope is None else F.when(scope, value))
+
+
+def metric_aggs(metric_cs: list[Constraint],
+                components: list[Component] = ()) -> dict[str, Column]:
+    """The per-partition aggregate measuring each stat_bounds /
+    row_count / freshness constraint of ``metric_cs`` (freshness: max
+    epoch micros), by constraint name.  A ``where`` scope enters as
+    conditional aggregation, so N scoped assertions never add a pass.
+    ``components`` are the suite's: a stat_bounds constraint follows its
+    component's value rules (``_stat_bounds_agg``)."""
+    ctypes = {comp.name: comp.ctype for comp in components}
+    out: dict[str, Column] = {}
+    for c in metric_cs:
+        scope = _scope_cond(c)
+        if c.kind == "stat_bounds":
+            out[c.name] = _stat_bounds_agg(
+                c, ctypes.get(c.params["component"], "numeric"))
+        elif c.kind == "freshness":
+            us = F.unix_micros(_target(c.params).cast("timestamp"))
+            out[c.name] = F.max(us if scope is None else F.when(scope, us))
+        elif c.kind == "row_count":
+            out[c.name] = F.count(F.lit(1)) if scope is None \
+                else count_when(scope)
+    return out
 
 
 def metric_fused_frame(df: DataFrame, metric_cs: list[Constraint],
                        pcols: list[str],
-                       skip_stat_bounds: bool = False
-                       ) -> tuple[DataFrame | None, list[Constraint]]:
-    """ONE grouped aggregation measuring every stat_bounds / freshness /
-    row_count constraint per partition — no explicit select: Catalyst
-    prunes the scan to (pcols ∪ referenced exprs) from the agg alone
-    (asserted in PLANS.md), so on parquet a row_count-only suite
-    degenerates to a metadata-weight count scan.  Returns the frame
-    (columns ``__label, __m_0..``) and the constraints in column order."""
-    aggs: list[Column] = []
-    keep: list[Constraint] = []
-    for c in metric_cs:
-        scope = _scope_cond(c)
-        if c.kind == "stat_bounds" and not (skip_stat_bounds
-                                            and scope is None):
-            # skip_stat_bounds only skips UNSCOPED stat_bounds (those
-            # read the fused profile for free); a `where`-scoped stat
-            # cannot come from the unscoped profile, so it is measured
-            # here regardless
-            aggs.append(_stat_bounds_agg(c).alias(f"__m_{len(keep)}"))
-        elif c.kind == "freshness":
-            us = F.unix_micros(_target(c.params).cast("timestamp"))
-            aggs.append(F.max(us if scope is None else F.when(scope, us))
-                        .alias(f"__m_{len(keep)}"))
-        elif c.kind == "row_count":
-            cnt = F.count(F.lit(1)) if scope is None \
-                else F.sum(F.when(scope, 1).otherwise(0))
-            aggs.append(cnt.alias(f"__m_{len(keep)}"))
-        else:
-            continue
-        keep.append(c)
-    if not keep:
-        return None, []
-    label = partition_label_col(pcols).alias("__label")
-    return df.groupBy(label).agg(*aggs), keep
+                       components: list[Component] = ()
+                       ) -> DataFrame | None:
+    """ONE grouped aggregation of every ``metric_aggs`` column — no
+    explicit select: Catalyst prunes the scan to (pcols ∪ referenced
+    exprs) from the agg alone (asserted in PLANS.md), so on parquet a
+    row_count-only suite degenerates to a metadata-weight count scan.
+    Columns: the pcols, ``LABEL`` and ``agg_col(name)`` per constraint;
+    None when no constraint has an aggregate."""
+    aggs = metric_aggs(metric_cs, components)
+    if not aggs:
+        return None
+    return with_label(df.groupBy(*pcols).agg(
+        *[col.alias(agg_col(name)) for name, col in aggs.items()]), pcols)
 
 
 def metric_value_thunks(df: DataFrame, metric_cs: list[Constraint],
-                        pcols: list[str], skip_stat_bounds: bool = False
+                        pcols: list[str],
+                        components: list[Component] = ()
                         ) -> list[Callable[[], dict[str, dict]]]:
     """The independent actions that measure ``metric_cs``, as thunks
-    each returning ``{constraint: {partition: value}}`` (freshness
-    values are epoch micros): one for the fused metric aggregate when it
-    has anything to measure, one per distinctness and ordering
-    constraint.  No metric constraint, no thunk.  ``skip_stat_bounds``
-    leaves unscoped stat_bounds to ``profile_stat_values``.
-    Driver-bounded: one row per logical partition per action."""
+    each returning ``{constraint: {partition: value}}``: one for
+    ``metric_fused_frame`` when it has anything to measure, one per
+    distinctness and ordering constraint.  No metric constraint, no
+    thunk.  Driver-bounded: one row per logical partition per action."""
     thunks = []
-    frame, keep = metric_fused_frame(df, metric_cs, pcols,
-                                     skip_stat_bounds)
+    frame = metric_fused_frame(df, metric_cs, pcols, components)
     if frame is not None:
+        names = list(metric_aggs(metric_cs, components))
+
         def fused() -> dict[str, dict]:
-            out: dict[str, dict] = {c.name: {} for c in keep}
+            out: dict[str, dict] = {n: {} for n in names}
             for r in frame.collect():
-                for i, c in enumerate(keep):
-                    out[c.name][r["__label"]] = r[f"__m_{i}"]
+                for n in names:
+                    out[n][r[LABEL]] = r[agg_col(n)]
             return out
         thunks.append(fused)
     for c in metric_cs:
@@ -758,34 +801,6 @@ def ordering_values(df: DataFrame, c: Constraint,
     return out
 
 
-def stat_value_from_profile(profile, c: Constraint):
-    """stat_bounds value source inside run_validation: the fused stats
-    pass already computed every component stat, so the assertion is free
-    post-processing.  Returns ``{partition: value}`` over the profile's
-    partitions plus '<global>'."""
-    p = c.params
-    comp, stat = p["component"], p["stat"]
-    out: dict[str, object] = {}
-    gl = profile.components.get(comp)
-    out["<global>"] = getattr(gl.stats, stat, None) \
-        if gl is not None and gl.stats is not None else None
-    for part, comps in profile.partitions.items():
-        pc = comps.get(comp)
-        out[part] = getattr(pc.stats, stat, None) \
-            if pc is not None and pc.stats is not None else None
-    return out
-
-
-def profile_stat_values(profile, metric_cs: list[Constraint]
-                        ) -> dict[str, dict]:
-    """``{constraint: {partition: value}}`` for the unscoped stat_bounds
-    constraints of ``metric_cs`` — the ones
-    ``metric_value_thunks(skip_stat_bounds=True)`` leaves out — read from
-    a profile built over the same rows."""
-    return {c.name: stat_value_from_profile(profile, c) for c in metric_cs
-            if c.kind == "stat_bounds" and "where" not in c.params}
-
-
 def metric_breach(c: Constraint, value) -> bool:
     """Shared verdict rule for every METRIC kind.  ``value`` is the
     measured metric (freshness: max epoch micros).  None (no rows /
@@ -810,6 +825,8 @@ def metric_breach(c: Constraint, value) -> bool:
         return int(value) < threshold
     lo, hi = p.get("min"), p.get("max")
     v = float(value)
+    if v != v:  # NaN (a stat over ±inf) proves no bound either
+        return True
     return ((lo is not None and v < float(lo))
             or (hi is not None and v > float(hi)))
 

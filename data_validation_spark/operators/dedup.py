@@ -26,7 +26,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
@@ -409,19 +409,9 @@ def ngram_contamination(df: DataFrame, benchmark: DataFrame,
     ``broadcast_benchmark=False`` only if the benchmark's shingle set
     is itself too large to broadcast — it becomes a shuffle join.
     """
-    doc_sh = df.select(
-        F.col(id_col),
-        F.explode(word_shingles_col(text_col, k_shingle)).alias("__sh"))
-    bench_sh = (benchmark
-                .select(F.explode(word_shingles_col(text_col, k_shingle))
-                        .alias("__sh"))
-                .distinct())
-    if broadcast_benchmark:
-        bench_sh = F.broadcast(bench_sh)
-    return (doc_sh.join(bench_sh, "__sh")
-            .groupBy(id_col)
-            .agg(F.count(F.lit(1)).alias("n_hits"))
-            .filter(F.col("n_hits") >= min_hits))
+    return _contamination(df, benchmark,
+                          word_shingles_col(text_col, k_shingle), id_col,
+                          min_hits, broadcast_benchmark)
 
 
 def token_ngram_contamination(df: DataFrame, benchmark: DataFrame,
@@ -442,13 +432,18 @@ def token_ngram_contamination(df: DataFrame, benchmark: DataFrame,
     only matching (doc, gram) rows reach the per-doc count shuffle.
     """
     from data_validation_spark.functions.arrays import array_kgrams_col
-    doc_sh = df.select(
-        F.col(id_col),
-        F.explode(array_kgrams_col(F.col(tokens_col), k)).alias("__sh"))
-    bench_sh = (benchmark
-                .select(F.explode(array_kgrams_col(F.col(tokens_col), k))
-                        .alias("__sh"))
-                .distinct())
+    return _contamination(df, benchmark,
+                          array_kgrams_col(F.col(tokens_col), k), id_col,
+                          min_hits, broadcast_benchmark)
+
+
+def _contamination(df: DataFrame, benchmark: DataFrame, grams: Column,
+                   id_col: str, min_hits: int,
+                   broadcast_benchmark: bool) -> DataFrame:
+    """The body of both contamination screens: ``grams`` is the
+    gram-array column, evaluated over each side's own rows."""
+    doc_sh = df.select(F.col(id_col), F.explode(grams).alias("__sh"))
+    bench_sh = benchmark.select(F.explode(grams).alias("__sh")).distinct()
     if broadcast_benchmark:
         bench_sh = F.broadcast(bench_sh)
     return (doc_sh.join(bench_sh, "__sh")

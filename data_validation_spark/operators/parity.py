@@ -11,6 +11,8 @@ aggregate frames, so comparing two 100 TB snapshots shuffles kilobytes.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -45,9 +47,18 @@ def checksum_diff(ca: DataFrame, cb: DataFrame, partition_cols: list[str],
     renames_a = {c: f"{c}_a" for c in
                  ("checksum_sum", "n_rows_with_tokens", "n_tokens")}
     renames_b = {c: f"{c}_b" for c in renames_a}
+    # the partition keys join NULL-safely: a NULL partition is one
+    # partition on both sides, not two unmatched ones
+    keys_b = {c: f"__b_{c}" for c in partition_cols}
     ca = ca.withColumnsRenamed(renames_a)
-    cb = cb.withColumnsRenamed(renames_b)
-    out = ca.join(cb, on=partition_cols, how="full_outer")
+    cb = cb.withColumnsRenamed({**renames_b, **keys_b})
+    on = reduce(lambda x, y: x & y,
+                [F.col(c).eqNullSafe(F.col(k)) for c, k in keys_b.items()],
+                F.lit(True))
+    out = ca.join(cb, on, "full_outer").select(
+        *[F.coalesce(c, k).alias(c) for c, k in keys_b.items()],
+        *[c for c in ca.columns if c not in keys_b],
+        *[c for c in cb.columns if c not in keys_b.values()])
     match = (F.col("checksum_sum_a").eqNullSafe(F.col("checksum_sum_b"))
              & F.col("n_rows_with_tokens_a")
                .eqNullSafe(F.col("n_rows_with_tokens_b"))

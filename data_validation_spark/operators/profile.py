@@ -21,7 +21,7 @@ components are scanned (parquet column pruning) — profiles that skip
 from __future__ import annotations
 
 import threading
-from collections.abc import Callable, Hashable, Iterable
+from collections.abc import Callable, Hashable
 from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
@@ -38,6 +38,11 @@ from data_validation_spark.functions.stats import (
     numeric_quantile_expr,
     tokens_agg_exprs,
 )
+from data_validation_spark.operators.constraints import (
+    LABEL,
+    agg_col,
+    with_label,
+)
 from data_validation_spark.plans.suite import (
     CategoricStats,
     Component,
@@ -49,31 +54,19 @@ _NUMERIC_KEYS = ("n", "n_invalid", "min", "max", "mean", "std", "quantiles",
                  "elem_min", "elem_max")
 
 
-def partition_label(cols: list[str], values: Iterable) -> str:
-    return "/".join(f"{c}={v}" for c, v in zip(cols, values)) or "<global>"
-
-
 def _ccol(name: str) -> str:
     """Projected component column name — prefixed so a component named
     after a partition column never collides with it."""
     return f"__c_{name}"
 
 
-def _xcol(name: str) -> str:
-    return f"__x_{name}"
-
-
-def _project(df: DataFrame, components: list[Component],
-             partition_cols: list[str],
-             extra_conds: dict[str, F.Column] | None = None) -> DataFrame:
+def _project(df: DataFrame, components: list[Component]) -> DataFrame:
     """Evaluate extractor expressions once, up front (rdv Extractor ≡
-    Catalyst projection, SURVEY.md O7).  ``extra_conds`` are row-level
-    boolean columns (constraint predicates) evaluated in the same
-    projection so their per-partition counts ride the stats agg."""
-    cols = [F.col(c) for c in partition_cols]
-    cols += [F.expr(c.expr).alias(_ccol(c.name)) for c in components]
-    cols += [cond.alias(_xcol(n)) for n, cond in (extra_conds or {}).items()]
-    return df.select(*cols)
+    Catalyst projection, SURVEY.md O7).  The input columns stay, so the
+    pass's named aggregates can read them; Catalyst prunes the scan to
+    the columns something reads."""
+    return df.select("*", *[F.expr(c.expr).alias(_ccol(c.name))
+                            for c in components])
 
 
 # ---------------------------------------------------------------------------
@@ -294,6 +287,7 @@ def _hist_probe(df: DataFrame, hist: dict[str, F.Column],
         hist_counts = (df.select(*partition_cols, pair)
                        .select(*partition_cols, "pair.comp", "pair.val")
                        .groupBy(*partition_cols, "comp", "val").count())
+    hist_counts = with_label(hist_counts, partition_cols)
     guarded = hist.keys() - forced
     if len(hist) == 1 and guarded:
         # Common case (one integral component under guard): the
@@ -329,10 +323,8 @@ def _hist_probe(df: DataFrame, hist: dict[str, F.Column],
     for r in hist_rows:
         if r["val"] is None:
             continue
-        part = partition_label(partition_cols,
-                               [r[c] for c in partition_cols])
         hists.setdefault(r["comp"], {}).setdefault(
-            part, {})[int(r["val"])] = r["count"]
+            r[LABEL], {})[int(r["val"])] = r["count"]
     return hists, keep
 
 
@@ -344,7 +336,7 @@ def _freq_probe(df: DataFrame, comp: Component,
     map (≤ CATEGORIC_EXACT_MAX groups) or a cluster-side salted top-k.
     ``Component.freq_strategy`` pins the choice and skips the probe."""
     keys = [*partition_cols, _ccol(comp.name)]
-    counts_df = df.groupBy(*keys).count()
+    counts_df = with_label(df.groupBy(*keys).count(), partition_cols)
     if comp.freq_strategy == "exact":
         return counts_df.collect(), False
     if comp.freq_strategy == "topk":
@@ -368,7 +360,7 @@ def _freq_probe(df: DataFrame, comp: Component,
 
 def _catalyst_records(df: DataFrame, components: list[Component],
                       partition_cols: list[str],
-                      extra_names: list[str] | None = None,
+                      aggs: dict[str, F.Column],
                       sketch_forced: set[str] = frozenset()
                       ) -> tuple[list[dict], dict[str, dict]]:
     """The pass's independent Spark actions, submitted together (up to
@@ -376,8 +368,8 @@ def _catalyst_records(df: DataFrame, components: list[Component],
     driver once all of them have finished:
 
     * the main agg computes every numeric/tokens summary, every
-      categoric component's (n, n_invalid) totals and every
-      ``extra_names`` row-condition count;
+      categoric component's (n, n_invalid) totals and every named
+      aggregate of ``aggs``;
     * one melt job computes the exact-histogram quantiles of the
       integral components (``_hist_probe``);
     * one low-cardinality groupBy per categoric component computes its
@@ -403,16 +395,12 @@ def _catalyst_records(df: DataFrame, components: list[Component],
                       include_quantiles=comp.name not in hist)
     for comp in categoric:
         exprs += categoric_agg_exprs(comp.name, _ccol(comp.name))
-    extra_names = extra_names or []
-    exprs += [F.sum(F.when(F.col(_xcol(n)), 1).otherwise(0))
-              .alias(_xcol(n)) for n in extra_names]
+    exprs += [col.alias(agg_col(n)) for n, col in aggs.items()]
 
-    def grouped_agg(aggs: list[F.Column]) -> dict[str, dict]:
-        grouped = (df.groupBy(*partition_cols) if partition_cols else
-                   df.groupBy())
-        return {partition_label(partition_cols,
-                                [r[c] for c in partition_cols]): r.asDict()
-                for r in grouped.agg(*aggs).collect()}
+    def grouped_agg(cols: list[F.Column]) -> dict[str, dict]:
+        grouped = with_label(df.groupBy(*partition_cols).agg(*cols),
+                             partition_cols)
+        return {r[LABEL]: r.asDict() for r in grouped.collect()}
 
     actions: dict = {}
     if exprs:
@@ -434,8 +422,7 @@ def _catalyst_records(df: DataFrame, components: list[Component],
     records: list[dict] = []
     extras: dict[str, dict] = {}
     for part, d in totals.items():
-        if extra_names:
-            extras[part] = {n: d[_xcol(n)] for n in extra_names}
+        extras[part] = {n: d[agg_col(n)] for n in aggs}
         for comp in numericish:
             rec = {"partition": part, "component": comp.name,
                    "ctype": comp.ctype, "freq": None}
@@ -457,10 +444,9 @@ def _catalyst_records(df: DataFrame, components: list[Component],
         counts, use_topk = results[("freq", comp.name)]
         freq_by_part: dict[str, dict[str, int]] = {}
         for r in counts:
-            part = partition_label(partition_cols, [r[c] for c in partition_cols])
             val = r[_ccol(comp.name)]
             if val is not None:
-                freq_by_part.setdefault(part, {})[str(val)] = r["count"]
+                freq_by_part.setdefault(r[LABEL], {})[str(val)] = r["count"]
         for part, tot in totals.items():
             freq = freq_by_part.get(part, {})
             if use_topk:
@@ -645,22 +631,22 @@ def build_profile(df: DataFrame, components: list[Component],
 
 def build_profile_and_counts(df: DataFrame, components: list[Component],
                              partition_cols: list[str] | None = None,
-                             row_conds: dict[str, F.Column] | None = None,
+                             aggs: dict[str, F.Column] | None = None,
                              name: str = "profile"
-                             ) -> tuple[Profile, dict[str, dict[str, int]]]:
+                             ) -> tuple[Profile, dict[str, dict]]:
     """The spec's literal "single per-partition vectorized pass"
     (BASELINE.json:6): one grouped aggregation computes every
-    component's stats AND the per-partition violation count of every
-    row-level constraint (``row_conds``: name → boolean violation
-    predicate).  Returns (profile, counts[partition][constraint]).
-    Sharing the scan halves the number of tokens-column decodes per
-    validation run (the dominant cost — see BENCH/BASELINE.md).
+    component's stats AND every named per-partition aggregate of
+    ``aggs`` (name → aggregate column over ``df``'s columns: a row-level
+    constraint's violation count, a metric constraint's measurement).
+    Returns (profile, values[partition][name]), every partition keyed by
+    ``constraints.partition_label_col``.  Sharing the scan halves the
+    number of tokens-column decodes per validation run (the dominant
+    cost — see BENCH/BASELINE.md).
     """
     partition_cols = partition_cols or []
-    row_conds = row_conds or {}
-    projected = _project(df, components, partition_cols, row_conds)
     records, extras = _catalyst_records(
-        projected, components, partition_cols, extra_names=list(row_conds),
+        _project(df, components), components, partition_cols, aggs or {},
         sketch_forced=_array_referencing(components, df))
 
     profile = Profile(name=name)

@@ -118,7 +118,9 @@ def brute_force_topk_pandas(df: DataFrame, query_vec, k: int = 10,
     is scored as one matrix-vector product, and only each batch's local
     top-k survives to the final TakeOrdered."""
     q = np.asarray(query_vec, dtype=np.float64)
-    qn = q / np.linalg.norm(q)
+    # an all-zero query stays zero, so every cosine is 0.0 as in
+    # brute_force_topk; any other query divides by its own norm
+    qn = q / (np.linalg.norm(q) or 1.0)
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark import StorageLevel
 
 from data_validation_spark.operators.constraints import (
+    LABEL,
     METRIC_KINDS,
     ROW_LEVEL_KINDS,
     SUPPORTED_KINDS,
@@ -27,16 +28,18 @@ from data_validation_spark.operators.constraints import (
     _scope_cond,
     _scoped_df,
     completeness_violation_frames,
+    count_when,
+    metric_aggs,
     metric_value_thunks,
     metric_verdict_rows,
     partition_label_col,
-    profile_stat_values,
     referential_violation_counts,
     resolve_dim,
     set_violation_frame,
     uniqueness_violation_counts,
     violation_counts,
     violation_frame,
+    with_label,
 )
 from data_validation_spark.operators.contrast import DriftReport, contrast
 from data_validation_spark.operators.profile import (
@@ -169,8 +172,9 @@ def run_validation(spark: SparkSession, df: DataFrame, suite: ValidationSuite,
     skipped: list[str] = []
     todo: list[str] | None = None     # None = derive after the fused pass
     if pcols and sink is not None and resume:
-        all_parts = [partition_lbl(r, pcols) for r in
-                     df.select(*pcols).distinct().collect()]
+        all_parts = [r[LABEL] for r in
+                     with_label(df.select(*pcols).distinct(), pcols)
+                     .select(LABEL).collect()]
         done = completed_partitions(sink, suite.name)
         skipped = sorted(set(all_parts) & done)
         if skipped:
@@ -186,12 +190,16 @@ def run_validation(spark: SparkSession, df: DataFrame, suite: ValidationSuite,
     elif not pcols:
         todo = ["<global>"]
 
-    # -- the single vectorized pass: stats + row-level verdict counts ----
+    # -- the single vectorized pass: stats + per-partition aggregates ---
     # (BASELINE.json:6 — one grouped agg over one scan computes every
-    # component stat AND every row-level constraint's per-partition
-    # violation count; no second decode of the tokens column)
+    # component stat, every row-level constraint's per-partition
+    # violation count and every stat_bounds / row_count / freshness
+    # measurement; no second decode of the tokens column)
     row_cs = [c for c in suite.constraints if c.kind in ROW_LEVEL_KINDS]
-    row_conds = {c.name: _row_violation_cond(c) for c in row_cs}
+    aggs = {c.name: count_when(_row_violation_cond(c)) for c in row_cs}
+    metric_cs = [c for c in suite.constraints if c.kind in METRIC_KINDS]
+    fused_metrics = metric_aggs(metric_cs, suite.components)
+    aggs.update(fused_metrics)
 
     # referential constraints against a broadcast-sized key set fold
     # into the fused pass as an isin condition (the keys would have been
@@ -209,7 +217,7 @@ def run_validation(spark: SparkSession, df: DataFrame, suite: ValidationSuite,
         if "values" in c.params:
             vals = [v for v in c.params["values"] if v is not None]
             if len(vals) <= _REF_INLINE_MAX:
-                row_conds[c.name] = _not_in_keys(c, vals)
+                aggs[c.name] = count_when(_not_in_keys(c, vals))
                 inline_ref.add(c.name)
         elif sink is None:
             dim_refs.append((c, resolve_dim(spark, c, dims)))
@@ -224,7 +232,7 @@ def run_validation(spark: SparkSession, df: DataFrame, suite: ValidationSuite,
     # it is counted by the anti-join in the same thunk.  The pass then
     # runs its own independent actions concurrently too.
     def _fused():
-        conds = dict(row_conds)
+        conds = dict(aggs)
         over_cap: dict[str, dict[str, int]] = {}
         for c, dim in dim_refs:
             p = c.params
@@ -234,22 +242,21 @@ def run_validation(spark: SparkSession, df: DataFrame, suite: ValidationSuite,
                     _scoped_df(df, c), p["column"], dim, pcols,
                     p.get("dim_column"))
             else:
-                conds[c.name] = _not_in_keys(c, keys)
-        profile, counts = build_profile_and_counts(
-            df, suite.components, pcols, row_conds=conds,
-            name=suite.name)
-        return profile, counts, over_cap
+                conds[c.name] = count_when(_not_in_keys(c, keys))
+        profile, values = build_profile_and_counts(
+            df, suite.components, pcols, aggs=conds, name=suite.name)
+        return profile, values, over_cap
 
     # action keys: "__fused__", ("metric", i) and ("set", name)
     actions: dict[object, object] = {"__fused__": _fused}
 
     # -- metric assertions (deequ hasSize/hasMean/freshness family) ------
-    # unscoped stat_bounds read the fused profile (zero extra scans —
-    # evaluated after the pool below); every other metric constraint is
-    # measured by the shared actions.  All are verdict-only.
-    metric_cs = [c for c in suite.constraints if c.kind in METRIC_KINDS]
+    # stat_bounds / row_count / freshness ride the fused pass above;
+    # distinctness and ordering need their own group keys, so each is
+    # one more action.  All are verdict-only.
     for i, measure in enumerate(metric_value_thunks(
-            df, metric_cs, pcols, skip_stat_bounds=True)):
+            df, [c for c in metric_cs if c.name not in fused_metrics],
+            pcols)):
         actions[("metric", i)] = measure
 
     # -- set-level constraints -------------------------------------------
@@ -309,21 +316,22 @@ def run_validation(spark: SparkSession, df: DataFrame, suite: ValidationSuite,
                     lambda fr=frame: _frame_counts(fr))
 
     results = run_concurrently(spark, actions)
-    profile, counts_by_part, over_cap = results.pop("__fused__")
+    profile, values_by_part, over_cap = results.pop("__fused__")
     inline_ref |= {c.name for c, _ in dim_refs} - over_cap.keys()
     set_counts: dict[str, dict[str, int]] = dict(over_cap)
     set_counts.update(results.pop("__viol_counts__", {}))
-    metric_values: dict[str, dict] = {}
+    metric_values: dict[str, dict] = {
+        n: {part: vals[n] for part, vals in values_by_part.items()}
+        for n in fused_metrics}
     for (kind, name), got in results.items():
         if kind == "metric":
             metric_values.update(got)
         else:
             set_counts[name] = got
-    metric_values.update(profile_stat_values(profile, metric_cs))
 
     # -- verdict assembly (driver-side; universe = every observed
     #    partition × every constraint, explicit passed=true rows) --------
-    all_parts = sorted((set(counts_by_part)
+    all_parts = sorted((set(values_by_part)
                         | set(profile.partitions)
                         | {p for d in set_counts.values() for p in d}
                         | {p for d in metric_values.values() for p in d})
@@ -335,7 +343,7 @@ def run_validation(spark: SparkSession, df: DataFrame, suite: ValidationSuite,
     fused_names = [c.name for c in row_cs] + sorted(inline_ref)
     for part in all_parts:
         for name in fused_names:
-            n = int((counts_by_part.get(part) or {}).get(name, 0))
+            n = int((values_by_part.get(part) or {}).get(name) or 0)
             verdicts.append({"partition": part, "constraint": name,
                              "n_violations": n, "passed": n == 0})
         for cname, per_part in set_counts.items():
@@ -387,10 +395,6 @@ def run_validation(spark: SparkSession, df: DataFrame, suite: ValidationSuite,
                      n_violations=n_viol, n_violation_rows=n_viol_rows,
                      partitions=todo,
                      skipped_partitions=skipped)
-
-
-def partition_lbl(row, pcols: list[str]) -> str:
-    return "/".join(f"{c}={row[c]}" for c in pcols)
 
 
 def _dim_keys(dim: DataFrame, dim_col: str) -> list | None:
@@ -467,12 +471,10 @@ def validate_incremental(spark: SparkSession, df: DataFrame,
         raise ValueError("validate_incremental needs suite.partition_cols")
     cur = snapshot_checksums(df, tokens_col, pcols).localCheckpoint(
         eager=True)  # one scan; reused for diff and returned to caller
-    if baseline_checksums is None:
-        changed_rows = cur.select(*pcols).collect()
-    else:
-        changed_rows = (checksum_diff(baseline_checksums, cur, pcols)
-                        .select(*pcols).collect())
-    changed = sorted(partition_lbl(r, pcols) for r in changed_rows)
+    changed_parts = cur if baseline_checksums is None \
+        else checksum_diff(baseline_checksums, cur, pcols)
+    changed = sorted(r[0] for r in changed_parts.select(
+        partition_label_col(pcols)).collect())
     if not changed:
         empty = RunResult(run_id=run_id or "incremental-noop",
                           profile=Profile(name=suite.name), drift=None)

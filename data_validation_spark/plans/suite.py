@@ -27,8 +27,9 @@ QUANTILE_PROBS = [i / 100.0 for i in range(N_QUANTILES)]
 OTHER_KEY = "__other__"
 
 #: stats a `stat_bounds` metric assertion may reference (they are exactly
-#: the fused profile's scalar stats, so inside run_validation the
-#: assertion costs zero extra scans) and the distinctness metrics
+#: the profile's scalar stats, measured under the profile's value rules
+#: by an aggregate that rides run_validation's fused pass) and the
+#: distinctness metrics
 #: (defined here, not in operators/constraints.py, to keep the import
 #: direction suite → constraints acyclic)
 STAT_BOUNDS_STATS = ("min", "max", "mean", "std", "pinv", "n")
@@ -181,7 +182,7 @@ class Constraint:
       drift         {component, tests: [chi2|ks|psi], threshold(s)} — D1-D3
       pattern       {component|expr, pattern}        — rlike regex (row)
       stat_bounds   {component, stat, min?, max?}    — metric assertion
-                    over a fused-profile stat (free post-processing)
+                    over a profile stat (one more fused-pass aggregate)
       row_count     {min?, max?}                     — per-partition size
       freshness     {component|expr, max_age_seconds, as_of} — max(ts)
                     recency; as_of explicit for deterministic replays
@@ -200,11 +201,9 @@ class Constraint:
     analyzer scope option): a boolean SQL expression restricting the
     check to rows where it is TRUE (NULL/false = out of scope, never
     judged).  Row-level scopes conjoin inside the fused pass; scoped
-    metric stats ride the shared metric scan via conditional
-    aggregation; set-level scopes filter before the operator so the
-    predicate pushes down to the scan — a scope never adds a pass.
-    A ``where``-scoped stat_bounds is measured by the metric scan
-    instead of the (unscoped) fused profile.
+    metric stats ride the same pass via conditional aggregation;
+    set-level scopes filter before the operator so the predicate
+    pushes down to the scan — a scope never adds a pass.
     """
 
     name: str
@@ -597,8 +596,8 @@ def suggest_suite(profile: Profile, name: str = "suggested",
       every already-observed partition passes;
     * ``mean_margin=m`` → per numeric component a ``stat_bounds`` on
       the mean, widened by ``m × (max − min)`` each side — level-shift
-      detection cheaper than full drift (it reads the fused profile,
-      zero extra scans).
+      detection cheaper than full drift (one more aggregate of the
+      fused pass, zero extra scans).
 
     Pure driver logic over the profile dict — no jobs.  The result is
     an ordinary suite: serialize it, review it, run it.

@@ -37,7 +37,7 @@ stateful dedup's state is bounded by (keys within TTL), sharded across
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -51,6 +51,23 @@ from data_validation_spark.sources.table_provider import TableProvider
 
 STREAM_VERDICTS_TABLE = "stream_verdicts"
 STREAM_VIOLATIONS_TABLE = "stream_violations"
+
+
+def _start_batches(stream_df: DataFrame,
+                   process_batch: Callable[[DataFrame, int], None],
+                   checkpoint_dir: str | None,
+                   trigger_available_now: bool) -> StreamingQuery:
+    """Start ``process_batch`` on every micro-batch of ``stream_df``
+    (update mode), checkpointed in ``checkpoint_dir`` when given, and
+    draining the backlog then stopping under ``trigger_available_now``."""
+    writer = (stream_df.writeStream
+              .foreachBatch(process_batch)
+              .outputMode("update"))
+    if checkpoint_dir:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    if trigger_available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def validate_stream(stream_df: DataFrame, suite: ValidationSuite,
@@ -79,14 +96,8 @@ def validate_stream(stream_df: DataFrame, suite: ValidationSuite,
                .withColumn("errors", F.to_json("errors")),
             STREAM_VIOLATIONS_TABLE)
 
-    writer = (stream_df.writeStream
-              .foreachBatch(process_batch)
-              .outputMode("update"))
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_batches(stream_df, process_batch, checkpoint_dir,
+                          trigger_available_now)
 
 
 def streaming_stats(stream_df: DataFrame, ts_col: str, value_expr: str,
@@ -328,13 +339,8 @@ def streaming_drift(stream_df: DataFrame, reference,
                   "test string, statistic double, drifted boolean")
         sink.append(out, STREAM_DRIFT_TABLE)
 
-    writer = stream_df.writeStream.foreachBatch(handle) \
-        .outputMode("update")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_batches(stream_df, handle, checkpoint_dir,
+                          trigger_available_now)
 
 
 def streaming_sessionize(stream_df: DataFrame, user_col: str = "user_id",
@@ -518,14 +524,8 @@ def streaming_ingest_dedup(stream_df: DataFrame, sink: TableProvider,
         finally:
             survivors.unpersist()
 
-    writer = (stream_df.writeStream
-              .foreachBatch(process_batch)
-              .outputMode("update"))
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_batches(stream_df, process_batch, checkpoint_dir,
+                          trigger_available_now)
 
 
 SCD2_CURRENT_TABLE = "scd2_current"
@@ -594,11 +594,5 @@ def streaming_scd2(stream_df: DataFrame, sink: TableProvider,
                              new_cur.select(*key_cols), key_cols)
         sink.append(new_cur, SCD2_CURRENT_TABLE)
 
-    writer = (stream_df.writeStream
-              .foreachBatch(process_batch)
-              .outputMode("update"))
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_batches(stream_df, process_batch, checkpoint_dir,
+                          trigger_available_now)

@@ -344,6 +344,7 @@ def test_fused_pass_with_overflowing_hist_candidate(wide, concurrent_jobs,
     import numpy as np
 
     import data_validation_spark.operators.profile as prof
+    from data_validation_spark.operators.constraints import count_when
     from data_validation_spark.plans.suite import QUANTILE_PROBS
 
     comps = [Component("big_id", "numeric"),
@@ -355,7 +356,8 @@ def test_fused_pass_with_overflowing_hist_candidate(wide, concurrent_jobs,
     prof.HIST_MAX_GROUPS = 1000  # big_id overflows, small (4 × 37) fits
     try:
         p, counts = prof.build_profile_and_counts(
-            wide, comps, ["grp"], row_conds={"even": F.col("id") % 2 == 0})
+            wide, comps, ["grp"],
+            aggs={"even": count_when(F.col("id") % 2 == 0)})
         sketch = build_profile(
             wide, [Component("big_id", "numeric", quantile_strategy="sketch")],
             ["grp"])

@@ -84,6 +84,36 @@ def test_flagship_no_sink_run_job_budget(spark):
     df.unpersist()
 
 
+def test_fused_metrics_take_no_job_of_their_own(spark):
+    """row_count and stat_bounds, scoped or not, are aggregates of the
+    fused pass: adding them to the flagship suite adds no job."""
+    df = synth_sequences(spark, 2000).persist()
+    df.count()
+    dims = {"allowed_sources": allowed_sources_df(spark)}
+    flagship = _flagship_suite()
+    metric = _flagship_suite()
+    metric.constraints += [
+        Constraint("rows", "row_count", {"min": 1}),
+        Constraint("ntok_mean", "stat_bounds",
+                   {"component": "n_tok", "stat": "mean", "min": 1}),
+        Constraint("web_len_max", "stat_bounds",
+                   {"component": "tokens_len", "stat": "max", "max": 10**6,
+                    "where": "source = 'web'"}),
+    ]
+    base = _jobs_for(spark, lambda: run_validation(
+        spark, df, flagship, dims=dims, resume=False))
+    res = None
+
+    def run():
+        nonlocal res
+        res = run_validation(spark, df, metric, dims=dims, resume=False)
+    n = _jobs_for(spark, run)
+    df.unpersist()
+    assert n == base, f"metric suite took {n} jobs, flagship {base}"
+    assert all(v["passed"] for v in res.verdicts
+               if v["constraint"] in ("rows", "ntok_mean"))
+
+
 def test_no_sink_run_matches_resume_path_verdicts(spark, tmp_path):
     """The worklist-free path must produce the same verdicts as the
     resume-capable path on the same input."""

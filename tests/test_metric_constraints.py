@@ -140,6 +140,42 @@ def test_stat_bounds_pinv_and_n(spark):
     assert _verdict(res, "<global>", "x_n")["passed"]
 
 
+def test_stat_bounds_nan_and_pinv_agree_on_every_path(spark):
+    """stat_bounds follows the profile's value rules on every path:
+    min/max/mean/std skip NULL and NaN, pinv counts NULL or NaN for a
+    numeric component and NULL only for a categoric one.  Unscoped and
+    scoped run_validation and evaluate_constraints give one answer."""
+    df = spark.createDataFrame(
+        [("a", 1.0, "u"), ("a", float("nan"), None), ("a", 3.0, "NaN"),
+         ("b", 1.0, "v"), ("b", 1.5, "w")],
+        "grp string, x double, c string")
+    checks = [("x_mean", {"component": "x", "stat": "mean", "max": 1.5}),
+              ("x_max", {"component": "x", "stat": "max", "max": 3.0}),
+              ("x_pinv", {"component": "x", "stat": "pinv", "max": 0.2}),
+              ("c_pinv", {"component": "c", "stat": "pinv", "max": 0.5})]
+    # a: mean over (1, 3) = 2.0 breaches; max 3.0 holds; pinv(x) = 1/3
+    # breaches; pinv(c) = 1/3 holds ("NaN" is a category, not a NULL)
+    want = {("grp=a", "x_mean"): False, ("grp=a", "x_max"): True,
+            ("grp=a", "x_pinv"): False, ("grp=a", "c_pinv"): True,
+            ("grp=b", "x_mean"): True, ("grp=b", "x_max"): True,
+            ("grp=b", "x_pinv"): True, ("grp=b", "c_pinv"): True}
+    comps = [Component("x", "numeric"), Component("c", "categoric")]
+    for where in (None, "true"):
+        suite = ValidationSuite(
+            name="s", components=comps, partition_cols=["grp"],
+            constraints=[Constraint(n, "stat_bounds",
+                                    {**p, **({"where": where} if where
+                                             else {})})
+                         for n, p in checks])
+        res = run_validation(spark, df, suite)
+        got = {(v["partition"], v["constraint"]): v["passed"]
+               for v in res.verdicts}
+        assert got == want, where
+        ev = {(r["partition"], r["constraint"]): r["passed"]
+              for r in evaluate_constraints(df, suite).verdicts.collect()}
+        assert ev == want, where
+
+
 # -- row_count / freshness ----------------------------------------------------
 
 def test_row_count_bounds(spark, mdf):
@@ -172,6 +208,8 @@ def test_metric_breach_fail_closed_on_none():
     c2 = Constraint("b", "stat_bounds", {"component": "x", "stat": "mean",
                                          "min": 0})
     assert metric_breach(c2, None)
+    # a NaN stat (std over ±inf) proves no bound either
+    assert metric_breach(c2, float("nan")) and not metric_breach(c2, 1.0)
 
 
 # -- distinctness -------------------------------------------------------------

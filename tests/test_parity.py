@@ -75,3 +75,21 @@ def test_row_diff_explicit_compare_cols(spark):
     b = spark.createDataFrame([(1, "de", 10)], "k long, lang string, n long")
     # diffing only n -> the lang change is invisible, row is unchanged
     assert row_diff(a, b, ["k"], compare_cols=["n"]).count() == 0
+
+
+def test_self_diff_with_null_partition_is_empty(spark):
+    """The partition keys join NULL-safely: a NULL partition diffed
+    against itself is one matching partition, not two changed ones."""
+    from data_validation_spark.operators.parity import checksum_diff
+    df = spark.createDataFrame(
+        [(1, "a", [1, 2]), (2, None, [3]), (3, None, [4, 5])],
+        "doc_id long, source string, tokens array<int>")
+    cs = snapshot_checksums(df, "tokens", ["source"])
+    assert checksum_diff(cs, cs, ["source"]).count() == 0
+    both = checksum_diff(cs, cs, ["source"], include_matching=True)
+    assert both.columns == [
+        "source", "checksum_sum_a", "n_rows_with_tokens_a", "n_tokens_a",
+        "checksum_sum_b", "n_rows_with_tokens_b", "n_tokens_b", "match"]
+    assert sorted((r["source"] or "", r["n_tokens_a"], r["match"])
+                  for r in both.collect()) == [("", 3, True),
+                                               ("a", 2, True)]

@@ -54,6 +54,17 @@ def test_pandas_kernel_path_agrees(emb, vectors):
         assert ra["cosine"] == pytest.approx(rb["cosine"], abs=1e-9)
 
 
+def test_pandas_kernel_zero_query_matches_catalyst(emb):
+    """An all-zero query scores every vector 0.0 on both paths (the
+    numpy kernel used to divide by the query's zero norm: NULL)."""
+    q = np.zeros(DIM)
+    a = [tuple(r) for r in similarity.brute_force_topk(emb, q, 5).collect()]
+    b = [tuple(r) for r in
+         similarity.brute_force_topk_pandas(emb, q, 5).collect()]
+    assert a == b
+    assert [r[1] for r in b] == [0.0] * 5
+
+
 def test_lsh_bucket_determinism(emb):
     i1 = {r["vec_id"]: r["bucket"] for r in
           similarity.lsh_bucket_index(emb, DIM).collect()}

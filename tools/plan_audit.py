@@ -388,7 +388,7 @@ def main() -> None:
     # distinctness value-collapse must combine map-side in both phases
     from data_validation_spark.operators.constraints import (
         distinctness_frame, metric_fused_frame)
-    mfused, _ = metric_fused_frame(
+    mfused = metric_fused_frame(
         df,
         [Constraint("rc", "row_count", {"min": 1}),
          Constraint("fr", "freshness",
