@@ -1625,9 +1625,10 @@ def q_weighted_quantiles(spark, sf_dir):
 
 def q_weighted_quantiles_grouped(spark, sf_dir):
     """Per-group exact weighted quantiles: same order-statistic
-    machinery, cumsum window partitioned by l_returnflag (each
-    reducer holds ONE group's distinct values), totals joined back on
-    the group key."""
+    machinery (stats.cumulative_weights), one window partitioned by
+    l_returnflag (each reducer holds ONE group's distinct values)
+    carrying the group total and the running weight together — no
+    join back on the group key."""
     from data_validation_spark.functions.stats import weighted_quantiles
     li = _t(spark, sf_dir, "lineitem").select(
         "l_returnflag",
@@ -2771,7 +2772,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # (wav_headers F.aggregate chunk walk; weighted_quantiles guards
     # x2; tfidf_terms window-form group-df; event_order single-pass
     # totals; join_explosion disjoint-key summary row); the tail of
-    # the window is least-recently-checked r1/r2 anchors.  Everything
+    # the window is least-recently-checked r1/r2 anchors, except its
+    # last three: iqr_outliers and ordering_constraint (whose order
+    # statistic and lateness tag are now shared with weighted_quantiles,
+    # quantile_buckets and event_order) and simhash_near_dups (whose
+    # bucket self-join is now shared with minhash_near_dups), which
+    # took the places of dedup_paragraphs, pii_scrub and vocab_topk
+    # (corpus_shuffle, 51st, was already outside the window).  Everything
     # below position 50 is driver-green from an earlier round or
     # rows-only by design.
     return {
@@ -2822,11 +2829,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "json_props": q_json_props,
         "contamination": q_contamination,
         "pack_plan": q_pack_plan,
+        "iqr_outliers": q_iqr_outliers,
+        "ordering_constraint": q_ordering_constraint,
+        "simhash_near_dups": q_simhash_near_dups,
+        # -- below the driver 50-query window ------------------------
+        "corpus_shuffle": q_corpus_shuffle,
         "dedup_paragraphs": q_dedup_paragraphs,
         "pii_scrub": q_pii_scrub,
         "vocab_topk": q_vocab_topk,
-        "corpus_shuffle": q_corpus_shuffle,
-        # -- below the driver 50-query window ------------------------
         "referential_orders": q_referential_orders,
         "vocab_drift": q_vocab_drift,
         "vocab_movers": q_vocab_movers,
@@ -2866,9 +2876,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dq_constraint_kinds": q_dq_constraint_kinds,
         "metric_constraints": q_metric_constraints,
         "where_scoped": q_where_scoped,
-        "ordering_constraint": q_ordering_constraint,
         "entropy": q_entropy,
-        "iqr_outliers": q_iqr_outliers,
         "bigram_pmi": q_bigram_pmi,
         "mutual_info": q_mutual_info,
         "emd_by_source": q_emd_by_source,
@@ -2880,7 +2888,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "content_parity_docs": q_content_parity_docs,
         "drift_chi2": q_drift_chi2,
         "minhash_near_dups": q_minhash_near_dups,
-        "simhash_near_dups": q_simhash_near_dups,
         "embedding_near_dups": q_embedding_near_dups,
         "snapshot_diff": q_snapshot_diff,
         "boilerplate_lines": q_boilerplate_lines,

@@ -16,7 +16,7 @@ from __future__ import annotations
 import bisect
 
 import numpy as np
-from pyspark.sql import Column
+from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
 
 from data_validation_spark.plans.suite import QUANTILE_PROBS
@@ -289,6 +289,60 @@ def pearson_corr_matrix(df, cols: list[str]):
         rows, "col_a string, col_b string, corr double")
 
 
+#: columns ``cumulative_weights`` adds: the group's total weight and the
+#: running weight up to and including the row's value
+TOTAL, CUM = "__n", "__cum"
+
+
+def cumulative_weights(collapsed: DataFrame, group_cols: list[str],
+                       value_col: str, weight_col: str,
+                       max_distinct: int | None = None,
+                       what: str = "cumulative_weights") -> DataFrame:
+    """The engine's one exact order-statistic pass.  ``collapsed`` holds
+    one ``(group..., value, weight)`` row per distinct value of a group
+    (a map-side-combined collapse, so the pass sorts value cardinality,
+    never rows).  ONE window pass, ``PARTITION BY group ORDER BY
+    value``, adds ``TOTAL`` (the group's weight) and ``CUM`` (the
+    weight of values <= this one).  NULL values count toward neither:
+    they sort first with a NULL ``CUM``, and a group holding only NULLs
+    has a NULL ``TOTAL``.  ``at_rank`` turns the pair into order
+    statistics.
+
+    ``max_distinct``: past that many distinct values within a group,
+    ``CUM`` becomes ``raise_error`` (in the same sort), naming ``what``
+    and ``value_col`` — the window's reducer holds one group's distinct
+    values, so a continuous metric would otherwise silently become a
+    one-task sort over ~n rows."""
+    g = list(group_cols)
+    order = (Window.partitionBy(*g) if g else Window).orderBy(value_col)
+    run = order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    whole = order.rowsBetween(Window.unboundedPreceding,
+                              Window.unboundedFollowing)
+    wt = F.when(F.col(value_col).isNotNull(), F.col(weight_col))
+    cum = F.sum(wt).over(run)
+    if max_distinct is not None:
+        cum = F.when(
+            F.count(value_col).over(run) > F.lit(int(max_distinct)),
+            F.raise_error(F.lit(
+                f"{what}: >{max_distinct} distinct values in "
+                f"'{value_col}'"
+                + (" within a group" if g else "")
+                + " — quantize the metric or use the sketch profile "
+                "path"))).otherwise(cum)
+    return collapsed.select("*", F.sum(wt).over(whole).alias(TOTAL),
+                            cum.alias(CUM))
+
+
+def at_rank(num: int, den: int, value: Column | str) -> Column:
+    """``value`` on the rows of a ``cumulative_weights`` frame whose
+    running weight reaches ``num/den`` of the total (``CUM·den >=
+    TOTAL·num``, pure integers), else NULL: its ``min`` over a group is
+    the smallest value whose cumulative weight reaches ⌈num·n/den⌉ —
+    no interpolation, so no engine can disagree at a float boundary."""
+    v = F.col(value) if isinstance(value, str) else value
+    return F.when(F.col(CUM) * int(den) >= F.col(TOTAL) * int(num), v)
+
+
 def weighted_quantiles(df: DataFrame, value_col: str, weight_col: str,
                        quantiles: tuple[int, ...] = (25, 50, 75, 90,
                                                      99),
@@ -298,13 +352,12 @@ def weighted_quantiles(df: DataFrame, value_col: str, weight_col: str,
     """EXACT weighted quantiles over an integral value column — the
     importance-weighted corpus question ("the median token count of
     my mixture, where each doc carries its sampling weight") that the
-    unweighted GK sketch cannot answer.  Same machinery as the IQR /
-    watermark order statistics: collapse to (value, Σweight) —
-    map-side combinable, the shuffle carries value cardinality, never
-    rows — cumsum over the ordered collapse, and quantile q = the
-    smallest value whose cumulative weight reaches ``ceil(q·W/100)``
-    (``cum·100 >= W·q`` in pure integers; no interpolation, so no
-    engine can disagree at a float boundary).  Zero/negative weights
+    unweighted GK sketch cannot answer.  Collapse to (value, Σweight)
+    — map-side combinable, the shuffle carries value cardinality,
+    never rows — then ``cumulative_weights`` and ``at_rank``: quantile
+    q = the smallest value whose cumulative weight reaches
+    ``ceil(q·W/100)``.  NULL values add nothing to ``total_weight``,
+    ``n_values`` or the CDF.  Zero/negative weights
     are rejected loudly (a negative weight makes the CDF
     non-monotone; silently clamping would fabricate a distribution).
     Weights must be NULL-free and integral-valued: a NULL weight would
@@ -316,20 +369,14 @@ def weighted_quantiles(df: DataFrame, value_col: str, weight_col: str,
     ``cast(w * 1e6 as long)``) at the call site, where the caller
     knows the intended precision.
 
-    With ``group_cols`` the whole machinery runs per group (the
-    cumsum window partitions by group — each reducer holds one
-    group's distinct values, totals join back on the group key): one
-    output row per group, else one global row ``total_weight,
-    n_values, p<q>...``.
+    With ``group_cols`` the same window partitions by group (each
+    reducer holds one group's distinct values, no join): one output
+    row per group, else one global row ``total_weight, n_values,
+    p<q>...``.  A group with no non-NULL value yields no row.
 
-    ``max_distinct`` is the same fail-loud cardinality cap as
-    ``global_quantile_buckets``: the cumsum window's reducer holds one
-    (group's) distinct-value set, so a continuous double value column
-    would silently become a single-task sort over ~n rows; past the
-    cap the plan is poisoned with ``raise_error`` instead (quantize
-    the metric or use the sketch profile path)."""
-    from pyspark.sql import Window
-
+    ``max_distinct`` is ``cumulative_weights``' fail-loud cardinality
+    cap, per group (quantize the metric or use the sketch profile
+    path)."""
     g = list(group_cols or [])
     w = F.col(weight_col).cast("long")
     bad = (df.filter(F.col(weight_col).isNull() | w.isNull()
@@ -344,45 +391,13 @@ def weighted_quantiles(df: DataFrame, value_col: str, weight_col: str,
             "weights would silently floor, negative weights make the "
             "CDF non-monotone) — pre-scale fractional weights to "
             "integers, e.g. cast(w * 1e6 as long)")
-    collapsed = (df.groupBy(*g, F.col(value_col).alias("v"))
-                 .agg(F.sum(w).alias("wt")))
-    if max_distinct is not None:
-        # fail loud, not a silent one-task sort (bucketize.py pattern):
-        # piggyback on the collapsed frame itself — any distinct value
-        # past the cap within its group poisons the plan
-        w_card = (Window.partitionBy(*g) if g else Window
-                  ).orderBy("v").rowsBetween(Window.unboundedPreceding,
-                                             Window.currentRow)
-        collapsed = collapsed.withColumn(
-            "__rn", F.count(F.lit(1)).over(w_card)).withColumn(
-            "v", F.when(
-                F.col("__rn") > F.lit(int(max_distinct)),
-                F.raise_error(F.lit(
-                    f"weighted_quantiles: >{max_distinct} distinct "
-                    f"values in '{value_col}'"
-                    + (" within a group" if g else "")
-                    + " — quantize the metric or use the sketch "
-                    "profile path"))).otherwise(F.col("v"))
-        ).drop("__rn")
-    if g:
-        tot = collapsed.groupBy(*g).agg(
-            F.sum("wt").alias("W"), F.count(F.lit(1)).alias("n_values"))
-        wcum = (Window.partitionBy(*g).orderBy("v")
-                .rowsBetween(Window.unboundedPreceding,
-                             Window.currentRow))
-        cum = (collapsed.withColumn("cum", F.sum("wt").over(wcum))
-               .join(F.broadcast(tot), g))
-    else:
-        tot = collapsed.agg(F.sum("wt").alias("W"),
-                            F.count(F.lit(1)).alias("n_values"))
-        wcum = (Window.orderBy("v")
-                .rowsBetween(Window.unboundedPreceding,
-                             Window.currentRow))
-        cum = (collapsed.withColumn("cum", F.sum("wt").over(wcum))
-               .crossJoin(F.broadcast(tot)))
+    collapsed = df.groupBy(*g, value_col).agg(F.sum(w).alias("__w"))
+    cum = cumulative_weights(collapsed, g, value_col, "__w", max_distinct,
+                             "weighted_quantiles")
     qs = sorted(set(int(q) for q in quantiles))
-    aggs = [F.min(F.when(F.col("cum") * 100 >= F.col("W") * q,
-                         F.col("v"))).alias(f"p{q}") for q in qs]
-    return (cum.groupBy(*g, "W", "n_values").agg(*aggs)
-            .select(*g, F.col("W").alias("total_weight"), "n_values",
-                    *[f"p{q}" for q in qs]))
+    return (cum.groupBy(*g)
+            .agg(F.max(TOTAL).alias("total_weight"),
+                 F.count(value_col).alias("n_values"),
+                 *[F.min(at_rank(q, 100, value_col)).alias(f"p{q}")
+                   for q in qs])
+            .where(F.col("total_weight").isNotNull()))

@@ -6,19 +6,22 @@ non-starter: an empty-key window collapses the whole table into one
 task.  The scale-safe formulation collapses the table to its DISTINCT
 metric values first (one map-side-combined count shuffle — for the
 integer-ish metrics this is built for, |distinct| is bounded and tiny
-relative to |rows|), cumulative-sums the counts over the value order
-(a window over |distinct| rows, not |rows|), and derives each value's
-bucket in pure integer arithmetic:
+relative to |rows|), runs the engine's one exact order-statistic pass
+over that collapse (``stats.cumulative_weights``: a window over
+|distinct| rows, not |rows|, giving each value its running count
+``cum(v)`` = rows with value <= v, and the total ``N``; NULL values
+count toward neither), and derives each value's bucket in pure integer
+arithmetic:
 
     bucket(v) = ceil(n_buckets * cum(v) / N)
               = (n_buckets * cum(v) + N - 1) div N
 
-where ``cum(v)`` = rows with value <= v.  Every row with the same
-value lands in the same bucket (ties never straddle — the property
-NTILE does not give you), buckets are as equal-count as ties allow,
-and the whole derivation is exact integers, so any engine reproduces
-it bit-for-bit.  The value→bucket map joins back to the table keyed
-on the metric (broadcast-sized by the same cardinality bound).
+Every row with the same value lands in the same bucket (ties never
+straddle — the property NTILE does not give you), buckets are as
+equal-count as ties allow, and the whole derivation is exact integers,
+so any engine reproduces it bit-for-bit.  The value→bucket map joins
+back to the table keyed on the metric (broadcast-sized by the same
+cardinality bound).
 
 Use cases: length-balanced training mixtures (sample evenly across
 n_chars deciles), quantile-capped outlier filters, per-bucket loss
@@ -32,8 +35,14 @@ frame.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from data_validation_spark.functions.stats import (
+    CUM,
+    TOTAL,
+    cumulative_weights,
+)
 
 __all__ = ["global_quantile_buckets"]
 
@@ -48,33 +57,12 @@ def global_quantile_buckets(df: DataFrame, col: str, n_buckets: int = 10,
     """
     if n_buckets <= 0:
         raise ValueError("n_buckets must be positive")
-    vc = (df.filter(F.col(col).isNotNull())
-          .groupBy(F.col(col).alias("__v"))
-          .agg(F.count(F.lit(1)).alias("__c")))
-    if max_distinct is not None:
-        # fail loud, not a silent one-task sort: piggyback the check on
-        # the frame itself (no extra action) — any row past the cap
-        # poisons the plan with raise_error
-        w_all = Window.orderBy("__v").rowsBetween(
-            Window.unboundedPreceding, Window.currentRow)
-        vc = vc.withColumn("__rn", F.count(F.lit(1)).over(w_all)).withColumn(
-            "__v", F.when(
-                F.col("__rn") > F.lit(int(max_distinct)),
-                F.raise_error(F.lit(
-                    f"global_quantile_buckets: >{max_distinct} distinct "
-                    f"values in '{col}' — quantize the metric or use the "
-                    "sketch profile path"))).otherwise(F.col("__v")))
-    w = Window.orderBy("__v").rowsBetween(Window.unboundedPreceding,
-                                          Window.currentRow)
-    n_b = F.lit(int(n_buckets))
-    cum = (vc.withColumn("__cum", F.sum("__c").over(w))
-           .withColumn("__n", F.sum("__c").over(
-               Window.orderBy("__v").rowsBetween(
-                   Window.unboundedPreceding,
-                   Window.unboundedFollowing))))
+    vc = df.groupBy(col).agg(F.count(F.lit(1)).alias("__c"))
+    cum = cumulative_weights(vc, [], col, "__c", max_distinct,
+                             "global_quantile_buckets")
     bucket_map = cum.select(
-        "__v",
-        F.floor((n_b * F.col("__cum") + F.col("__n") - F.lit(1))
-                / F.col("__n")).cast("long").alias(out_col))
+        F.col(col).alias("__v"),
+        F.expr(f"({int(n_buckets)} * {CUM} + {TOTAL} - 1) div {TOTAL}")
+        .alias(out_col))
     return df.join(F.broadcast(bucket_map),
                    df[col] == bucket_map["__v"], "left").drop("__v")

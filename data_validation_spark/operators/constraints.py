@@ -42,6 +42,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_validation_spark.functions.stats import _invalid_valid
+from data_validation_spark.operators.health import lateness_us
 from data_validation_spark.plans.suite import (
     DISTINCTNESS_METRICS,
     STAT_BOUNDS_STATS,
@@ -73,19 +74,29 @@ NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 LABEL = "__label"
 
 
+#: characters escaped in a label's values, ``%`` first, as Spark's
+#: partition directory names escape them — so no two partitions share
+#: one label
+_ESCAPES = (("%", "%25"), ("/", "%2F"), ("=", "%3D"))
+
+
 def partition_label_col(partition_cols: list[str]) -> Column:
     """The engine's one partition label, keying every verdict, violation
     row, profile partition and manifest row: ``c=v`` per partition
     column, joined by ``/``.  ``v`` is the value cast to string as
     Spark's partition paths write it (booleans ``true``/``false``, dates
-    ``2024-01-31``); a NULL value is ``c=__HIVE_DEFAULT_PARTITION__``.
-    No partition columns: ``<global>``."""
+    ``2024-01-31``, ``%`` ``/`` ``=`` as ``%25`` ``%2F`` ``%3D``); a
+    NULL value is ``c=__HIVE_DEFAULT_PARTITION__``.  No partition
+    columns: ``<global>``."""
     if not partition_cols:
         return F.lit("<global>")
-    parts = [F.concat(F.lit(f"{c}="),
-                      F.coalesce(F.col(c).cast("string"),
-                                 F.lit(NULL_PARTITION)))
-             for c in partition_cols]
+    parts = []
+    for c in partition_cols:
+        v = F.col(c).cast("string")
+        for ch, esc in _ESCAPES:
+            v = F.replace(v, F.lit(ch), F.lit(esc))
+        parts.append(F.concat(F.lit(f"{c}="),
+                              F.coalesce(v, F.lit(NULL_PARTITION))))
     return F.concat_ws("/", *parts)
 
 
@@ -94,6 +105,13 @@ def with_label(grouped: DataFrame, partition_cols: list[str]) -> DataFrame:
     columns — plus its ``LABEL`` column: one label per group, never one
     per input row."""
     return grouped.withColumn(LABEL, partition_label_col(partition_cols))
+
+
+def _by_partition(frame: DataFrame, partition_cols: list[str]):
+    """``frame.groupBy(*partition_cols)``, except that with no partition
+    columns an empty ``frame`` still yields no group (a global aggregate
+    would yield one row of NULLs and zeros)."""
+    return frame.groupBy(*(partition_cols or [F.lit(0).alias("__all")]))
 
 
 def agg_col(name: str) -> str:
@@ -191,27 +209,25 @@ def uniqueness_violation_counts(df: DataFrame, keys: list[str],
     against the duplicated keys — a whole second pass of the key
     columns at 100 TB):
 
-    1. partial ``groupBy(keys, partition-label)`` with count — map-side
-       combine; phase-2 group size per key = #labels that key appears
-       under (bounded by the table's logical partitions, so a hot key
-       never concentrates its ROWS on one reducer, only its per-label
-       count rows);
+    1. partial ``groupBy(keys, partition columns)`` with count —
+       map-side combine; phase-2 group size per key = #partitions that
+       key appears under (bounded by the table's logical partitions, so
+       a hot key never concentrates its ROWS on one reducer, only its
+       per-partition count rows);
     2. per-key total via ``sum() over (partition by keys)`` — rides the
        same key-hash exchange, no extra shuffle;
     3. filter total > 1, re-aggregate the surviving narrow count rows
-       by label (tiny: only duplicated keys).
+       by partition (tiny: only duplicated keys) and label each group.
     """
-    label = partition_label_col(partition_cols).alias("__label")
-    per_key_label = (df.select(*keys, label)
-                     .groupBy(*keys, "__label")
-                     .agg(F.count(F.lit(1)).alias("__c")))
+    per_key_part = (df.groupBy(*dict.fromkeys([*keys, *partition_cols]))
+                    .agg(F.count(F.lit(1)).alias("__c")))
     w = Window.partitionBy(*keys)
-    rows = (per_key_label
-            .withColumn("__n", F.sum("__c").over(w))
-            .where(F.col("__n") > 1)
-            .groupBy(F.col("__label").alias("partition"))
-            .agg(F.sum("__c").alias("n")).collect())
-    return {r["partition"]: int(r["n"]) for r in rows}
+    dups = per_key_part.withColumn("__n", F.sum("__c").over(w)) \
+        .where(F.col("__n") > 1)
+    dups = _by_partition(dups, partition_cols).agg(
+        F.sum("__c").alias("__dups"))
+    return {r[LABEL]: int(r["__dups"])
+            for r in with_label(dups, partition_cols).collect()}
 
 
 def referential_violation_counts(df: DataFrame, column: str, dim: DataFrame,
@@ -225,10 +241,11 @@ def referential_violation_counts(df: DataFrame, column: str, dim: DataFrame,
     cols = list(dict.fromkeys([column, *partition_cols]))
     slim = df.select(*cols)
     dim_keys = dim.select(F.col(dim_column).alias(column)).distinct()
-    rows = (slim.join(F.broadcast(dim_keys), on=column, how="left_anti")
-            .groupBy(partition_label_col(partition_cols).alias("partition"))
-            .agg(F.count(F.lit(1)).alias("n")).collect())
-    return {r["partition"]: r["n"] for r in rows}
+    missing = slim.join(F.broadcast(dim_keys), on=column, how="left_anti")
+    missing = _by_partition(missing, partition_cols).agg(
+        F.count(F.lit(1)).alias("__missing"))
+    return {r[LABEL]: r["__missing"]
+            for r in with_label(missing, partition_cols).collect()}
 
 
 def _errors_col(row_cs: list[Constraint]) -> Column:
@@ -729,18 +746,16 @@ def distinctness_frame(df: DataFrame, c: Constraint,
                        pcols: list[str]) -> DataFrame:
     """The two-phase distinctness plan (see ``distinctness_values``):
     value-collapse groupBy then per-partition integer agg.  Exposed for
-    the plan audit; columns ``__label, __d, __u, __n``."""
+    the plan audit; columns: the pcols, ``__d, __u, __n`` and
+    ``LABEL``."""
     cols = list(c.params["columns"])
-    label = partition_label_col(pcols).alias("__label")
     df = _scoped_df(df, c)  # scope filter pushes down past the collapse
-    per_val = (df.select(label, *cols)
-               .groupBy("__label", *cols)
+    per_val = (df.groupBy(*dict.fromkeys([*pcols, *cols]))
                .agg(F.count(F.lit(1)).alias("__c")))
-    return (per_val.groupBy("__label")
-            .agg(F.count(F.lit(1)).alias("__d"),
-                 F.sum(F.when(F.col("__c") == 1, 1).otherwise(0))
-                 .alias("__u"),
-                 F.sum("__c").alias("__n")))
+    return with_label(_by_partition(per_val, pcols)
+                      .agg(F.count(F.lit(1)).alias("__d"),
+                           count_when(F.col("__c") == 1).alias("__u"),
+                           F.sum("__c").alias("__n")), pcols)
 
 
 def distinctness_values(df: DataFrame, c: Constraint,
@@ -761,7 +776,7 @@ def distinctness_values(df: DataFrame, c: Constraint,
     out: dict[str, float] = {}
     for r in rows:
         num = r["__d"] if metric == "distinct_ratio" else r["__u"]
-        out[r["__label"]] = (num / r["__n"]) if r["__n"] else None
+        out[r[LABEL]] = (num / r["__n"]) if r["__n"] else None
     return out
 
 
@@ -769,35 +784,27 @@ def ordering_values(df: DataFrame, c: Constraint,
                     pcols: list[str]) -> dict[str, dict]:
     """Per-partition out-of-order measurement for one ``ordering``
     constraint (the declarative form of health.event_order_report):
-    per ``key``, a cumulative event-time max over ``arrival`` order
-    tags each row late or on-time; rows then aggregate into THEIR
+    per ``key``, ``health.lateness_us`` over ``arrival`` order tags
+    each row late or on-time; rows then aggregate into THEIR
     partition's counters.  Value per partition:
     ``{n, late_micro (= n_late·10⁶ div n, exact), max_us}``.  One
     key-hash window pass per constraint — its own scan, like
     distinctness (a per-key sort cannot fuse into the grouped stats
     pass).  Honors ``where`` by filtering before the window."""
     p = c.params
-    df = _scoped_df(df, c)
-    ts_us = F.unix_micros(_target(p).cast("timestamp"))
-    w = (Window.partitionBy("__k").orderBy("__a")
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    tagged = (df.select(partition_label_col(pcols).alias("__label"),
-                        F.col(p["key"]).alias("__k"),
-                        F.col(p["arrival"]).alias("__a"),
-                        ts_us.alias("__ts"))
-              .withColumn("__lat", F.max("__ts").over(w) - F.col("__ts")))
-    rows = (tagged.groupBy("__label")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.sum(F.when(F.col("__lat") > 0, 1).otherwise(0))
-                 .alias("n_late"),
-                 F.max("__lat").alias("max_us")).collect())
+    lat = lateness_us(p["key"], p["arrival"], _target(p)).alias("__lat")
+    tagged = _scoped_df(df, c).select(*pcols, lat)
+    rows = with_label(_by_partition(tagged, pcols)
+                      .agg(F.count(F.lit(1)).alias("__rows"),
+                           count_when(F.col("__lat") > 0).alias("__late"),
+                           F.max("__lat").alias("__max")), pcols).collect()
     out: dict[str, dict] = {}
     for r in rows:
-        out[r["__label"]] = {
-            "n": int(r["n"]),
-            "late_micro": (int(r["n_late"]) * 1_000_000) // int(r["n"])
-            if r["n"] else None,
-            "max_us": int(r["max_us"]) if r["max_us"] is not None else 0}
+        n = int(r["__rows"])
+        out[r[LABEL]] = {
+            "n": n,
+            "late_micro": (int(r["__late"]) * 1_000_000) // n if n else None,
+            "max_us": int(r["__max"]) if r["__max"] is not None else 0}
     return out
 
 

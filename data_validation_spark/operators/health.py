@@ -18,8 +18,14 @@ everywhere.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from data_validation_spark.functions.stats import (
+    TOTAL,
+    at_rank,
+    cumulative_weights,
+)
 
 __all__ = ["partition_count_anomalies", "key_skew_report",
            "coverage_gaps", "completeness_profile",
@@ -893,17 +899,19 @@ def iqr_outlier_report(df: DataFrame, cols: list[str],
     payload columns prune, the table is read once) collapses to
     (column, value) counts — map-side combinable; the shuffle carries
     Σ per-column cardinalities, never rows — and that collapse is
-    consumed once: windows partitioned by column give each value its
-    column's total and running count (cumsum over |distinct| rows) and
-    then the quartiles, and one aggregate on the same partitioning
-    counts the fence breaches.  No persist, no join, no second scan.
+    consumed once: ``stats.cumulative_weights`` partitioned by column
+    gives each value its column's total and running count, a window on
+    the same partitioning spreads the quartiles (``stats.at_rank``) to
+    every value, and one aggregate counts the fence breaches.  No
+    persist, no join, no second scan.
 
     Quartile definition: ``q`` = smallest value whose cumulative count
     reaches ``ceil(q_frac * n)`` (4*cum >= n for q1, >= 3n for q3) —
     the discrete lower-quartile convention, integer-exact on both
     engines.  NULLs are excluded from quartiles and counted in
-    ``n_null``.  Columns must be integral (scale currency to cents
-    first — same contract as price_histogram / benford).
+    ``n_null``; a column with no non-NULL value yields no row.  Columns
+    must be integral (scale currency to cents first — same contract as
+    price_histogram / benford).
     """
     if not cols:
         raise ValueError("cols must be non-empty")
@@ -913,26 +921,15 @@ def iqr_outlier_report(df: DataFrame, cols: list[str],
     pairs = df.select(F.explode(F.create_map(*kv)).alias("column", "v"))
     counts = (pairs.groupBy("column", "v")
               .agg(F.count(F.lit(1)).alias("c")))
-
-    # NULL values sort first and add nothing to n or the running count
-    c_nn = F.when(F.col("v").isNotNull(), F.col("c"))
     wcol = Window.partitionBy("column")
-    wcum = wcol.orderBy("v").rowsBetween(Window.unboundedPreceding,
-                                         Window.currentRow)
-    cum = counts.select("column", "v", "c",
-                        F.sum(c_nn).over(wcol).alias("n"),
-                        F.sum(c_nn).over(wcum).alias("cum"))
-    quart = cum.select(
-        "*",
-        F.min(F.when(F.col("cum") * 4 >= F.col("n"), F.col("v")))
-        .over(wcol).alias("q1"),
-        F.min(F.when(F.col("cum") * 4 >= F.col("n") * 3, F.col("v")))
-        .over(wcol).alias("q3"))
+    quart = cumulative_weights(counts, ["column"], "v", "c").select(
+        "*", F.min(at_rank(1, 4, "v")).over(wcol).alias("q1"),
+        F.min(at_rank(3, 4, "v")).over(wcol).alias("q3"))
 
     kd, kn = F.lit(int(k_den)), F.lit(int(k_num))
     lo_breach = kd * F.col("v") < (kd + kn) * F.col("q1") - kn * F.col("q3")
     hi_breach = kd * F.col("v") > (kd + kn) * F.col("q3") - kn * F.col("q1")
-    out = (quart.groupBy("column", "n", "q1", "q3")
+    out = (quart.groupBy("column", F.col(TOTAL).alias("n"), "q1", "q3")
            .agg(F.sum(F.when(lo_breach, F.col("c")).otherwise(0))
                 .alias("n_below"),
                 F.sum(F.when(hi_breach, F.col("c")).otherwise(0))
@@ -947,6 +944,19 @@ def iqr_outlier_report(df: DataFrame, cols: list[str],
                               6).alias("outlier_ratio"))
 
 
+def lateness_us(key_col: str, arrival_col: str, ts: Column) -> Column:
+    """How many microseconds an event arrives behind its key's
+    event-time high-water mark: the running max of event time over the
+    key's arrival order, minus this event's time (0 for an event that
+    sets a new high, positive when late, NULL for a NULL time).  ONE
+    shuffle by key, in-partition sort by arrival — the sessionize
+    contract: one key's events fit a reducer."""
+    ts_us = F.unix_micros(ts.cast("timestamp"))
+    w = (Window.partitionBy(key_col).orderBy(arrival_col)
+         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    return F.max(ts_us).over(w) - ts_us
+
+
 def event_order_report(df: DataFrame, key_col: str, ts_col: str,
                        arrival_col: str,
                        quantiles: tuple[int, ...] = (50, 95, 99),
@@ -959,21 +969,19 @@ def event_order_report(df: DataFrame, key_col: str, ts_col: str,
     stateful operator's state window.)
 
     Per key, arrival order (``arrival_col`` — an ingestion sequence,
-    file offset, or kafka offset) drives a cumulative event-time max
-    (ONE shuffle by key, in-partition sort by arrival — the sessionize
-    contract: one key's events fit a reducer); an event whose ts sits
-    BELOW the running max is late by the difference.  Lateness
-    buckets to ``resolution_us`` via CEILING division (a watermark of
-    ``p99_ms`` then really covers the µs values inside the bucket)
-    and collapses to (bucket, count) — the quantiles are ORDER
-    STATISTICS over that collapse (iqr_outlier_report's convention:
-    smallest bucket whose cumulative count reaches ⌈q·n/100⌉), never
-    a global sort, never a sketch.  On-time rows keep a NULL bucket
-    in the SAME collapse, and the totals ride the SAME ordered-window
-    pass as the cumulative sum (frame-to-end windows on an identical
-    ordering share one Exchange + Sort), so the collapse is consumed
-    exactly once — no persist, no second scan of the raw table (the
-    r4 two-branch form persisted the collapse and never released it).
+    file offset, or kafka offset) tags each event with its
+    ``lateness_us`` (the tag ``ordering`` constraints use too).
+    Lateness buckets to ``resolution_us`` via CEILING division (a
+    watermark of ``p99_ms`` then really covers the µs values inside
+    the bucket) and collapses to (bucket, count) — the quantiles are
+    ORDER STATISTICS over that collapse (``stats.cumulative_weights``
+    and ``stats.at_rank``: smallest bucket whose cumulative count
+    reaches ⌈q·n_late/100⌉), never a global sort, never a sketch.
+    On-time rows keep a NULL bucket in the SAME collapse, which the
+    order statistic ignores; ``n_events`` and ``max_lateness_us`` are
+    plain aggregates of the final one-row ``agg``, so the collapse is
+    consumed exactly once — no persist, no second scan of the raw
+    table.
 
     One summary row, all-integer except the single rounded ratio:
     ``n_events, n_late, late_ratio, max_lateness_us,
@@ -981,52 +989,27 @@ def event_order_report(df: DataFrame, key_col: str, ts_col: str,
     requested quantile's bucket; 0 when nothing is late — an in-order
     feed needs no watermark slack).  NULL quantiles when n_late = 0."""
     res = int(resolution_us)
-    ts_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    w = (Window.partitionBy(key_col).orderBy(arrival_col)
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    tagged = (df.select(F.col(key_col), F.col(arrival_col),
-                        ts_us.alias("__ts"))
-              .withColumn("__hwm", F.max("__ts").over(w))
-              .select((F.col("__hwm") - F.col("__ts")).alias("__lat")))
+    lat = lateness_us(key_col, arrival_col, F.col(ts_col)).alias("__lat")
     bucket = F.when(F.col("__lat") > 0,
                     F.expr(f"(__lat + {res - 1}) div {res}"))
-    counts = (tagged.select(bucket.alias("b"), F.col("__lat"))
+    counts = (df.select(lat).select(bucket.alias("b"), F.col("__lat"))
               .groupBy("b")
               .agg(F.count(F.lit(1)).alias("c"),
                    F.max(F.when(F.col("b").isNotNull(), F.col("__lat")))
                    .alias("mx")))
-    # one ordered-window pass over the bucket-cardinality collapse
-    # computes totals AND the late-only cumulative together (the NULL
-    # on-time bucket sorts first and is excluded from the cumulative
-    # by the when(), so its position is harmless)
-    w_all = Window.orderBy("b").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing)
-    wcum = Window.orderBy("b").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow)
-    late_c = F.when(F.col("b").isNotNull(), F.col("c"))
-    stats = (counts
-             .withColumn("n_events", F.sum("c").over(w_all))
-             .withColumn("n_late",
-                         F.coalesce(F.sum(late_c).over(w_all), F.lit(0)))
-             .withColumn("max_lateness_us", F.max("mx").over(w_all))
-             .withColumn("cum", F.sum(late_c).over(wcum)))
     qs = sorted(set(int(q) for q in quantiles))
-    qcols = [F.min(F.when(F.col("b").isNotNull()
-                          & (F.col("cum") * 100 >= F.col("n_late") * q),
-                          F.expr(f"(b * {res}) div 1000")))
-             .alias(f"p{q}_lateness_ms") for q in qs]
-    out = stats.agg(
-        F.first("n_events").alias("n_events"),
-        F.first("n_late").alias("n_late"),
-        F.max("max_lateness_us").alias("max_lateness_us"),
-        *qcols)
+    out = cumulative_weights(counts, [], "b", "c").agg(
+        F.sum("c").alias("n_events"),
+        F.coalesce(F.max(TOTAL), F.lit(0)).alias("n_late"),
+        F.coalesce(F.max("mx"), F.lit(0)).alias("max_lateness_us"),
+        *[F.min(at_rank(q, 100, F.expr(f"(b * {res}) div 1000")))
+          .alias(f"p{q}_lateness_ms") for q in qs])
     return out.select(
-        "n_events",
-        F.coalesce("n_late", F.lit(0)).alias("n_late"),
-        F.round(F.coalesce(F.col("n_late"), F.lit(0)).cast("double")
+        "n_events", "n_late",
+        F.round(F.col("n_late").cast("double")
                 / F.col("n_events").cast("double"), 6)
         .alias("late_ratio"),
-        F.coalesce("max_lateness_us", F.lit(0)).alias("max_lateness_us"),
+        "max_lateness_us",
         *[f"p{q}_lateness_ms" for q in qs],
         F.coalesce(F.col(f"p{qs[-1]}_lateness_ms"), F.lit(0))
         .alias("suggested_watermark_ms"))

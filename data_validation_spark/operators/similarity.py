@@ -550,8 +550,9 @@ def embedding_near_duplicates(df: DataFrame, dim: int,
     Each split round costs one pass over (id, vec) plus a narrow
     (table, bucket) count shuffle; rounds stop early when nothing is
     oversized.  Verification is an exact pairwise-cosine numpy kernel
-    per (table, bucket) group; cross-table duplicate pairs are removed
-    by the final ``distinct``.
+    per (table, bucket) group; a pair verified in several tables is one
+    row, keeping its largest cosine (kernels over buckets of different
+    sizes can differ in the last bits, so ``distinct`` kept both).
     """
     import math
     if n_planes is None:
@@ -612,4 +613,4 @@ def embedding_near_duplicates(df: DataFrame, dim: int,
 
     return (cand.groupBy("table", "bucket")
             .applyInPandas(pairwise, schema="id_a long, id_b long, cosine double")
-            .distinct())
+            .groupBy("id_a", "id_b").agg(F.max("cosine").alias("cosine")))

@@ -99,3 +99,52 @@ def test_incremental_rerun_skips_null_partition(spark, ldf):
     assert first.changed_partitions == [f"s={NULL}", "s=a"]
     again = validate_incremental(spark, ldf, suite, first.checksums)
     assert again.changed_partitions == []
+
+
+def test_values_holding_slash_equals_or_percent_keep_their_own_label(spark):
+    """``/``, ``=`` and ``%`` inside a value are escaped (``%`` first),
+    as in Spark's partition directory names, so rows of different
+    partitions never share one label."""
+    df = spark.createDataFrame(
+        [(1, "x", "y/b=z", 1.0), (2, "x/b=y", "z", 2.0),
+         (3, "x%2Fb%3Dy", "z", 3.0)],
+        "id int, a string, b string, x double")
+    suite = _suite(["a", "b"])
+    suite.constraints[2] = Constraint("rows", "row_count", {"max": 1})
+    res = run_validation(spark, df, suite)
+    got = sorted((v["partition"], v["constraint"], v["n_violations"],
+                  v["passed"]) for v in res.verdicts)
+    assert sorted({g[0] for g in got}) == sorted(
+        ["a=x/b=y%2Fb%3Dz", "a=x%2Fb%3Dy/b=z", "a=x%252Fb%253Dy/b=z"])
+    assert len(got) == 9 and all(g[3] for g in got)
+    run = evaluate_constraints(df, suite)
+    assert sorted((r["partition"], r["constraint"], r["n_violations"],
+                   r["passed"]) for r in run.verdicts.collect()) == got
+
+
+def test_uniqueness_counts_label_groups_not_rows(spark, monkeypatch):
+    """The counts-only uniqueness plan labels each partition group after
+    aggregating: no string concat runs per input row."""
+    from pyspark.sql import functions as F
+
+    from data_validation_spark.operators.constraints import (
+        uniqueness_violation_counts)
+    df = spark.range(300).select(
+        (F.col("id") % 250).alias("doc_id"),
+        F.when(F.col("id") % 2 == 0, "a").otherwise("b").alias("source"),
+        (F.col("id") % 3).alias("bucket"))
+    plans, frame_type = [], type(df)
+    collect = frame_type.collect
+
+    def spy(self):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return collect(self)
+    monkeypatch.setattr(frame_type, "collect", spy)
+    counts = uniqueness_violation_counts(df, ["doc_id"],
+                                         ["source", "bucket"])
+    assert sum(counts.values()) == 100
+    assert set(counts) <= {f"source={s}/bucket={b}"
+                           for s in "ab" for b in range(3)}
+    lines = plans[0].splitlines()
+    first_agg = max(i for i, ln in enumerate(lines) if "HashAggregate" in ln)
+    assert not any("concat" in ln for ln in lines[first_agg:])

@@ -272,3 +272,57 @@ def test_fuzzy_blocking_complete_on_dense_soups(spark, strings, d):
                   itertools.combinations(sorted(set(strings)), 2)
                   if lev(a, b) <= d)
     assert got == want
+
+
+def _cumulative(pairs):
+    """Reference cumulative weights: ``[(value, cum)]`` in value order
+    and the total, NULL values excluded."""
+    cum, out = 0, []
+    for v in sorted({v for v, _ in pairs if v is not None}):
+        cum += sum(w for u, w in pairs if u == v)
+        out.append((v, cum))
+    return out, cum
+
+
+def _at_rank(pairs, num, den):
+    """Smallest value whose cumulative weight reaches ⌈num·n/den⌉."""
+    cums, n = _cumulative(pairs)
+    return next((v for v, c in cums if c * den >= n * num), None)
+
+
+_weighted = st.lists(
+    st.tuples(st.one_of(st.integers(-20, 20), st.none()),
+              st.integers(1, 4)), min_size=1, max_size=25)
+
+
+@given(data=_weighted)
+@SET
+def test_order_statistics_share_one_rank_rule(spark, data):
+    """weighted_quantiles' percentiles, iqr_outlier_report's quartiles
+    and global_quantile_buckets' buckets all follow one cumulative-
+    weight rule with NULL values excluded (the unweighted operators see
+    each (value, w) pair as w rows)."""
+    from data_validation_spark.functions.stats import weighted_quantiles
+    from data_validation_spark.operators.bucketize import (
+        global_quantile_buckets)
+    from data_validation_spark.operators.health import iqr_outlier_report
+
+    cums, n = _cumulative(data)
+    qs = (10, 25, 50, 75, 99)
+    wq = weighted_quantiles(spark.createDataFrame(data, "v long, w long"),
+                            "v", "w", quantiles=qs).collect()
+    rows = spark.createDataFrame(
+        [(v,) for v, w in data for _ in range(w)], "v long")
+    iqr = iqr_outlier_report(rows, ["v"]).collect()
+    if not cums:
+        assert wq == [] and iqr == []
+        return
+    assert (wq[0].total_weight, wq[0].n_values) == (n, len(cums))
+    assert [wq[0][f"p{q}"] for q in qs] == \
+        [_at_rank(data, q, 100) for q in qs]
+    assert (iqr[0].q1, iqr[0].q3, iqr[0].n_rows) == \
+        (_at_rank(data, 1, 4), _at_rank(data, 3, 4), n)
+    buckets = {r.v: r.qbucket for r in
+               global_quantile_buckets(rows, "v", n_buckets=4).collect()}
+    assert buckets == {**{v: -(-4 * c // n) for v, c in cums},
+                       **({None: None} if None in buckets else {})}

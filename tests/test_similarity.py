@@ -357,3 +357,15 @@ def test_lsh_bucket_ids_are_plane_sign_bits(emb, vectors):
     assert similarity.lsh_bucket_index(emb, DIM).columns == [
         "vec_id", "bucket", "embedding"]
     assert got == {i: int(expect[i]) for i in range(N)}
+
+
+def test_embedding_near_dups_report_each_pair_once(emb):
+    """A pair that collides in several tables is verified once per
+    table, in buckets of different make-up, so its cosines can differ
+    in the last bits; it is still one row."""
+    doubled = emb.unionAll(emb.withColumn("vec_id", F.col("vec_id") + N))
+    rows = similarity.embedding_near_duplicates(
+        doubled, DIM, threshold=0.999, n_planes=3, n_tables=6).collect()
+    pairs = [(r["id_a"], r["id_b"]) for r in rows]
+    assert len(pairs) == len(set(pairs))
+    assert {(i, i + N) for i in range(N)} <= set(pairs)

@@ -253,3 +253,34 @@ def test_weighted_quantiles_per_group(spark):
     # group b: weight 9 on value 5 -> p50=5; p99 crosses into 100
     assert out["b"].p50 == 5 and out["b"].p99 == 100
     assert out["b"].n_values == 2
+
+
+@pytest.mark.parametrize("grouped", [False, True])
+def test_weighted_quantiles_null_values_count_for_nothing(spark, grouped):
+    """A NULL value adds nothing to total_weight, n_values or the CDF
+    (the rule every exact order statistic shares); a group with no
+    non-NULL value yields no row."""
+    from data_validation_spark.functions.stats import weighted_quantiles
+    rows = [("a", None, 5), ("a", 10, 5), ("a", 20, 10), ("b", None, 3)]
+    df = spark.createDataFrame(rows, "g string, v int, w int")
+    if not grouped:
+        df = df.where("g = 'a'")
+    out = weighted_quantiles(df, "v", "w", quantiles=(10, 25, 50, 75),
+                             group_cols=["g"] if grouped else None
+                             ).collect()
+    assert len(out) == 1
+    r = out[0]
+    assert (r.total_weight, r.n_values) == (15, 2)
+    assert (r.p10, r.p25, r.p50, r.p75) == (10, 10, 20, 20)
+
+
+def test_weighted_quantiles_grouped_plan_has_no_join(spark):
+    """Group totals come out of the running-weight window itself, so
+    the grouped path builds no join (and no second window)."""
+    from data_validation_spark.functions.stats import weighted_quantiles
+    df = spark.range(200).selectExpr("id % 3 AS g", "id % 17 AS v",
+                                     "id % 4 + 1 AS w")
+    out = weighted_quantiles(df, "v", "w", group_cols=["g"])
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan
+    assert plan.count("Window [") == 1

@@ -522,8 +522,9 @@ def main() -> None:
     iqr_ok = n_scan == 1 and n_mem == 0 and n_join == 0
     out.append("\n## IQR outlier screen (exact quartile fences)\n")
     out.append("One melt scan collapses all N columns to (column, "
-               "value) counts; windows over `column` give n, the running "
-               "count and the quartiles, and one aggregate gives the "
+               "value) counts; `stats.cumulative_weights` over `column` "
+               "gives n and the running count in one window, a second "
+               "window the quartiles, and one aggregate gives the "
                "fence breaches and null counts — the collapse is consumed "
                "once, with no persist and no join back onto it.\n")
     out.append(f"- {'✅' if iqr_ok else '❌'} one input scan, no cache "
@@ -613,8 +614,8 @@ def main() -> None:
                f"join={'Join' in tfidf_plan}, "
                f"cache={'InMemoryTableScan' in tfidf_plan}")
 
-    # event-order audit: the (bucket, count) collapse is persisted —
-    # totals and the quantile cumsum both read the cache
+    # event-order audit: the (bucket, count) collapse is consumed once
+    # — no persist, no join, one scan of the raw table
     eo_plan = event_order_report(
         df.select("doc_id", "n_tok",
                   F.timestamp_seconds(F.col("n_tok")).alias("ts")),
@@ -625,12 +626,12 @@ def main() -> None:
              and "Join" not in eo_plan)
     out.append("\n## out-of-order / watermark audit (single-pass collapse)\n")
     out.append("Lateness buckets collapse once (on-time rows keep a "
-               "NULL bucket in the same frame); totals and the "
-               "quantile cumsum ride ONE ordered-window pass over the "
-               "bucket-cardinality collapse (frame-to-end + running "
-               "windows on the same ordering share one Exchange), so "
-               "nothing is persisted (the r4 two-branch form's cache "
-               "was never released) and the raw table is scanned "
+               "NULL bucket in the same frame); the late total and the "
+               "running count come from ONE ordered-window pass over "
+               "the bucket-cardinality collapse "
+               "(`stats.cumulative_weights`), and the event count and "
+               "max lateness are plain aggregates of the final row, so "
+               "nothing is persisted and the raw table is scanned "
                "once.\n")
     out.append(f"- {'✅' if eo_ok else '❌'} one scan, no cache, no "
                f"join: scans={eo_scans}, "
