@@ -1788,9 +1788,9 @@ def q_inclusion(spark, sf_dir):
 
 def q_distinctness(spark, sf_dir):
     """deequ distinctness/uniqueness triage for three orders columns
-    (key / enum / skewed-fk shapes) — exact value-collapse counts,
-    NULLs count as a value, single-division ratios
-    (health.distinctness_profile)."""
+    (key / enum / skewed-fk shapes) — exact value-collapse counts for
+    all three from one grouping-sets scan, NULLs count as a value,
+    single-division ratios (health.distinctness_profile)."""
     from data_validation_spark.operators.health import distinctness_profile
     return distinctness_profile(
         _t(spark, sf_dir, "orders"),
@@ -2062,8 +2062,9 @@ def q_where_scoped(spark, sf_dir):
 
 
 def q_entropy(spark, sf_dir):
-    """Shannon-entropy column triage (deequ hasEntropy): one melt scan
-    for all requested columns, value-collapse counts, entropy as the
+    """Shannon-entropy column triage (deequ hasEntropy): one
+    grouping-sets scan for all requested columns, value-collapse
+    counts with NULL its own symbol, entropy as the
     ln(n) − Σc·ln(c)/n float tail rounded 6 dp — the oracle replays the
     identical op sequence, so a wrong collapse/NULL policy flips the
     hash."""
@@ -2091,7 +2092,8 @@ def q_iqr_outliers(spark, sf_dir):
 def q_mutual_info(spark, sf_dir):
     """Per-cell mutual information lang × source (deequ MI analyzer):
     observed cells only (empty cells contribute 0 by limit), exact
-    integer margins broadcast onto the collapsed cell frame, one float
+    integer margins joined NULL-safe onto the collapsed cell frame (the
+    same frame as independence_cells), one float
     op sequence per cell rounded 6 dp and replayed verbatim in SQL."""
     from data_validation_spark.operators.health import mutual_information
     docs = _t(spark, sf_dir, "documents")
@@ -2773,12 +2775,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # x2; tfidf_terms window-form group-df; event_order single-pass
     # totals; join_explosion disjoint-key summary row); the tail of
     # the window is least-recently-checked r1/r2 anchors, except its
-    # last three: iqr_outliers and ordering_constraint (whose order
-    # statistic and lateness tag are now shared with weighted_quantiles,
+    # last six: distinctness, entropy and mutual_info (whose value
+    # counts now come from the same grouping-sets collapse as
+    # candidate_keys, fd_discovery and independence, all inside the
+    # window), iqr_outliers and ordering_constraint (whose order
+    # statistic and lateness tag are shared with weighted_quantiles,
     # quantile_buckets and event_order) and simhash_near_dups (whose
-    # bucket self-join is now shared with minhash_near_dups), which
-    # took the places of dedup_paragraphs, pii_scrub and vocab_topk
-    # (corpus_shuffle, 51st, was already outside the window).  Everything
+    # bucket self-join is shared with minhash_near_dups).  They took
+    # the places of json_props, contamination and pack_plan, and
+    # before them of dedup_paragraphs, pii_scrub and vocab_topk
+    # (corpus_shuffle was already outside the window).  Everything
     # below position 50 is driver-green from an earlier round or
     # rows-only by design.
     return {
@@ -2826,13 +2832,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pricing_summary": q_pricing_summary,
         "text_stats": q_text_stats,
         "lang_id": q_lang_id,
-        "json_props": q_json_props,
-        "contamination": q_contamination,
-        "pack_plan": q_pack_plan,
+        "distinctness": q_distinctness,
+        "entropy": q_entropy,
+        "mutual_info": q_mutual_info,
         "iqr_outliers": q_iqr_outliers,
         "ordering_constraint": q_ordering_constraint,
         "simhash_near_dups": q_simhash_near_dups,
         # -- below the driver 50-query window ------------------------
+        "json_props": q_json_props,
+        "contamination": q_contamination,
+        "pack_plan": q_pack_plan,
         "corpus_shuffle": q_corpus_shuffle,
         "dedup_paragraphs": q_dedup_paragraphs,
         "pii_scrub": q_pii_scrub,
@@ -2868,7 +2877,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "join_rule": q_join_rule,
         "value_shapes": q_value_shapes,
         "inclusion": q_inclusion,
-        "distinctness": q_distinctness,
         "session_paths": q_session_paths,
         "benford": q_benford,
         "trend": q_trend,
@@ -2876,9 +2884,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dq_constraint_kinds": q_dq_constraint_kinds,
         "metric_constraints": q_metric_constraints,
         "where_scoped": q_where_scoped,
-        "entropy": q_entropy,
         "bigram_pmi": q_bigram_pmi,
-        "mutual_info": q_mutual_info,
         "emd_by_source": q_emd_by_source,
         "ann_index_query": q_ann_index_query,
         "ann_index_increment": q_ann_index_increment,

@@ -18,6 +18,8 @@ everywhere.
 
 from __future__ import annotations
 
+from itertools import combinations
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -355,12 +357,124 @@ def rolling_count_anomalies(df: DataFrame, group_cols: list[str],
                                lhs > rhs)))
 
 
+def _set_counts(df: DataFrame, sets: list[list[str]]) -> DataFrame:
+    """Value-group counts for several column sets in ONE scan: a single
+    ``GROUPING SETS`` collapse (map-side combined — the shuffle carries
+    each set's distinct-combination cardinality, never rows) returning
+    ``(member columns…, __set, __cnt, __nul)``, one row per set per
+    distinct combination.
+
+    ``__set`` is the set id: the array of its member names, read from
+    the per-column bits of ``grouping_id``, so a data NULL in a member
+    is never mistaken for a column the set leaves out.  Values group
+    RAW — NULL is its own value, and there is no sentinel or string
+    cast that could merge it with a real value.  ``__nul`` flags the
+    groups whose combination has a NULL member.  Repeated sets and
+    repeated members are dropped (each would count every row twice)."""
+    sets = list(dict.fromkeys(tuple(dict.fromkeys(s)) for s in sets))
+    cols = list(dict.fromkeys(c for s in sets for c in s))
+    member = {c: F.grouping(c) == 0 for c in cols}
+    nul = F.lit(False)
+    for c in cols:
+        nul = nul | (F.col(c).isNull() & member[c])
+    return df.groupingSets([list(s) for s in sets], *cols).agg(
+        F.array_compact(F.array(*[F.when(member[c], F.lit(c))
+                                  for c in cols])).alias("__set"),
+        F.count(F.lit(1)).alias("__cnt"), nul.alias("__nul"))
+
+
+def _set_stats(df: DataFrame, sets: list[list[str]]) -> DataFrame:
+    """The one summary of ``_set_counts`` per column set: ``n_rows`` =
+    the sum of its counts (every set partitions ALL rows, so this IS
+    the row count — no count join), ``n_distinct``, ``n_unique`` (combinations seen
+    exactly once), ``__clogc`` = Σ c·ln c (entropy's only float work:
+    one ln + multiply per distinct value) and ``n_null_rows`` (rows
+    with a NULL member).  Aggregates a caller does not select are
+    pruned by the optimizer."""
+    c = F.col("__cnt")
+    return _set_counts(df, sets).groupBy("__set").agg(
+        F.sum(c).alias("n_rows"),
+        F.count(F.lit(1)).alias("n_distinct"),
+        F.count(F.when(c == 1, 1)).alias("n_unique"),
+        F.sum(c.cast("double") * F.log(c.cast("double"))).alias("__clogc"),
+        F.sum(F.when(F.col("__nul"), c).otherwise(0)).alias("n_null_rows"))
+
+
+def _single_stats(df: DataFrame, cols: list[str]) -> DataFrame:
+    """``_set_stats`` over one singleton set per column, labelled by
+    ``column``."""
+    if not cols:
+        raise ValueError("cols must be non-empty")
+    return _set_stats(df, [[c] for c in cols]).withColumn(
+        "column", F.col("__set")[0])
+
+
+def _check_set_cols(df: DataFrame, cols: list[str], who: str,
+                    least: int, n_sets: int) -> None:
+    """Shared guards of the grouping-sets discoverers: ``least`` ≤ k ≤
+    12 columns (the one shuffle replicates each row per set, so the
+    pair sets grow it quadratically), all present, all atomic."""
+    k = len(cols)
+    if k < least:
+        raise ValueError(f"{who}: need >= {least} column(s)")
+    if k > 12:
+        raise ValueError(
+            f"{who}: {k} columns = {n_sets} grouping sets (the one "
+            "shuffle replicates rows per set) — pre-select candidate "
+            "columns")
+    schema = {f.name: f.dataType for f in df.schema.fields}
+    missing = [c for c in cols if c not in schema]
+    if missing:
+        raise ValueError(f"{who}: missing columns {missing}")
+    bad = [c for c in cols
+           if schema[c].typeName() in ("array", "map", "struct",
+                                       "binary", "variant")]
+    if bad:
+        raise ValueError(
+            f"{who}: non-atomic columns {bad} — string serialization is "
+            "not injective for them; project a derived atomic column "
+            "instead")
+
+
+def _pair_cells(df: DataFrame, col_a: str, col_b: str,
+                every_cell: bool) -> DataFrame:
+    """The contingency table of two columns — ``(col_a, col_b, n_ij,
+    n_i, n_j, n)`` with exact integer margins — over the observed cells
+    only, or with ``every_cell`` over the full margin cross product
+    (never-seen cells carry ``n_ij = 0``).
+
+    One ``_set_counts`` pair collapse; the margins are sums over the
+    collapsed cells, and every join on a value is NULL-safe, so a NULL
+    row or column of the table keeps its cells."""
+    counts = _set_counts(df, [[col_a, col_b]]).select(
+        F.col(col_a).alias("a"), F.col(col_b).alias("b"),
+        F.col("__cnt").alias("n_ij"))
+    ma = counts.groupBy(F.col("a").alias("__a")).agg(
+        F.sum("n_ij").alias("n_i"))
+    mb = counts.groupBy(F.col("b").alias("__b")).agg(
+        F.sum("n_ij").alias("n_j"))
+    tot = counts.agg(F.sum("n_ij").alias("n"))
+    on_a = F.col("a").eqNullSafe(F.col("__a"))
+    on_b = F.col("b").eqNullSafe(F.col("__b"))
+    if every_cell:
+        cells = (ma.crossJoin(F.broadcast(mb))
+                 .join(counts, on_a & on_b, "left")
+                 .withColumn("n_ij", F.coalesce("n_ij", F.lit(0))))
+    else:
+        cells = (counts.join(F.broadcast(ma), on_a)
+                 .join(F.broadcast(mb), on_b))
+    return cells.crossJoin(F.broadcast(tot)).select(
+        F.col("__a").alias(col_a), F.col("__b").alias(col_b),
+        "n_ij", "n_i", "n_j", "n")
+
+
 def independence_cells(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
     """Chi-squared independence between two categorical columns, per
     CELL: for every (a, b) pair in the observed-margin cross product —
     including never-seen pairs, which a naive groupBy silently drops
     though they contribute (0−E)²/E = E — the observed count, exact
-    integer margins, and the cell's chi² contribution.
+    integer margins, and the cell's chi² contribution.  NULL is a value
+    of either column, so Σ``n_ij`` = ``n`` always.
 
     The term is the algebraically-exact rational
     ``(n·n_ij − n_i·n_j)² / (n·n_i·n_j)``: numerator and denominator
@@ -371,29 +485,19 @@ def independence_cells(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
     ``functions.drift`` for the p-value; the statistic itself stays a
     pure function of the data.
 
-    One count shuffle over the table; margins and the cross spine are
-    |A| + |B| + |A|×|B| rows — broadcast-sized for real categorical
-    cardinalities (guard upstream with the S4 frequency guard if a
-    "categorical" column is secretly an id).
+    One count shuffle over the table (``_pair_cells``); margins and
+    the cross spine are |A| + |B| + |A|×|B| rows — broadcast-sized for
+    real categorical cardinalities (guard upstream with the S4
+    frequency guard if a "categorical" column is secretly an id).
     """
     dec = "decimal(38,0)"
-    counts = (df.groupBy(F.col(col_a).alias("a"), F.col(col_b).alias("b"))
-              .agg(F.count(F.lit(1)).alias("n_ij")))
-    ma = counts.groupBy("a").agg(F.sum("n_ij").alias("n_i"))
-    mb = counts.groupBy("b").agg(F.sum("n_ij").alias("n_j"))
-    tot = counts.agg(F.sum("n_ij").alias("n"))
-    spine = (ma.crossJoin(F.broadcast(mb)).crossJoin(F.broadcast(tot))
-             .join(counts, ["a", "b"], "left")
-             .withColumn("n_ij", F.coalesce("n_ij", F.lit(0))))
     num = (F.col("n").cast(dec) * F.col("n_ij").cast(dec)
            - F.col("n_i").cast(dec) * F.col("n_j").cast(dec))
     den = (F.col("n").cast(dec) * F.col("n_i").cast(dec)
            * F.col("n_j").cast(dec))
-    return spine.select(
-        F.col("a").alias(col_a), F.col("b").alias(col_b),
-        "n_ij", "n_i", "n_j", "n",
-        F.round((num * num).cast("double") / den.cast("double"), 6)
-        .alias("chi2_term"))
+    return _pair_cells(df, col_a, col_b, every_cell=True).withColumn(
+        "chi2_term",
+        F.round((num * num).cast("double") / den.cast("double"), 6))
 
 
 def trend_report(df: DataFrame, group_cols: list[str],
@@ -490,30 +594,13 @@ def distinctness_profile(df: DataFrame, cols: list[str]) -> DataFrame:
     uniqueness = once/rows) — the "is this column a key / an enum / a
     mess" triage.
 
-    Per column: one map-side-combined value-collapse shuffle (reduce
-    cardinality = that column's distinct count) followed by a scalar
-    aggregate of the collapsed counts — N requested columns cost N
-    collapsed shuffles, never N table scans of anything wider than the
-    single column (column pruning keeps each pass narrow).  NULLs
+    ONE scan for all N columns: every column is a singleton set of the
+    shared ``_set_counts`` grouping-sets collapse (reduce cardinality =
+    Σ per-column distinct counts), summarised by ``_set_stats``.  NULLs
     count as a value (a NULL-riddled "key" must not look unique);
     ratios are single divisions of exact integers.
     """
-    if not cols:
-        raise ValueError("cols must be non-empty")
-    parts = []
-    for c in cols:
-        vc = (df.select(F.col(c).alias("__v"))
-              .groupBy("__v").agg(F.count(F.lit(1)).alias("__n")))
-        parts.append(vc.agg(
-            F.lit(c).alias("column"),
-            F.sum("__n").alias("n_rows"),
-            F.count(F.lit(1)).alias("n_distinct"),
-            F.sum(F.when(F.col("__n") == 1, 1).otherwise(0))
-            .alias("n_unique")))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.select(
+    return _single_stats(df, cols).select(
         "column", "n_rows", "n_distinct", "n_unique",
         F.round(F.col("n_distinct") / F.col("n_rows"), 6)
         .alias("distinctness"),
@@ -587,37 +674,19 @@ def entropy_report(df: DataFrame, cols: list[str]) -> DataFrame:
     "how informative is this column" triage that catches a feed whose
     `source` collapsed to one value while counts still look healthy.
 
-    ONE melt scan for all N columns: each row explodes to (column,
-    value) pairs — at table scale, exploding a handful of narrow
-    columns beats N separate scans because the payload columns are
-    pruned and the table is read once — then a value-collapse groupBy
-    (map-side combinable; shuffle carries Σ per-column cardinalities,
-    never rows) and a per-column agg of the collapsed counts.
-
-    NULL counts as its own symbol (a 50%-NULL column IS less certain).
-    Arithmetic: counts stay exact integers; entropy uses the
-    ``ln(n) − Σ c·ln(c) / n`` form so the only float work is one
+    ONE scan for all N columns: the same singleton-set collapse and
+    summary as ``distinctness_profile`` (``_set_stats``), so both
+    report the same ``n_rows`` / ``n_distinct``.  NULL counts as its
+    own symbol (a 50%-NULL column IS less certain), distinct from every
+    real value.  Arithmetic: counts stay exact integers; entropy uses
+    the ``ln(n) − Σ c·ln(c) / n`` form so the only float work is one
     ln + multiply per DISTINCT value and a final divide — rounded to
     6 dp, replayable on any engine.  ``entropy_norm`` divides by
     ``ln(n_distinct)`` (0..1; NULL for constant columns, never a
     guess)."""
-    if not cols:
-        raise ValueError("cols must be non-empty")
-    kv = []
-    for c in cols:
-        kv += [F.lit(c), F.coalesce(F.col(c).cast("string"),
-                                    F.lit("__null__"))]
-    pairs = df.select(F.explode(F.create_map(*kv)).alias("column", "value"))
-    counts = (pairs.groupBy("column", "value")
-              .agg(F.count(F.lit(1)).alias("c")))
-    agg = counts.groupBy("column").agg(
-        F.sum("c").alias("n_rows"),
-        F.count(F.lit(1)).alias("n_distinct"),
-        F.sum(F.col("c").cast("double")
-              * F.log(F.col("c").cast("double"))).alias("__clogc"))
     ent = (F.log(F.col("n_rows").cast("double"))
            - F.col("__clogc") / F.col("n_rows").cast("double"))
-    return agg.select(
+    return _single_stats(df, cols).select(
         "column", "n_rows", "n_distinct",
         F.round(ent, 6).alias("entropy_nats"),
         F.round(F.when(F.col("n_distinct") > 1,
@@ -633,29 +702,19 @@ def mutual_information(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
     as independence_cells).
 
     Only OBSERVED cells appear (an empty cell's ``p·ln(·)`` term is 0 by
-    limit, so the spine needs no cross product).  One count shuffle over
-    the table; margins broadcast back onto the collapsed cell frame.
-    NULL counts as a value in both columns.  Each cell's term is
+    limit, so the spine needs no cross product).  The cells and margins
+    are ``independence_cells``' (``_pair_cells``): one count shuffle
+    over the table, margins broadcast back onto the collapsed cells.
+    NULL counts as a value in both columns and comes back as NULL in
+    the key columns.  Each cell's term is
     ``(c_ij/n) · ln(n·c_ij / (c_i·c_j))``: exact integer counts in, the
     ln ratio built from ONE integer-exact double cast per factor,
     rounded to 6 dp — the identical op sequence on every engine."""
-    a = F.coalesce(F.col(col_a).cast("string"), F.lit("__null__"))
-    b = F.coalesce(F.col(col_b).cast("string"), F.lit("__null__"))
-    counts = (df.select(a.alias("a"), b.alias("b"))
-              .groupBy("a", "b").agg(F.count(F.lit(1)).alias("n_ij")))
-    ma = counts.groupBy("a").agg(F.sum("n_ij").alias("n_i"))
-    mb = counts.groupBy("b").agg(F.sum("n_ij").alias("n_j"))
-    tot = counts.agg(F.sum("n_ij").alias("n"))
-    cells = (counts.join(F.broadcast(ma), "a")
-             .join(F.broadcast(mb), "b")
-             .crossJoin(F.broadcast(tot)))
     d = lambda c: F.col(c).cast("double")  # noqa: E731
     term = ((d("n_ij") / d("n"))
             * F.log((d("n") * d("n_ij")) / (d("n_i") * d("n_j"))))
-    return cells.select(
-        F.col("a").alias(col_a), F.col("b").alias(col_b),
-        "n_ij", "n_i", "n_j", "n",
-        F.round(term, 6).alias("mi_term"))
+    return _pair_cells(df, col_a, col_b, every_cell=False).withColumn(
+        "mi_term", F.round(term, 6))
 
 
 def value_shapes(df: DataFrame, col: str, top_n: int = 5) -> DataFrame:
@@ -1144,12 +1203,13 @@ def fd_discovery_report(df: DataFrame, cols: list[str],
     cleaner needs to see.
 
     Scale shape — ONE scan, everything after it pair-cardinality:
-    all C(k,2) unordered pair collapses ride a single
-    ``GROUPING SETS`` aggregation (map-side combined — the shuffle
-    carries distinct value-pair cardinality per set, never rows;
-    ``grouping_id`` disambiguates set membership from data NULLs);
+    all C(k,2) unordered pair collapses ride the one shared
+    ``_set_counts`` grouping-sets collapse (map-side combined — the
+    shuffle carries distinct value-pair cardinality per set, never
+    rows; its set id tells set membership from data NULLs);
     BOTH FD directions then explode from each collapse row in one
-    projection, so the collapse is consumed exactly once (no persist,
+    projection — the set's two members, each the determinant of one
+    leg — so the collapse is consumed exactly once (no persist,
     no re-scan — the tfidf/event-order single-consumption playbook);
     per-determinant distinct-dependent counts are a count of collapse
     rows (each row IS one distinct dependent value — dependent
@@ -1160,81 +1220,45 @@ def fd_discovery_report(df: DataFrame, cols: list[str],
     admitted below) plus a separate is-null flag so NULL never
     collides with the string 'null'.
 
-    Guards: needs ≥2 columns; complex/binary columns are rejected
+    Guards (``_check_set_cols``, shared with ``candidate_key_report``):
+    needs ≥2 present columns; complex/binary columns are rejected
     loudly (string serialization would not be injective); k is capped
     at 12 — the grouping-sets shuffle replicates each row per set, so
     C(k,2) grows the one shuffle quadratically: pre-select candidate
     columns instead of pointing the discoverer at a wide table.
     """
     k = len(cols)
-    if k < 2:
-        raise ValueError("fd_discovery_report: need >= 2 columns")
-    if k > 12:
-        raise ValueError(
-            f"fd_discovery_report: {k} columns = {k*(k-1)//2} grouping "
-            "sets (the one shuffle replicates rows per set) — "
-            "pre-select candidate columns")
-    schema = {f.name: f.dataType for f in df.schema.fields}
-    missing = [c for c in cols if c not in schema]
-    if missing:
-        raise ValueError(f"fd_discovery_report: missing columns "
-                         f"{missing}")
-    bad = [c for c in cols
-           if schema[c].typeName() in ("array", "map", "struct",
-                                       "binary", "variant")]
-    if bad:
-        raise ValueError(
-            f"fd_discovery_report: non-atomic columns {bad} — string "
-            "serialization is not injective for them; project a "
-            "derived atomic column instead")
-
-    sets = [(i, j) for i in range(k) for j in range(i + 1, k)]
-    collapsed = (df.groupingSets([[cols[i], cols[j]] for i, j in sets],
-                                 *cols)
-                 .agg(F.count(F.lit(1)).alias("cnt"),
-                      F.grouping_id().alias("gid")))
-
-    def leg(det_i: int, dep_i: int):
-        d, p = cols[det_i], cols[dep_i]
-        return F.struct(
-            F.lit(d).alias("determinant"), F.lit(p).alias("dependent"),
-            F.col(d).cast("string").alias("det_s"),
-            F.col(d).isNull().alias("det_null"))
-
-    arr = None
-    for i, j in sets:
-        gid = sum(1 << (k - 1 - x) for x in range(k) if x not in (i, j))
-        both = F.array(leg(i, j), leg(j, i))
-        arr = both if arr is None else \
-            F.when(F.col("gid") == gid, both).otherwise(arr)
-        # (the first set is the plain fallback, the deepest link of
-        # the when-chain — every collapse row belongs to exactly one
-        # set, so the fallback never misfires)
-    long = (collapsed.select(F.explode(arr).alias("e"), "cnt")
-            .select("e.*", "cnt"))
+    _check_set_cols(df, cols, "fd_discovery_report", 2, k * (k - 1) // 2)
+    pairs = _set_counts(df, [list(p) for p in combinations(cols, 2)])
+    members = F.filter(
+        F.array(*[F.struct(F.lit(c).alias("determinant"),
+                           F.col(c).cast("string").alias("det_s"),
+                           F.col(c).isNull().alias("det_null"))
+                  for c in cols]),
+        lambda e: F.array_contains("__set", e["determinant"]))
+    # each member is the determinant of one leg, the other the dependent
+    legs = F.transform(members, lambda e: e.withField(
+        "dependent",
+        F.array_except("__set", F.array(e["determinant"]))[0]))
+    long = (pairs.select(F.explode(legs).alias("e"), "__cnt")
+            .select("e.*", "__cnt"))
     per_det = (long.groupBy("determinant", "dependent", "det_s",
                             "det_null")
                .agg(F.count(F.lit(1)).alias("n_dep"),
-                    F.sum("cnt").alias("n_rows")))
+                    F.sum("__cnt").alias("n_rows")))
     viol = F.col("n_dep") > 1
-    out = (per_det.groupBy("determinant", "dependent")
-           .agg(F.count(F.lit(1)).alias("n_det_keys"),
-                F.sum(F.when(viol, 1).otherwise(0))
-                .alias("n_violating_keys"),
-                F.coalesce(F.sum(F.when(viol, F.col("n_rows"))),
-                           F.lit(0)).alias("n_violating_rows")))
-    return out.select(
-        "determinant", "dependent",
-        F.col("n_det_keys").cast("long").alias("n_det_keys"),
-        F.col("n_violating_keys").cast("long")
-        .alias("n_violating_keys"),
-        F.col("n_violating_rows").cast("long")
-        .alias("n_violating_rows"),
-        F.expr("n_violating_keys * CAST(1000000 AS BIGINT) "
-               "div n_det_keys").alias("violation_micro"),
-        (F.expr("n_violating_keys * CAST(1000000 AS BIGINT) "
-                "div n_det_keys")
-         <= F.lit(int(max_violation_micro))).alias("holds"))
+    micro = F.expr("n_violating_keys * CAST(1000000 AS BIGINT) "
+                   "div n_det_keys")
+    return (per_det.groupBy("determinant", "dependent")
+            .agg(F.count(F.lit(1)).alias("n_det_keys"),
+                 F.count(F.when(viol, 1)).alias("n_violating_keys"),
+                 F.sum(F.when(viol, F.col("n_rows")).otherwise(0))
+                 .alias("n_violating_rows"))
+            .select("determinant", "dependent", "n_det_keys",
+                    "n_violating_keys", "n_violating_rows",
+                    micro.alias("violation_micro"),
+                    (micro <= F.lit(int(max_violation_micro)))
+                    .alias("holds")))
 
 
 def candidate_key_report(df: DataFrame, cols: list[str]) -> DataFrame:
@@ -1249,75 +1273,26 @@ def candidate_key_report(df: DataFrame, cols: list[str]) -> DataFrame:
     NULLs, a KEY does not, and a suggester that conflates them
     suggests keys that fail on declaration).
 
-    Scale shape: ONE scan — all k + C(k,2) set collapses ride a single
-    ``GROUPING SETS`` aggregation (map-side combined; the shuffle
-    carries per-set distinct-combination cardinality, never rows), and
-    because every set partitions ALL rows, each set's own
-    ``sum(cnt)`` IS the table row count — no second scan, no count
-    join, no persist.  Everything after the collapse is a set-count
-    projection + a set-cardinality aggregation.  Same guards as the
-    FD discoverer: ≥1 atomic column, k ≤ 12.
+    Scale shape: ONE scan — all k + C(k,2) set collapses ride the one
+    shared ``_set_counts`` grouping-sets collapse, summarised per set
+    by ``_set_stats`` (whose singles are exactly
+    ``distinctness_profile``'s rows); because every set partitions ALL
+    rows, each set's own ``sum(cnt)`` IS the table row count — no
+    second scan, no count join, no persist.  Same guards as the FD
+    discoverer: ≥1 atomic column, k ≤ 12.
     """
     k = len(cols)
-    if k < 1:
-        raise ValueError("candidate_key_report: need >= 1 column")
-    if k > 12:
-        raise ValueError(
-            f"candidate_key_report: {k} columns = "
-            f"{k + k*(k-1)//2} grouping sets (the one shuffle "
-            "replicates rows per set) — pre-select candidate columns")
-    schema = {f.name: f.dataType for f in df.schema.fields}
-    missing = [c for c in cols if c not in schema]
-    if missing:
-        raise ValueError(f"candidate_key_report: missing columns "
-                         f"{missing}")
-    bad = [c for c in cols
-           if schema[c].typeName() in ("array", "map", "struct",
-                                       "binary", "variant")]
-    if bad:
-        raise ValueError(
-            f"candidate_key_report: non-atomic columns {bad} — "
-            "project a derived atomic column instead")
-
-    sets = [[i] for i in range(k)] + \
-        [[i, j] for i in range(k) for j in range(i + 1, k)]
-    collapsed = (df.groupingSets([[cols[i] for i in s] for s in sets],
-                                 *cols)
-                 .agg(F.count(F.lit(1)).alias("cnt"),
-                      F.grouping_id().alias("gid")))
-
-    key_cols = size = has_null = None
-    for s in sets:
-        gid = sum(1 << (k - 1 - x) for x in range(k) if x not in s)
-        label = F.lit(",".join(cols[i] for i in s))
-        sz = F.lit(len(s))
-        nul = F.lit(False)
-        for i in s:
-            nul = nul | F.col(cols[i]).isNull()
-        if key_cols is None:       # last chain link = plain fallback
-            key_cols, size, has_null = label, sz, nul
-        else:
-            m = F.col("gid") == gid
-            key_cols = F.when(m, label).otherwise(key_cols)
-            size = F.when(m, sz).otherwise(size)
-            has_null = F.when(m, nul).otherwise(has_null)
-    per_set = (collapsed.select(key_cols.alias("key_cols"),
-                                size.alias("size"),
-                                has_null.alias("__nul"), "cnt")
-               .groupBy("key_cols", "size")
-               .agg(F.count(F.lit(1)).alias("n_distinct"),
-                    F.sum("cnt").alias("n_rows"),
-                    F.coalesce(F.sum(F.when(F.col("__nul"),
-                                            F.col("cnt"))),
-                               F.lit(0)).alias("n_null_key_rows")))
+    _check_set_cols(df, cols, "candidate_key_report", 1,
+                    k + k * (k - 1) // 2)
+    per_set = _set_stats(df, [[c] for c in cols]
+                         + [list(p) for p in combinations(cols, 2)])
     uniq = F.col("n_distinct") == F.col("n_rows")
     return per_set.select(
-        "key_cols",
-        F.col("size").cast("int").alias("size"),
-        F.col("n_distinct").cast("long").alias("n_distinct"),
-        F.col("n_rows").cast("long").alias("n_rows"),
-        F.col("n_null_key_rows").cast("long").alias("n_null_key_rows"),
+        F.array_join("__set", ",").alias("key_cols"),
+        F.size("__set").alias("size"),
+        "n_distinct", "n_rows",
+        F.col("n_null_rows").alias("n_null_key_rows"),
         F.expr("n_distinct * CAST(1000000 AS BIGINT) div n_rows")
         .alias("uniqueness_micro"),
         uniq.alias("is_unique"),
-        (uniq & (F.col("n_null_key_rows") == 0)).alias("is_key"))
+        (uniq & (F.col("n_null_rows") == 0)).alias("is_key"))

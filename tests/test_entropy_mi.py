@@ -7,6 +7,8 @@ import math
 from pyspark.sql import functions as F
 
 from data_validation_spark.operators.health import (
+    candidate_key_report,
+    distinctness_profile,
     entropy_report,
     mutual_information,
 )
@@ -21,7 +23,7 @@ def test_entropy_textbook_values(spark):
     # u: 2×a, 2×b → ln 2; norm = 1.0
     assert rows["u"]["entropy_nats"] == round(math.log(2), 6)
     assert rows["u"]["entropy_norm"] == 1.0
-    # v: NULL is its own symbol → 2×__null__, 2×x → ln 2 again
+    # v: NULL is its own symbol → 2×NULL, 2×x → ln 2 again
     assert rows["v"]["entropy_nats"] == round(math.log(2), 6)
     assert rows["v"]["n_distinct"] == 2
     # w: constant → entropy 0, normalized NULL (never a guess)
@@ -71,10 +73,42 @@ def test_mutual_information_null_as_value(spark):
         "u string, v string")
     cells = {(c["u"], c["v"]): c for c in
              mutual_information(df, "u", "v").collect()}
-    assert ("a", "__null__") in cells
+    assert ("a", None) in cells
     # deterministic relation again → ln 2 total (± per-cell rounding)
     assert abs(sum(c["mi_term"] for c in cells.values())
                - math.log(2)) < 2e-6
+
+
+def test_entropy_null_is_not_the_string_null(spark):
+    # NULL and the literal '__null__' are two symbols, and every
+    # single-column analyzer agrees on the count
+    df = spark.createDataFrame([(None,), ("__null__",), ("a",)], "u string")
+    ent = entropy_report(df, ["u"]).collect()[0]
+    dist = distinctness_profile(df, ["u"]).collect()[0]
+    key = candidate_key_report(df, ["u"]).collect()[0]
+    assert ent["n_distinct"] == dist["n_distinct"] == key["n_distinct"] == 3
+    assert ent["entropy_nats"] == round(math.log(3), 6)
+
+
+def test_mutual_information_null_is_not_the_string_null(spark):
+    # u = NULL and u = '__null__' are two symbols, each determining v
+    df = spark.createDataFrame([(None, "p"), ("__null__", "q")],
+                               "u string, v string")
+    cells = {c["u"]: c for c in mutual_information(df, "u", "v").collect()}
+    assert set(cells) == {None, "__null__"}
+    assert all(c["n_i"] == 1 and c["n_ij"] == 1 for c in cells.values())
+    assert abs(sum(c["mi_term"] for c in cells.values())
+               - math.log(2)) < 2e-6
+
+
+def test_mutual_information_of_a_column_with_itself_is_its_entropy(spark):
+    # I(u; u) = H(u), NULL included as a symbol; the repeated column
+    # must not count any row twice
+    df = spark.createDataFrame([("a",), ("a",), (None,), ("b",)], "u string")
+    cells = mutual_information(df, "u", "u").collect()
+    assert sum(c["n_ij"] for c in cells) == 4
+    h = entropy_report(df, ["u"]).collect()[0]["entropy_nats"]
+    assert abs(sum(c["mi_term"] for c in cells) - h) < 3e-6
 
 
 def test_entropy_one_scan_many_columns(spark):

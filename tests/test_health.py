@@ -226,6 +226,22 @@ def test_independence_cells(spark):
     assert abs(stat - want) < 1e-9
 
 
+def test_independence_cells_null_is_a_value(spark):
+    """NULL is a value of the row column: its observed cells keep their
+    counts, so the cells add up to n."""
+    from data_validation_spark.operators.health import independence_cells
+    rows = ([("x", 1)] * 3 + [(None, 1)] * 2 + [(None, 2)]
+            + [("y", 2)] * 4)
+    df = spark.createDataFrame(rows, "a string, b long")
+    out = {(r.a, r.b): r for r in independence_cells(df, "a", "b").collect()}
+    assert out[(None, 1)].n_ij == 2 and out[(None, 2)].n_ij == 1
+    assert sum(r.n_ij for r in out.values()) == 10
+    for r in out.values():
+        assert r.n == 10
+        want = (r.n * r.n_ij - r.n_i * r.n_j) ** 2 / (r.n * r.n_i * r.n_j)
+        assert r.chi2_term == round(want, 6)
+
+
 def test_trend_report_exact_slopes(spark):
     import datetime as dt
     from data_validation_spark.operators.health import trend_report
@@ -313,6 +329,20 @@ def test_distinctness_profile(spark):
     import pytest as _pt
     with _pt.raises(ValueError):
         distinctness_profile(df, [])
+
+
+def test_distinctness_single_scan_no_cache(spark, tmp_path):
+    """All N columns ride ONE grouping-sets scan — not one per column."""
+    from data_validation_spark.operators.health import distinctness_profile
+    p = str(tmp_path / "t")
+    spark.range(100).select(
+        F.col("id").alias("a"), (F.col("id") % 10).alias("b"),
+        (F.col("id") % 5).alias("c")).write.parquet(p)
+    df = spark.read.parquet(p)
+    plan = distinctness_profile(df, ["a", "b", "c"])._jdf \
+        .queryExecution().executedPlan().toString()
+    assert plan.count("Scan parquet") == 1
+    assert "InMemoryTableScan" not in plan
 
 
 def test_value_shapes(spark):

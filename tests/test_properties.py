@@ -326,3 +326,45 @@ def test_order_statistics_share_one_rank_rule(spark, data):
                global_quantile_buckets(rows, "v", n_buckets=4).collect()}
     assert buckets == {**{v: -(-4 * c // n) for v, c in cums},
                        **({None: None} if None in buckets else {})}
+
+
+_symbols = st.lists(
+    st.tuples(st.one_of(st.none(), st.sampled_from(["__null__", "a", "b"])),
+              st.one_of(st.none(), st.integers(0, 2))),
+    min_size=1, max_size=25)
+
+
+@given(data=_symbols)
+@SET
+def test_column_profilers_share_one_value_rule(spark, data):
+    """distinctness_profile, entropy_report, candidate_key_report,
+    mutual_information and independence_cells count the same value
+    groups: NULL is one value, distinct from the string '__null__'."""
+    import math
+    from collections import Counter
+
+    from data_validation_spark.operators.health import (
+        candidate_key_report, distinctness_profile, entropy_report,
+        independence_cells, mutual_information)
+
+    df = spark.createDataFrame(data, "s string, i long")
+    cols = ["s", "i"]
+    dist = {r.column: (r.n_rows, r.n_distinct)
+            for r in distinctness_profile(df, cols).collect()}
+    ent = {r.column: r for r in entropy_report(df, cols).collect()}
+    keys = {r.key_cols: (r.n_rows, r.n_distinct)
+            for r in candidate_key_report(df, cols).collect() if r.size == 1}
+    assert dist == keys == {c: (ent[c].n_rows, ent[c].n_distinct)
+                            for c in cols}
+    n = len(data)
+    for j, c in enumerate(cols):
+        counts = Counter(row[j] for row in data).values()
+        assert dist[c] == (n, len(counts))
+        h = math.log(n) - math.fsum(k * math.log(k) for k in counts) / n
+        assert abs(ent[c].entropy_nats - h) < 1e-6
+    mi = {(r.s, r.i): r.n_ij
+          for r in mutual_information(df, "s", "i").collect()}
+    ind = {(r.s, r.i): r.n_ij
+           for r in independence_cells(df, "s", "i").collect()}
+    assert sum(mi.values()) == sum(ind.values()) == n
+    assert {cell: c for cell, c in ind.items() if c} == mi == Counter(data)
